@@ -1,119 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: n warm iterations (default 3) of the headline
+/** Driver-run benchmark: n warm iterations (default 5) of the headline
   * analytical set plus one representative per extension family
-  * (text/dedup/ANN/streaming-twin), printed as ONE JSON line.
+  * ([[BenchSets]]), printed as ONE JSON line.
   *
   * Reported value = MIN over iterations of the per-iteration headline
-  * total — single-iteration totals on this shared sandbox carry ±20%
-  * noise (the r3 "regression" was exactly that), and min-of-n is the
-  * standard way to strip scheduler/IO interference from a CPU-bound
-  * measurement. Per-iteration totals and per-query medians ride along
-  * so round-over-round drift stays auditable.
+  * total: single totals on a shared box carry ±20 % noise, and min-of-n
+  * strips scheduler and IO interference from a CPU-bound measurement.
+  * Per-iteration totals and per-query mins ride along.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ITERS,
+  * SPARK_GRAFT_BENCH_ONLY (comma-separated registered names to time
+  * instead of the full sets), SPARK_GRAFT_BENCH_DETAIL (side-file path).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
     require(iters >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bench tail was ~90% `WindowExec: No Partition Defined`
-    // warnings from DOCUMENTED calendar/decile/constant-grain windows
-    // (every one allowlisted with a named bound in PlanAuditSpec,
-    // which is the real unbounded-window ratchet — it fails the build
-    // on any NEW unpartitioned window that lacks a justified bound).
-    // Silencing the logger here, in the bench main only, keeps the
-    // tail readable so a genuine scheduler/broadcast warning cannot
-    // hide in the noise; nothing else changes log levels.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    GraftConf.tune(spark)
-    // Warm up codegen/JIT + file listing so the first measured query
-    // isn't charged JVM startup cost.
+    val spark = GraftSession.session()
+    // warm codegen/JIT and file listing so the first measured query
+    // isn't charged JVM startup
     SparkEntry.queries("q1a_yoy_growth")(spark, sfDir).count()
 
-    // FULL-REGISTRY mode (SPARK_GRAFT_BENCH_FULL=1): time every
-    // registered query once, in name order, and exit. Not part of the
-    // driver contract — a measurement surface for the SURVEY §10
-    // decision on shared-scan materialization (whether staging
-    // lineitem⋈orders once would pay across the whole registry). One
-    // pass, no min-of-n: this answers "what does the registry cost",
-    // not "what is the per-query floor".
-    if (sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")) {
-      val names = SparkEntry.queries.keys.toSeq.sorted
-      val timed = names.map { n =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(n)(spark, sfDir).count(); true }
-          catch { case t: Throwable =>
-            System.err.println(s"BENCH FAILURE $n: ${t.getMessage}"); false
-          }
-        (n, (System.nanoTime() - t0) / 1e9, ok)
-      }
-      val total = timed.collect { case (_, t, true) => t }.sum
-      def q(n: String, t: Double) = "\"" + n + "\":" + t
-      println(
-        s"""{"metric":"full_registry","value":$total,"unit":"sec",""" +
-          s""""n_queries":${names.size},""" +
-          s""""failed":[${timed.collect { case (n, _, false) => "\"" + n + "\"" }
-            .mkString(",")}],""" +
-          s""""queries":{${timed.map(x => q(x._1, x._2)).mkString(",")}},""" +
-          s""""sf":"$sfDir"}""")
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_BENCH_ONLY=q12k_...,q24e_... restricts the timed
-    // sets to the named queries — local adjudication of a single watch
-    // item without paying for the whole registry. Names may be ANY
-    // registered query (the graph one-offs live outside the bench
-    // membership by design); non-headline matches run in the ext set.
-    // Not part of the driver contract (the driver never sets it).
+    // BENCH_ONLY names outside both membership lists (e.g. the graph
+    // one-offs) time as ext entries
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def restrict(names: Seq[String]): Seq[String] =
       only.fold(names)(o => names.filter(o))
-
-    // Membership (WHICH queries, and why each family representative)
-    // lives in BenchSets — shared with PlanAuditSpec's benched-
-    // queries-are-plan-audited coverage test so the silenced
-    // WindowExec logger above can never be the only signal.
     val headline = restrict(BenchSets.headline)
     val ext = (restrict(BenchSets.ext) ++
-      // BENCH_ONLY names outside both membership lists (e.g. the graph
-      // one-offs) still time — as ext entries
       only.fold(Seq.empty[String])(o =>
-        SparkEntry.queries.keys.toSeq.sorted.filter(o)
-          .diff(headline))).distinct
-
-    // Pre-query heap quiesce (JMH-style System.gc outside the timed
-    // region) is OFF by default — the r11 A/B measured it a wash to
-    // NEGATIVE (subset mins 19.0–21.9 s with GC vs 17.7–22.6 without;
-    // q28 2.2→3.1, q12y 4.7→4.8 WORSE with GC): a full GC triggers
-    // Spark's ContextCleaner, whose async broadcast/block cleanup then
-    // lands INSIDE the next timed query, and can evict codegen cache
-    // entries the next query must recompile. The ~1.3× shared-JVM
-    // in-run tax over fresh-JVM standalone runs (SURVEY §8.9 item 2)
-    // is therefore accepted as a property of the shared-JVM
-    // methodology, adjudicated via SPARK_GRAFT_BENCH_ONLY standalone
-    // runs when a per-query number matters. SPARK_GRAFT_BENCH_GC=1
-    // re-enables the quiesce for future re-litigation.
-    val quiesce = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
+        SparkEntry.queries.keys.toSeq.sorted.filter(o).diff(headline))).distinct
 
     // (seconds, succeeded) — a failed run must NOT feed the min: a
     // query that dies fast would otherwise win its per-query min and
     // a regression would silently LOWER the reported totals.
     def timeOne(name: String): (Double, Boolean) = {
-      if (quiesce) System.gc()
       val t0 = System.nanoTime()
       val ok =
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }
@@ -125,24 +50,19 @@ object Bench {
     def runSet(names: Seq[String]): Map[String, (Double, Boolean)] =
       names.map(n => n -> timeOne(n)).toMap
 
-    // machine-load telemetry (r5/r6 verdict ask): 1-minute system load
-    // average sampled before each iteration, so a noisy-neighbor
-    // episode like r5's +30% is attributable from the JSON alone
+    // 1-minute system load average before each iteration, so a
+    // noisy-neighbour episode is attributable from the JSON alone
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadAvgs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val headlineRuns = (1 to iters).map { _ =>
-      // internal .cache() calls key on the logical plan, so a second
-      // iteration would silently hit the first's cached data — clear
-      // between iterations to measure the real plan every time
+    // internal .cache() calls key on the logical plan, so a later
+    // iteration would hit an earlier one's cached data — clear first
+    def iterate(names: Seq[String]) = (1 to iters).map { _ =>
       spark.catalog.clearCache()
       loadAvgs += osBean.getSystemLoadAverage
-      runSet(headline)
+      runSet(names)
     }
-    val extRuns = (1 to iters).map { _ =>
-      spark.catalog.clearCache()
-      loadAvgs += osBean.getSystemLoadAverage
-      runSet(ext)
-    }
+    val headlineRuns = iterate(headline)
+    val extRuns = iterate(ext)
 
     // per-query min over SUCCESSFUL iterations only; a query with zero
     // successes reports -1 (JSON has no NaN) and shows up in "failed"
@@ -177,17 +97,12 @@ object Bench {
     val totalsPerIter = totals(headlineRuns, headlineMin)
     val extTotalsPerIter = totals(extRuns, extMin)
 
-    def js(m: Map[String, Double]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def jsInt(m: Map[String, Int]): String =
+    def js(m: Map[String, Any]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def arr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
-    // The driver records only the LAST ~2 KB of stdout; the r8/r9 single
-    // combined line (~3.5 KB with 51 ext queries + per-iter telemetry)
-    // got its FRONT — the headline block — truncated away both rounds.
-    // Split: full detail goes to a side file, and stdout carries one
-    // compact line (~900 B: headline per-query mins, totals, failures,
-    // ext_total) printed last so it always fits the tail window intact.
+    // A reader that records only the last ~2 KB of stdout must still
+    // get the whole summary, so full detail goes to a side file and
+    // stdout carries one compact line, printed last.
     val detail =
       s"""{"metric":"detail","sf":"$sfDir","iters":$iters,""" +
         s""""queries":${js(headlineMin)},""" +
@@ -195,7 +110,7 @@ object Bench {
         s""""load_avg_per_iter":${arr(loadAvgs.toSeq)},""" +
         s""""ext_queries":${js(extMin)},""" +
         s""""ext_totals_per_iter":${arr(extTotalsPerIter)},""" +
-        s""""failed":${jsInt(failed)}}"""
+        s""""failed":${js(failed)}}"""
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
     try {
@@ -212,7 +127,7 @@ object Bench {
         s""""sf":"$sfDir","iters":$iters,""" +
         s""""totals_per_iter":${arr(totalsPerIter.map(r3))},""" +
         s""""median_total":${r3(med(totalsPerIter))},""" +
-        s""""failed":${jsInt(failed)},""" +
+        s""""failed":${js(failed)},""" +
         s""""ext_total":${r3(extTotalsPerIter.min)},""" +
         s""""detail_file":"$detailPath"}""")
     spark.stop()

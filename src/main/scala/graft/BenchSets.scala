@@ -1,11 +1,11 @@
 package graft
 
 /** Bench membership — the single source of truth for WHICH queries
-  * [[Bench]] times, split out of the bench main (r15 ADVICE) so
-  * PlanAuditSpec can assert that every benched name is a registered,
-  * plan-audited query: the bench main silences WindowExec warnings,
-  * so the plan ratchet must provably cover everything the bench runs
-  * or a bench-only path could regress behind the silenced logger.
+  * [[Bench]] times, kept apart from the bench main so PlanAuditSpec
+  * can assert that every benched name is a registered, plan-audited
+  * query: [[GraftSession]] silences WindowExec warnings, so the plan
+  * ratchet must provably cover everything the bench runs or a
+  * bench-only path could regress behind the silenced logger.
   */
 object BenchSets {
 

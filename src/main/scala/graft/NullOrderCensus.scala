@@ -1,39 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ArraySort, Ascending, NullsFirst, SortArray, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Window}
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
-/** Registry-wide null-ordering census (r15, repeatable — not part of
-  * the driver contract): enumerate every NULLS-FIRST ordering over a
-  * NULLABLE expression in the registry's analyzed plans — the exact
+/** Registry-wide null-ordering census: every NULLS-FIRST ordering
+  * over a NULLABLE expression in the registry's analyzed plans — the
   * engine-asymmetry class the heavy/heavyprice/heavytie fixtures
   * exhibit. Spark's defaults are asc = NULLS FIRST, desc = NULLS
-  * LAST; DuckDB's default is NULLS LAST in BOTH directions — so the
+  * LAST; DuckDB's default is NULLS LAST in BOTH directions, so the
   * asymmetric sites are ascending orderings (Spark's default) and any
-  * explicit `desc_nulls_first` pin (r16 ADVICE widened the collector
-  * to the descending form; zero hits today, but a future pin or a
-  * session-default change must not be invisible). Window orderings
-  * drive cumulations and picks (the dangerous sites); bare Sort
-  * orderings are listed too but only matter when a downstream
-  * limit/fold is value-sensitive. The r15 run (56 hits) triaged to:
-  * key-grain orderings (contract non-null), convention-filtered
-  * measures (q9q/q9r/q9u/q24d...), structurally-coupled nulls (q1a's
-  * o_year nulls exactly when its o_month partition does), literal
-  * frames (q12c), and ONE live site — q9f's name tiebreak, exhibited
-  * by heavytie and pinned asc_nulls_last.
+  * explicit `desc_nulls_first` pin. Window orderings drive cumulations
+  * and picks (the dangerous sites); bare Sort orderings are listed too
+  * but only matter when a downstream limit/fold is value-sensitive.
   *
-  * Since r16 the census is a RATCHET, not a hand tool: the
-  * triaged-allowlist test in [[graft.PlanAuditSpec]] replays
-  * [[asymmetricHits]] over the
-  * registry each build and demands an exact match with a
-  * triage-annotated allowlist — a new query with an untriaged
-  * nullable ordering site FAILS the suite until it is either pinned
-  * (`asc_nulls_last`), convention-filtered, or triaged onto the list.
+  * The census is a RATCHET: the triaged-allowlist test in
+  * [[graft.PlanAuditSpec]] replays [[asymmetricHits]] and
+  * [[exprSortHits]] over the registry each build and demands an exact
+  * match with a triage-annotated allowlist, so a new query with an
+  * untriaged nullable ordering site fails the suite until it is
+  * pinned (`asc_nulls_last`), convention-filtered, or triaged onto
+  * the list. This main prints the same hits for a manual triage.
   *
-  * Usage: java -cp target/scala-2.13/classes:/opt/spark/jars/\*
-  *        graft.NullOrderCensus [sfDir]
+  * Usage: java -cp <classes>:<spark jars> graft.NullOrderCensus [sfDir]
   */
 object NullOrderCensus {
 
@@ -56,9 +45,8 @@ object NullOrderCensus {
     }.flatten.distinct
   }
 
-  /** EXPRESSION-level orderings (r16, closing the census scope gap
-    * the `linkedseq` fixture exposed: q27's NULL-month EMA seed hid
-    * inside `array_sort`, which plans no Sort/Window node): every
+  /** EXPRESSION-level orderings, which plan no Sort/Window node (q27's
+    * NULL-month EMA seed sorts inside `array_sort`): every
     * `sort_array` / `array_sort` whose element type can carry a NULL
     * — a nullable struct field (the struct comparator orders a NULL
     * field FIRST ascending, like any Spark asc ordering, vs the
@@ -69,8 +57,8 @@ object NullOrderCensus {
     * Lines: `EXPR SORT_ARRAY|ARRAY_SORT <element catalogString>`.
     */
   def exprSortHits(plan: LogicalPlan): Seq[String] = {
-    // Recurses (r17 ADVICE): a nullable field buried one struct level
-    // deeper (struct<a:struct<b:nullable>>) still steers the struct
+    // Recurses: a nullable field buried one struct level deeper
+    // (struct<a:struct<b:nullable>>) still steers the struct
     // comparator, so it must not be invisible to the ratchet.
     def anyNullableInside(d: org.apache.spark.sql.types.DataType): Boolean =
       d match {
@@ -95,15 +83,7 @@ object NullOrderCensus {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.tune(spark)
-
+    val spark = GraftSession.session()
     SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("q15")).foreach { name =>
         try {

@@ -1,51 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
 
-/** Measurement tool (optimization rounds): dump `.explain("formatted")`
-  * for registered queries to one text file per query, so plan claims
-  * (Exchange count, join strategy, PushedFilters/ReadSchema) are
-  * auditable without running Spark.
+/** Dumps `explain("formatted")` for registered queries, one text file
+  * per query, so plan claims (Exchange count, join strategy,
+  * PushedFilters/ReadSchema) are auditable without running Spark.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix] [csvNames]
+  * Usage: PlanDump <sfDir> <outDir> [suffix] [name,...]
   *   - suffix (default ""): appended to the file name, e.g. "_before"
-  *   - csvNames (default all): comma-separated query names to dump
+  *   - names (default all): the queries to dump
   *
-  * Not part of the driver contract; never executes a job (explain is
-  * plan-time only), so it cannot perturb concurrent timing runs' data
-  * — it does share CPU, so don't run it during a bench.
+  * Planning runs no query job, so it cannot perturb a concurrent
+  * timing run's data — it does share CPU, so don't run it during a
+  * bench.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val suffix = if (args.length > 2) args(2) else ""
+    val (sfDir, outDir) = (args(0), args(1))
+    val suffix = args.lift(2).getOrElse("")
     val names: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.tune(spark)
+      args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val spark = GraftSession.session()
     Files.createDirectories(Paths.get(outDir))
-    val selected = SparkEntry.queries.filter {
-      case (n, _) => names.forall(_.contains(n))
-    }.toSeq.sortBy(_._1)
-    selected.foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/$name$suffix.txt"), plan)
-        println(s"[plandump] wrote $name")
-      } catch { case t: Throwable =>
-        System.err.println(s"[plandump] $name failed: ${t.getMessage}")
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => names.forall(_.contains(n)) }
+      .foreach { case (name, fn) =>
+        try {
+          val plan = fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          Files.writeString(Paths.get(s"$outDir/$name$suffix.txt"), plan)
+          println(s"[plandump] wrote $name")
+        } catch { case t: Throwable =>
+          System.err.println(s"[plandump] $name failed: ${t.getMessage}")
+        }
       }
-    }
     spark.stop()
   }
 }

@@ -1,51 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Registry-wide spill census (SURVEY §8.11 cadence, committed r14 so
-  * the measurement is repeatable instead of ad hoc): execute every
-  * registered query at the bench scale factor under a stage listener
-  * and report shuffle volume and memory/disk spill. The engine's
-  * zero-spill claim at sf0.1 — every operator's working set fits the
-  * 32-way partitioning — is what this main re-measures each round;
-  * any nonzero per-query spill delta names the query to chase.
+/** Registry-wide spill census: execute every registered query once
+  * under a [[GraftSession.StageAcc]] and report its wall, the total
+  * shuffle volume, and memory/disk spill. Any query with nonzero
+  * spill is named in `spilled_queries`.
   *
-  * q15* (streaming batch-twins) are excluded as always: their real
-  * readStream execution is driven by StreamingSpec, and the twin
-  * bodies re-run identical batch plans already timed elsewhere.
+  * q15* (streaming batch twins) are excluded: their readStream
+  * execution is driven by StreamingSpec, and the twin bodies re-run
+  * batch plans timed elsewhere. `wall_s` sums the per-query execution
+  * walls only; the listener-bus drain between queries is not charged.
   *
-  * Metrics ride [[ScaleDecadeProbe.StageAcc]] and per-query
-  * attribution drains the async listener bus with
-  * [[ScaleDecadeProbe.quiesce]] (poll-until-quiet, not a fixed
-  * sleep); `wall_s` sums the per-query execution walls only, so the
-  * drain time never inflates round-over-round comparisons. Not part
-  * of the driver contract.
-  *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32
-  *        java -cp target/scala-2.13/classes:/opt/spark/jars/\*
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> java -cp <classes>:<spark jars>
   *        graft.SpillCensus
   */
 object SpillCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.tune(spark)
-
-    import ScaleDecadeProbe.{StageAcc, quiesce}
-    val acc = new StageAcc
+    val spark = GraftSession.session()
+    val acc = new GraftSession.StageAcc
     spark.sparkContext.addSparkListener(acc)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("q15"))
     var failed = List.empty[String]
-    var wall = 0.0
-    val spilled = names.flatMap { n =>
+    val perQuery = names.map { n =>
       val m0 = acc.memSpill.get; val d0 = acc.diskSpill.get
       val t0 = System.nanoTime()
       try SparkEntry.queries(n)(spark, sfDir).count()
@@ -53,17 +31,19 @@ object SpillCensus {
         failed ::= n
         System.err.println(s"CENSUS FAILURE $n: ${t.getMessage}")
       }
-      wall += (System.nanoTime() - t0) / 1e9
-      quiesce(acc) // drain the async listener bus (attribution only)
-      val dm = acc.memSpill.get - m0; val dd = acc.diskSpill.get - d0
-      if (dm > 0 || dd > 0)
-        Some(s""""$n":{"mem_spill":$dm,"disk_spill":$dd}""")
-      else None
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftSession.quiesce(acc)
+      (n, wall, acc.memSpill.get - m0, acc.diskSpill.get - d0)
+    }
+    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spilled = perQuery.collect { case (n, _, dm, dd) if dm > 0 || dd > 0 =>
+      s""""$n":{"mem_spill":$dm,"disk_spill":$dd}"""
     }
     println(
       s"""{"metric":"spill_census","n_queries":${names.size},""" +
         s""""failed":[${failed.reverse.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""wall_s":${math.rint(wall * 1000) / 1000},""" +
+        s""""wall_s":${r3(perQuery.map(_._2).sum)},""" +
+        s""""queries":{${perQuery.map(q => s""""${q._1}":${r3(q._2)}""").mkString(",")}},""" +
         s""""shuffle_read_bytes":${acc.shuffleRead.get},""" +
         s""""shuffle_write_bytes":${acc.shuffleWrite.get},""" +
         s""""mem_spill_bytes":${acc.memSpill.get},""" +

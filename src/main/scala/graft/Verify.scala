@@ -1,53 +1,58 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+/** Correctness dump for the DuckDB oracle compare: each selected
+  * registry query's result goes to `<outDir>/<name>/` as parquet, and
+  * its oracle SQL to `<outDir>/oracle_sql.json` for
+  * `tools/check_oracle.py`.
+  *
+  * Usage: Verify <sfDir> <outDir> [name,...]   (default: every query)
+  *
+  * The oracle map keeps the keys of any map already in `outDir` and
+  * adds the selected names. Every value is re-read from
+  * [[SparkEntry.oracleSql]], and keys the registry no longer has are
+  * dropped, so a reused directory never compares against stale SQL. A
+  * query that fails is logged and keeps its key, so the compare
+  * reports it.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(spark)
-    new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (comma-separated name substrings). The
-    // driver never sets it, so the driver contract is unchanged; when
-    // set, oracle_sql.json is filtered to match so check_oracle.py
-    // compares exactly the dumped subset.
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(pats) =>
-        val ps = pats.split(',').map(_.trim).filter(_.nonEmpty)
-        name => ps.exists(name.contains)
-      case None => _ => true
-    }
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val (sfDir, outDir) = (args(0), args(1))
+    val queries = SparkEntry.queries
+    val names = args.lift(2).fold(queries.keys.toSeq.sorted)(
+      _.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    Files.createDirectories(Paths.get(outDir))
+    val spark = GraftSession.session()
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, names)
     spark.stop()
+  }
+
+  private def writeOracleSql(outDir: String, dumped: Seq[String]): Unit = {
+    val oracle = SparkEntry.oracleSql
+    val mapper = new ObjectMapper()
+    val path = Paths.get(outDir, "oracle_sql.json")
+    val kept =
+      if (Files.exists(path)) mapper.readTree(path.toFile).fieldNames().asScala.toSeq
+      else Nil
+    kept.filterNot(oracle.contains).foreach(k =>
+      System.err.println(s"[verify] dropping stale oracle entry: $k"))
+    val out = mapper.createObjectNode()
+    (kept ++ dumped).distinct.sorted.filter(oracle.contains)
+      .foreach(k => out.put(k, oracle(k)))
+    Files.writeString(path, mapper.writeValueAsString(out))
   }
 }

@@ -35,7 +35,7 @@ object ConnectedComponents {
   /** [[components]] plus the number of propagation rounds it took to
     * converge (the last round is the fixpoint check that observes no
     * change, so `rounds` = diameter-bound + 1). Exposed for
-    * [[graft.ScaleBreadthProbe]], which pins the rounds-stay-constant
+    * [[graft.ScaleProbe]], which pins the rounds-stay-constant
     * claim of the disjoint-shard corpus model: replicating shards
     * multiplies components, not diameters.
     */

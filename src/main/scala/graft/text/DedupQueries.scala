@@ -204,7 +204,7 @@ object DedupQueries {
     * candidate generation — members of one (band_idx, band_val)
     * bucket pair off, so candidate mass is Σ C(|bucket|, 2) over the
     * groups of this frame. Factored out for
-    * [[graft.ScaleDecadeProbe]], which measures that mass directly at
+    * [[graft.ScaleProbe]], which measures that mass directly at
     * decade-up corpus scale; q13c composes this frame unchanged, so
     * the probe measures exactly the bucket structure the query runs.
     */

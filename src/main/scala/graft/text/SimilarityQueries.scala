@@ -312,7 +312,7 @@ object SimilarityQueries {
     // max over a STRUCT has an immutable aggregation buffer, so Spark
     // plans SortAggregate — the "map-side collapse" actually
     // EXTERNAL-SORTS the whole N·k fan-out (with the embedding
-    // ride-along, ~300 B/row) before combining. ScaleBreadthProbe
+    // ride-along, ~300 B/row) before combining. ScaleProbe
     // measured that shape filling 80 GB of spill disk at ×1000
     // (500k vectors · 3.9k centroids ≈ 2e9 sorted rows). The fold
     // formulation does the same N·k cosine work as a pure streaming

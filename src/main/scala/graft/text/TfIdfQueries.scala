@@ -202,7 +202,7 @@ object TfIdfQueries {
   /** BM25 candidate scores (query_id, doc_id, n_terms_matched,
     * score_q6) BEFORE the per-query top-5 cut — one row per
     * (query, doc) pair sharing at least one surviving index term.
-    * Factored out of q12y for [[graft.ScaleDecadeProbe]], which
+    * Factored out of q12y for [[graft.ScaleProbe]], which
     * measures this candidate mass directly at decade-up corpus scale;
     * q12y composes this frame unchanged, so the probe measures
     * exactly the probe-join mass the query pays.

@@ -17,23 +17,22 @@ object GraftColumnBridge {
       : catalyst.analysis.FunctionRegistry =
     spark.sessionState.functionRegistry
 
-  /** Pin a (possibly sort-)column's null ordering to NULLS LAST at
-    * the ColumnNode level (r16, used by DistributedRank/PrefixSum's
-    * RDD-boundary orderings — NULL_CONTRACT.md). A Column's sort
-    * state is an `internal.SortOrder` COLUMN NODE, not a catalyst
-    * SortOrder: converting via [[expression]] and pattern-matching
-    * catalyst yields a `ColumnNodeExpression` wrapper that matches
-    * nothing, and re-sorting it NESTS sort orders (the evaluated
-    * inner node then throws `Cannot evaluate expression: ... ASC
-    * NULLS FIRST`). A non-sort column becomes ASC NULLS LAST.
-    */
   /** Build a DataFrame from an RDD of catalyst [[InternalRow]]s
-    * without the external-Row round trip (r18, the DistributedRank/
-    * PrefixSum scale-path rewrite): `createDataFrame(RDD[Row])` pays
-    * a full RowEncoder serialization per row, while the physical scan
-    * of this form (`RDDScanExec`) applies one codegen'd
-    * UnsafeProjection — rows may be [[JoinedRow]]/GenericInternalRow
-    * wrappers consumed element-wise, no copies needed.
+    * without the external-Row round trip (DistributedRank/PrefixSum's
+    * scale path): `createDataFrame(RDD[Row])` pays a full RowEncoder
+    * serialization per row, while the physical scan of this form
+    * (`RDDScanExec`) applies one codegen'd UnsafeProjection — rows may
+    * be [[JoinedRow]]/GenericInternalRow wrappers consumed
+    * element-wise, no copies needed.
+    *
+    * Invariant (callers must keep it): the RDD is consumed ONLY by
+    * that per-element projection. The emitted rows alias buffers the
+    * producer reuses (DistributedRank's and PrefixSum's sorter rows),
+    * so any operation that holds a row past the next `next()` call —
+    * persist/cache, zipPartitions, a debugging collect, any buffering
+    * iterator placed between producer and scan — silently corrupts
+    * the output. A caller that needs such an operation must `copy()`
+    * each row first.
     */
   def internalCreateDataFrame(
       spark: SparkSession,
@@ -42,6 +41,16 @@ object GraftColumnBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(catalystRows, schema)
 
+  /** Pin a (possibly sort-)column's null ordering to NULLS LAST at
+    * the ColumnNode level (used by DistributedRank/PrefixSum's
+    * RDD-boundary orderings — NULL_CONTRACT.md). A Column's sort
+    * state is an `internal.SortOrder` COLUMN NODE, not a catalyst
+    * SortOrder: converting via [[expression]] and pattern-matching
+    * catalyst yields a `ColumnNodeExpression` wrapper that matches
+    * nothing, and re-sorting it NESTS sort orders (the evaluated
+    * inner node then throws `Cannot evaluate expression: ... ASC
+    * NULLS FIRST`). A non-sort column becomes ASC NULLS LAST.
+    */
   def nullsLast(c: Column): Column = c.node match {
     case so: internal.SortOrder =>
       Column(so.copy(nullOrdering = internal.SortOrder.NullsLast))

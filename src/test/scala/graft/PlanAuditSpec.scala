@@ -181,12 +181,12 @@ class PlanAuditSpec extends SparkTestBase {
     assert(withUdf.isEmpty, s"ScalaUDF found in: ${withUdf.mkString(", ")}")
   }
 
-  /** The bench main silences WindowExec's unpartitioned-window WARN
+  /** GraftSession silences WindowExec's unpartitioned-window WARN
     * (documented bounded windows drowned the tail), which is safe
-    * ONLY while this spec provably audits everything the bench CAN
-    * time (r15+r16 ADVICE). Bench can time any REGISTERED name — the
-    * membership lists plus arbitrary SPARK_GRAFT_BENCH_ONLY /
-    * BENCH_FULL one-offs — so coverage is asserted over the WHOLE
+    * ONLY while this spec provably audits everything a tool main CAN
+    * run. Bench can time any REGISTERED name — the membership lists
+    * plus arbitrary SPARK_GRAFT_BENCH_ONLY one-offs — and SpillCensus
+    * runs the whole registry, so coverage is asserted over the WHOLE
     * registry minus the streaming entries (whose stateful plans are
     * pinned in StreamingSpec / StreamingScaleSpec instead — batch
     * plan-auditing a sink read-back would say nothing about their
@@ -210,7 +210,7 @@ class PlanAuditSpec extends SparkTestBase {
     * its INPUT per task before combining. Over linear input that is
     * merely sort-instead-of-hash; over a nested-loop or explode
     * fan-out it sorts the MULTIPLIED row mass — the assignCells trap
-    * ScaleBreadthProbe caught at ×1000 (a 138 MB corpus × 3.9k
+    * the q14c scale probe caught at ×1000 (a 138 MB corpus × 3.9k
     * broadcast centroids = 585 GB of sort mass, 80 GB of spill before
     * the disk died). This test bans SortAggregate whose same-stage
     * subtree (below the aggregate, above the next exchange) contains

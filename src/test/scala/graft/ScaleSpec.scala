@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{StageAcc, quiesce}
+import graft.ScaleProbe.DocShift
 import graft.analytics.AnalyticsQueries
 import graft.queries.AnalyticalQueries
 
@@ -41,30 +42,6 @@ class ScaleSpec extends SparkTestBase {
   // r*KeyShift so replicated orders stay distinct while custkey /
   // dates / prices repeat exactly
   private val KeyShift = 100000000L
-
-  private class StageAcc extends SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-  }
-  /** Listener events are delivered async — poll until the counters go
-    * quiet before reading them.
-    */
-  private def quiesce(acc: StageAcc): Unit = {
-    var last = -1L
-    var same = 0
-    while (same < 3) {
-      val now = acc.shuffleWrite.get + acc.diskSpill.get
-      if (now == last) same += 1 else { same = 0; last = now }
-      Thread.sleep(100)
-    }
-  }
 
   private def buildTenX(): String = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-scale10x").toString
@@ -200,13 +177,6 @@ class ScaleSpec extends SparkTestBase {
       s"shuffle grew super-linearly at 10×: ${acc1.shuffleWrite.get} B → " +
         s"${acc10.shuffleWrite.get} B (${ratio}×)")
   }
-
-  // Corpus replica shift: divisible by 101 (q12y's %101 query rule),
-  // 7 (q13a's dup-plant rule) and 12 = lcm(2,3,4) (q12v's plant
-  // moduli), so every deterministic doc_id rule replicates exactly;
-  // far above any base id + the 1e6 plant offset, so replica id
-  // ranges stay disjoint
-  private val DocShift = 84840000L
 
   test("corpus decade-up 10×: dedup groups, heavy hitters, CMS grid " +
     "and BM25 hold exact scale algebra with linear shuffle") {

@@ -78,4 +78,10 @@ class SourceHygieneSpec extends AnyFunSuite {
       "operators/PrefixSum.scala", "Tables.scala")
     assert(files.subsetOf(allowed), s"unexpected .rdd usage in ${files -- allowed}")
   }
+
+  test("one session builder: SparkSession.builder( only in GraftSession") {
+    // code lines only; a scaladoc usage example is not a second builder
+    assert(countsOf("""(?m)^(?!\s*(\*|//)).*SparkSession\.builder\(""") ===
+      Map("GraftSession.scala" -> 1))
+  }
 }

@@ -11,16 +11,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(s)
-    s
-  }
+  // pinned at 4 cores so plan and partition-count pins do not move
+  // with the host
+  lazy val session: SparkSession = GraftSession.session(4)
 }

@@ -5,7 +5,7 @@ The sf0.01 oracle replay proves the 171 twins AGREE with DuckDB on the
 committed code; this audit proves they DISCRIMINATE: for each query
 family, one seeded, plausible semantic mutation is applied to the
 SPARK side only (the oracle SQL / verdict contract is never touched),
-the single affected query is re-run via graft.VerifyOne, and its gate
+the single affected query is re-run via graft.Verify, and its gate
 — the DuckDB value-compare for oracle-backed entries, the emitted
 verdict booleans for the three contract-permitted no_oracle entries —
 must turn RED. A mutation the gate misses (SURVIVED) fails the audit:
@@ -17,7 +17,7 @@ Mechanics per mutation:
      silently mutating nothing)
   2. `sbt -batch compile` (a mutation must be PLAUSIBLE, i.e. compile;
      a compile failure is a tooling error, not a kill)
-  3. `java -cp target/...classes graft.VerifyOne <query> <sf0.01> out`
+  3. `java -cp target/...classes graft.Verify <sf0.01> out <query>`
   4. gate check:
        oracle  — tools/check_oracle.py over the single dumped query
                  (the EXACT tool the driver's gate replicates);
@@ -29,8 +29,9 @@ Mechanics per mutation:
                  ScalaTest suite, whose expectations are hand-derived
                  on a crafted boundary warehouse, must FAIL; steps
                  2-3 are replaced by Test/compile + testOnly
-     A VerifyOne crash also counts as KILLED (a loud failure is a
-     gate), tallied separately as `killed_crash`.
+     A Verify crash or a failed dump of the query also counts as
+     KILLED (a loud failure is a gate), tallied separately as
+     `killed_crash`.
   5. source restored byte-identical (sha-checked), final recompile.
 
 Prereqs: clean work tree on the mutated files, compiled classes.
@@ -619,27 +620,25 @@ def spec_gate_red(spec_suite):
                   f"{r.returncode}")[:140]
 
 
-def run_verify_one(query, out_dir):
+def run_verify(query, out_dir):
+    """Dump one query. Verify logs a failed query and exits 0, so a
+    failed dump is reported here as a nonzero return code."""
     sh(f"rm -rf {out_dir}")
     r = sh(f"java {OPENS} -Xmx8g "
            f"-cp target/scala-2.13/classes:/opt/spark/jars/* "
-           f"graft.VerifyOne {query} {SF_DIR} {out_dir}")
+           f"graft.Verify {SF_DIR} {out_dir} {query}")
+    if f"[verify] {query} failed" in r.stderr:
+        r.returncode = r.returncode or 1
     return r
 
 
 def oracle_gate_red(query, out_dir):
-    """True iff the DuckDB value-compare FAILS on the dumped result."""
-    sql_path = os.path.join(out_dir, f"{query}.sql")
-    if not os.path.exists(sql_path):
-        raise RuntimeError(f"{query}: VerifyOne dumped no oracle SQL")
-    with open(sql_path, encoding="utf-8") as f:
-        sql = f.read()
-    # Deliberately OVERWRITE the oracle map VerifyOne also maintains:
-    # the gate must compare exactly one query against exactly the .sql
-    # this run dumped (out_dir is rm -rf'd per mutation, so there is
-    # nothing else to preserve and no drift window).
-    with open(os.path.join(out_dir, "oracle_sql.json"), "w") as f:
-        json.dump({query: sql}, f)
+    """True iff the DuckDB value-compare FAILS on the dumped result.
+    out_dir is emptied per mutation, so the oracle map Verify wrote
+    holds exactly this query."""
+    with open(os.path.join(out_dir, "oracle_sql.json"), encoding="utf-8") as f:
+        if query not in json.load(f):
+            raise RuntimeError(f"{query}: Verify dumped no oracle SQL")
     r = sh(f"python3 tools/check_oracle.py {SF_DIR} {out_dir}")
     if f"PASS {query}" in r.stdout:
         return False, "oracle PASS (gate green)"
@@ -720,7 +719,7 @@ def main(argv):
                     if not red:
                         rc = 1
                 else:
-                    r = run_verify_one(m["query"], out_dir)
+                    r = run_verify(m["query"], out_dir)
                     if r.returncode != 0:
                         entry["status"] = "KILLED_CRASH"
                         tail = (r.stderr or r.stdout).strip().splitlines()

@@ -1,34 +1,27 @@
 #!/usr/bin/env bash
-# One-command round close (r15 verdict task 3): runs every close-gate
-# cadence the round convention demands, SEQUENTIALLY (the degenerate
-# and mutation audits share Spark temp dirs / mutated sources with sbt
-# test and must never overlap it), and emits ONE JSON ledger line —
-# r17 note: the q17 roundtrip/layout paths are now RUN-UNIQUE
-# (Sources.RoundtripRoot embeds the writing JVM's pid), so a
-# concurrent JVM can no longer clobber the replica's oracle files
-# (the r16 judge's 164/7 incident); gates still run sequentially
-# because they SHARE CPU — concurrent load skews bench/census.
-# so a close can't silently skip a gate and the SURVEY §8 ledger entry
-# is a paste of the line plus commentary.
+# One-command round close: runs every close gate SEQUENTIALLY (the
+# degenerate and mutation audits share Spark temp dirs / mutated
+# sources with sbt test, and concurrent load skews bench and census)
+# and emits ONE JSON ledger line, so a close can't silently skip a gate.
 #
 # Gates (in order):
-#   suite      — full `sbt -batch test` (fixtures for the degenerate
-#                audit are built here by DegenerateInputSpec)
+#   suite      — `sbt -batch test` (fixtures for the degenerate audit
+#                are built here by DegenerateInputSpec)
 #   degenerate — tools/audit_degenerate.sh, all default shapes
 #   mutation   — tools/audit_mutation.sh, full registry (needs a CLEAN
 #                work tree on the mutated files)
 #   replica    — sf0.01 full-registry graft.Verify + DuckDB compare
 #                (the driver-gate replica; expect 171/0)
 #   census     — graft.SpillCensus at sf0.1 (expect zero spill)
-#   bench      — STANDALONE fresh-JVM full bench at sf0.1, the
-#                round's canonical closing sample (r16 verdict task 5:
-#                the r15 drift ledger proved sbt-forked samples read
-#                high and SUBSET standalone runs are JIT-cold-
-#                dominated — only the full standalone run is a valid
-#                tiebreak). Headline/ext mins land in the ledger line.
+#   bench      — standalone fresh-JVM full bench at sf0.1 (sbt-forked
+#                samples read high, and subset runs are JIT-cold);
+#                headline/ext mins land in the ledger line
 #   delta      — dated Delta/Iceberg/Hudi classpath recheck (expect 0
 #                jars; if nonzero, the q17i/k emulations have a real
 #                backend to swap in — see SURVEY)
+#
+# The JVMs use every core (GraftSession's default; SPARK_GRAFT_CPUS
+# overrides) and half the machine's memory clamped to 2-8 GB as heap.
 #
 # Usage: tools/close_round.sh [gate ...]     (default: all seven)
 # Output: per-gate logs under /tmp/close_round/, one JSON summary line
@@ -44,6 +37,9 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
+# shellcheck disable=SC2086
+jvm() { java $OPENS -Xmx"$HEAP" -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"; }
 
 gates=("$@")
 [ $# -eq 0 ] && gates=(suite degenerate mutation replica census bench delta)
@@ -62,8 +58,7 @@ run_gate() { # run_gate <name> <cmd...>
 
 gate_replica() {
   rm -rf "$OUT/replica_dump"
-  # shellcheck disable=SC2086
-  java $OPENS -Xmx8g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  jvm \
     graft.Verify /root/testdata/sf0.01 "$OUT/replica_dump" \
     2>&1 | grep "^\[verify\]" || true
   [ -f "$OUT/replica_dump/oracle_sql.json" ] || {
@@ -72,18 +67,11 @@ gate_replica() {
 }
 
 gate_census() {
-  # shellcheck disable=SC2086
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    java $OPENS -Xmx32g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    graft.SpillCensus
+  jvm graft.SpillCensus  # sf0.1 is its default
 }
 
 gate_bench() {
-  # shellcheck disable=SC2086
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    SPARK_GRAFT_BENCH_DETAIL="$OUT/bench_detail.json" \
-    java $OPENS -Xmx32g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    graft.Bench
+  SPARK_GRAFT_BENCH_DETAIL="$OUT/bench_detail.json" jvm graft.Bench  # sf0.1 default
 }
 
 gate_delta() {
