@@ -164,7 +164,7 @@ object ScaleProbe {
     docs(spark, base).crossJoin(broadcast(replicas))
       .withColumn("doc_id", $"doc_id" + $"rep" * DocShift)
       .withColumn("text", array_join(
-        transform(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+"),
+        transform(graft.text.TextQueries.words($"text"),
           t => concat(lit("r"), $"rep".cast("string"), lit("~"), t)),
         " "))
       .drop("rep")

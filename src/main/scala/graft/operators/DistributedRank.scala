@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Distributed RANK + NTILE — the scale path for per-group ranking
   * (reference query 3A, `Database/TASK 2A SQL Analytical
@@ -11,53 +11,20 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   *
   * `Window.partitionBy(group).orderBy(order)` sorts each group inside
   * ONE task: at 100 TB a single nation's ~60 M customers funnel
-  * through one thread. This operator instead:
-  *
-  *  1. `repartitionByRange(group ++ order)` — the range sampler splits
-  *     a large group across MANY partitions while keeping the global
-  *     (group, order) sort; each task then sorts only its slice.
-  *  2. Pass 1 (tiny): per-(Spark partition, group) row counts — groups
-  *     are contiguous in a sorted partition, so this is a streaming
-  *     count whose output is O(partitions + groups), collected to the
-  *     driver and broadcast back.
-  *  3. Pass 2: global position = partition offset + local index. The
-  *     second job reuses the range shuffle's map output (same RDD
-  *     lineage → skipped stages), so the input is scanned once.
+  * through one thread. This operator is [[PrefixSum]]'s grouped
+  * two-pass scan over a constant 1: the exclusive prefix is the row's
+  * 0-based position in its group and the group total its size, so a
+  * large group spreads over many range partitions.
   *
   * Contract: `orderCols` must be a TOTAL order within each group
   * (tie-broken, as the reference query itself does with `c_custkey` —
   * its stated reason is cross-engine determinism). Under a total order
   * RANK = ROW_NUMBER, so the assigned rank hash-matches the window
   * form exactly. NTILE uses the exact SQL split: with N rows and n
-  * tiles the first N mod n tiles carry one extra row.
-  *
-  * mapPartitions is justified here (per SURVEY §2 preference order):
-  * the offset handoff between range partitions is genuinely
-  * per-partition imperative state that no built-in operator expresses
-  * without re-introducing the single-task group sort.
+  * tiles the first N mod n tiles carry one extra row. NULL order
+  * values rank LAST (see [[PrefixSum]]).
   */
 object DistributedRank {
-
-  /** NULL-ordering normalization (r16, the census's one structural
-    * blind spot closed at the operator): this operator's internal
-    * sort sits behind an RDD boundary (`parted.rdd` →
-    * `createDataFrame`), so the NullOrderCensus ratchet can NEVER see
-    * a caller's ordering through the resulting LogicalRDD — a future
-    * caller passing a nullable ASC order column would silently rank
-    * nulls FIRST (Spark's default) while every DuckDB twin ranks
-    * them LAST. Instead of auditing callers by hand, the ordering is
-    * normalized HERE to NULLS LAST in both directions (DuckDB's
-    * default, NULL_CONTRACT.md B). Current callers are unaffected:
-    * their DESC sites were already nulls-last, and the one nullable
-    * ASC site (q28 recency) is convention-filtered upstream. A
-    * caller that genuinely needs nulls-first must pre-transform
-    * (e.g. coalesce to a sentinel) — none exists. Pinned by
-    * DistributedRankSpec + mutation m52. The rewrite happens at the
-    * COLUMN-NODE level (see [[GraftColumnBridge.nullsLast]]) — a
-    * Column's sort state is not a catalyst SortOrder.
-    */
-  private[operators] def nullsLast(c: Column): Column =
-    GraftColumnBridge.nullsLast(c)
 
   /** Appends `rankName` (LONG — a global rank on this operator's own
     * scale path can exceed 2³¹, so Int would silently wrap; callers
@@ -75,121 +42,22 @@ object DistributedRank {
       ntileName: String,
       numPartitions: Int = 0): DataFrame = {
     require(ntiles > 0, s"ntiles must be positive, got $ntiles")
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sortCols = groupCols.map(col) ++ orderCols.map(nullsLast)
-    val parted = df
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = parted.schema
-    val gIdx = groupCols.map(schema.fieldIndex).toArray
-    val gTypes = gIdx.map(schema.fields(_).dataType)
-
-    // Single lineage for both passes: the range shuffle materializes
-    // once; the second job's stages up to it are skipped. Both passes
-    // run at the catalyst InternalRow level (r18): `.rdd` would
-    // deserialize every row to an external Row in EACH pass (and
-    // build a second QueryExecution, forfeiting the shared shuffle),
-    // and `createDataFrame(RDD[Row])` would re-serialize the output
-    // through a RowEncoder — three full per-row conversion passes
-    // that at corpus scale cost more than the counting itself. Group
-    // keys read from InternalRows are internal values (UTF8String,
-    // Decimal); [[InternalRow.copyValue]] detaches them from reused
-    // row buffers before they are held across iterator steps.
-    val rdd = parted.queryExecution.toRdd
-    def groupKey(row: org.apache.spark.sql.catalyst.InternalRow): List[Any] = {
-      var i = gIdx.length - 1
-      var k: List[Any] = Nil
-      while (i >= 0) {
-        k = org.apache.spark.sql.catalyst.InternalRow.copyValue(
-          row.get(gIdx(i), gTypes(i))) :: k
-        i -= 1
-      }
-      k
-    }
-
-    val counts: Array[(Int, List[Any], Long)] =
-      if (gIdx.isEmpty) {
-        // ungrouped: the count pass needs only partition sizes — no
-        // field is read, no value copied
-        rdd.mapPartitionsWithIndex { (pid, it) =>
-          var n = 0L
-          while (it.hasNext) { it.next(); n += 1 }
-          Iterator.single((pid, (Nil: List[Any]), n))
-        }.collect()
-      } else {
-        rdd.mapPartitionsWithIndex { (pid, it) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Int, List[Any], Long)]
-          var cur: List[Any] = null
-          var n = 0L
-          it.foreach { row =>
-            val k = groupKey(row)
-            if (k != cur) {
-              if (cur != null) out += ((pid, cur, n))
-              cur = k
-              n = 0L
-            }
-            n += 1
-          }
-          if (cur != null) out += ((pid, cur, n))
-          out.iterator
-        }.collect()
-      }
-
-    val totals: Map[List[Any], Long] =
-      counts.groupBy(_._2).map { case (k, cs) => k -> cs.map(_._3).sum }
-    val offsets: Map[(Int, List[Any]), Long] =
-      counts.groupBy(_._2).flatMap { case (k, cs) =>
-        var acc = 0L
-        cs.sortBy(_._1).map { case (pid, _, n) =>
-          val entry = ((pid, k), acc)
-          acc += n
-          entry
-        }
-      }
-    val bcTotals = spark.sparkContext.broadcast(totals)
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
-    val nt = ntiles.toLong
-
-    // Emitted rows are JoinedRow(input, [rank, tile]) wrappers: the
-    // downstream RDDScanExec applies an UnsafeProjection element-wise
-    // (copying values out) before the next row is pulled, so no
-    // per-row copy is needed here; only `cur` (held across steps)
-    // uses copied key values, via groupKey.
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: List[Any] = null
-      var started = false
-      var base = 0L
-      var total = 0L
-      var local = 0L
-      it.map { row =>
-        val k = if (gIdx.isEmpty) (Nil: List[Any]) else groupKey(row)
-        if (!started || k != cur) {
-          started = true
-          cur = k
-          local = 0L
-          base = bcOffsets.value((pid, k))
-          total = bcTotals.value(k)
-        }
-        val i = base + local // 0-based global position within the group
-        local += 1
-        val q = total / nt
-        val r = total % nt
-        val tile =
-          if (i < r * (q + 1)) i / (q + 1) + 1
-          else r + (i - r * (q + 1)) / q + 1
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-          row,
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](i + 1, tile.toInt)))
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    val outSchema = StructType(schema.fields)
-      .add(rankName, LongType, nullable = false)
-      .add(ntileName, IntegerType, nullable = false)
-    GraftColumnBridge.internalCreateDataFrame(spark, ranked, outSchema)
+    // the scan writes position into `rankName` and group size into
+    // `ntileName`; both are then replaced in place
+    val i = col(rankName)
+    val n = col(ntileName)
+    def div(a: Column, b: Column): Column = call_function("div", a, b)
+    val q = div(n, lit(ntiles.toLong))
+    val r = n % ntiles.toLong
+    // The ELSE branch runs only when q >= 1, so neither `div` can
+    // return NULL and the tile is known non-null.
+    val tile = when(i < r * (q + 1), div(i, q + 1) + 1)
+      .otherwise(div(i - r, q) + 1)
+      .cast("int")
+    PrefixSum.scan(df, groupCols, orderCols, lit(1L), rankName, ntileName, numPartitions)
+      .withColumns(Map(
+        rankName -> (i + 1),
+        ntileName -> GraftColumnBridge.column(
+          KnownNotNull(GraftColumnBridge.expression(tile)))))
   }
 }

@@ -110,7 +110,7 @@ object BpeQueries {
     val docs = Tables(spark, dir).documents
     // the ONLY corpus-scale pass: word frequencies
     val words = docs
-      .select(explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("w"))
+      .select(explode(TextQueries.words($"text")).as("w"))
       .filter(length($"w") > 0 && !$"w".contains(US))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
     var vocab = words.select($"w".as("word"), $"freq",

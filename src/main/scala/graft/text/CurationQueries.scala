@@ -98,7 +98,7 @@ object CurationQueries {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.GraftColumnBridge
     val ws = docs.select($"doc_id",
-      split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+").as("ws"))
+      TextQueries.words($"text").as("ws"))
     val tokStats = ws
       .select($"doc_id", explode($"ws").as("tok"))
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
@@ -308,7 +308,7 @@ object CurationQueries {
       |FROM toks GROUP BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables(spark, dir).documents
-      .select($"lang", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+      .select($"lang", explode(TextQueries.words($"text")).as("tok"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_tokens"),
         countDistinct($"tok").as("vocab_size"),
@@ -341,7 +341,7 @@ object CurationQueries {
       |FROM toks GROUP BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables(spark, dir).documents
-      .select($"lang", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+      .select($"lang", explode(TextQueries.words($"text")).as("tok"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_tokens"),
         approx_count_distinct($"tok", 0.01).as("v_approx"),
@@ -447,7 +447,7 @@ object CurationQueries {
       val d1ws = plant.withColumn("h", md5($"text"))
         .join(keepMin, Seq("h", "doc_id")).drop("h")
         .select($"doc_id", $"lang", $"n_chars",
-          split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+").as("ws"))
+          TextQueries.words($"text").as("ws"))
         .staged
       import org.apache.spark.sql.GraftColumnBridge
       // ONE token-grain pass serves BOTH gate statistics: quality's
@@ -530,7 +530,7 @@ object CurationQueries {
     */
   private def tokenCounts(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    docs.select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+    docs.select($"doc_id", explode(TextQueries.words($"text")).as("tok"))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_tokens"))
   }
 
@@ -702,7 +702,7 @@ object CurationQueries {
     import spark.implicits._
     val docs = Tables(spark, dir).documents
     val tt = docs
-      .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+      .select($"doc_id", explode(TextQueries.words($"text")).as("tok"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tok"), countDistinct($"tok").as("n_dis"))
     val lab = docs.join(tt, "doc_id").select(

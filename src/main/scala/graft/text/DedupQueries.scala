@@ -358,7 +358,7 @@ object DedupQueries {
     // hex digit value: conv(hexchar, 16, 10); same result as the
     // oracle's strpos-in-alphabet — only outputs must match, not calls
     val toks = docs
-      .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+      .select($"doc_id", explode(TextQueries.words($"text")).as("tok"))
       .select($"doc_id", md5($"tok").as("h"))
     def bitval(b: Int) = {
       val digit = conv(substr($"h", lit(1 + b / 4), lit(1)), 16, 10)
@@ -490,7 +490,7 @@ object DedupQueries {
       when($"doc_id" % 3 === 0, concat(lit(Boiler + " "), $"text"))
         .otherwise($"text").as("text"))
     val chunks = base
-      .withColumn("w", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+"))
+      .withColumn("w", TextQueries.words($"text"))
       .select($"doc_id", explode(expr(
         s"""transform(
            |  sequence(0, cast(ceil(size(w) / $ChunkTokens.0) as int) - 1),
@@ -631,7 +631,7 @@ object DedupQueries {
     (spark, dir) =>
       import spark.implicits._
       val toks = Tables(spark, dir).documents
-        .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+        .select($"doc_id", explode(TextQueries.words($"text")).as("tok"))
       val typo = toks.select(
         when($"doc_id" % 7 === 0 && length($"tok") >= 5,
           expr("substring(tok, 2)"))
@@ -738,7 +738,7 @@ object DedupQueries {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables(spark, dir).documents
       .select($"doc_id",
-        posexplode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as(Seq("pos", "tok")))
+        posexplode(TextQueries.words($"text")).as(Seq("pos", "tok")))
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
     val marked = toks.withColumn("chunk",
       sum((conv(substring(md5($"tok"), 1, 2), 16, 10).cast("int") % 8 === 0)

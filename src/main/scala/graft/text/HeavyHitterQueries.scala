@@ -76,7 +76,7 @@ object HeavyHitterQueries {
   private def stream(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val organic = docs
-      .withColumn("w", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+"))
+      .withColumn("w", TextQueries.words($"text"))
       .select(explode(bigrams(col("w"))).as("bg"))
     Plants.foldLeft(organic) { case (acc, (key, m, copies)) =>
       acc.unionByName(docs.filter($"doc_id" % m === 0)
@@ -188,7 +188,7 @@ object HeavyHitterQueries {
     import spark.implicits._
     val docs = Tables(spark, dir).documents
     val bg = docs
-      .withColumn("w", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+"))
+      .withColumn("w", TextQueries.words($"text"))
       .select(explode(bigrams(col("w"))).as("bg"))
     def bucket(key: Column, r: Int): Column =
       conv(substring(md5(concat(lit(r.toString), lit("|"), key)), 1, 13),

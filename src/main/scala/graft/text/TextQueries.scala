@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,10 +16,16 @@ import graft.queries.GraftQuery
   */
 object TextQueries {
 
+  /** The Spark side's one whitespace tokenizer: `c` trimmed, then split
+    * on runs of the six ASCII whitespace characters — the split the
+    * DuckDB twins spell as `string_split_regex(trim(text), ...)`.
+    */
+  def words(c: Column): Column = split(trim(c), "[ \\t\\n\\x0B\\f\\r]+")
+
   /** Word tokens, whitespace-split after trim (empty-safe). */
   private def tokens(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
-    df.select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("tok"))
+    df.select($"doc_id", explode(words($"text")).as("tok"))
   }
 
   /** q12a — token counting: per-doc token totals, distinct counts,
@@ -285,7 +291,7 @@ object TextQueries {
     // after explode. The HOF twin lives in shinglesHof for the
     // parity spec.
     docs
-      .select($"doc_id", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+").as("toks"))
+      .select($"doc_id", words($"text").as("toks"))
       .select($"doc_id", explode(GraftColumnBridge.column(
         graft.functions.WordNGrams(
           GraftColumnBridge.expression($"toks"), 3))).as("sh"))
@@ -301,7 +307,7 @@ object TextQueries {
     // the step defaults to -1 when start > stop, and element_at(_, 0)
     // throws — so short docs must never reach the generator.
     docs
-      .select($"doc_id", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+").as("toks"))
+      .select($"doc_id", words($"text").as("toks"))
       .select($"doc_id", explode(expr(
         """CASE WHEN size(toks) >= 3 THEN
           |  transform(sequence(1, size(toks) - 2),

@@ -59,7 +59,7 @@ object TfIdfQueries {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(spark, dir).documents
     val tf = docs
-      .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
+      .select($"doc_id", explode(TextQueries.words($"text")).as("term"))
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
     // df aggregates tf's COUNT as well as its rows (cf = collection
@@ -221,7 +221,7 @@ object TfIdfQueries {
     // scan+explode+count exactly once; at 100 TB this is the standard
     // inverted-index materialization every retrieval system pays.
     val tf = docs
-      .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
+      .select($"doc_id", explode(TextQueries.words($"text")).as("term"))
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
       .staged

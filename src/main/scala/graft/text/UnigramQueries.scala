@@ -66,7 +66,7 @@ object UnigramQueries {
     // plans/r17/q12r_unigram_logprob_before.txt) — the q12s staging
     // pattern applies: (doc, term) grain ≪ corpus, materialize once.
     val tf = docs
-      .select($"doc_id", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
+      .select($"doc_id", explode(TextQueries.words($"text")).as("term"))
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"))
       .staged
@@ -193,7 +193,7 @@ object UnigramQueries {
     // materialized form. The corpus is tokenized exactly once by
     // construction, not by optimizer luck.
     val tfs = docs
-      .select($"source", explode(split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
+      .select($"source", explode(TextQueries.words($"text")).as("term"))
       .groupBy($"source", $"term")
       .agg(count(lit(1)).as("cfs"))
       .staged
@@ -260,7 +260,7 @@ object UnigramQueries {
     import spark.implicits._
     val docs = Tables(spark, dir).documents
     val tf = docs
-      .select($"doc_id", split(trim($"text"), "[ \\t\\n\\x0B\\f\\r]+").as("ws"))
+      .select($"doc_id", TextQueries.words($"text").as("ws"))
       .select($"doc_id", explode(expr(
         """transform(slice(ws, 1, size(ws) - 1),
           |  (x, i) -> struct(x AS w1, ws[i + 1] AS w2))""".stripMargin))

@@ -18,16 +18,17 @@ object GraftColumnBridge {
     spark.sessionState.functionRegistry
 
   /** Build a DataFrame from an RDD of catalyst [[InternalRow]]s
-    * without the external-Row round trip (DistributedRank/PrefixSum's
-    * scale path): `createDataFrame(RDD[Row])` pays a full RowEncoder
-    * serialization per row, while the physical scan of this form
-    * (`RDDScanExec`) applies one codegen'd UnsafeProjection — rows may
-    * be [[JoinedRow]]/GenericInternalRow wrappers consumed
-    * element-wise, no copies needed.
+    * without the external-Row round trip. Its one caller is
+    * `PrefixSum.scan`, the two-pass operator behind PrefixSum and
+    * DistributedRank: `createDataFrame(RDD[Row])` pays a full
+    * RowEncoder serialization per row, while the physical scan of this
+    * form (`RDDScanExec`) applies one codegen'd UnsafeProjection —
+    * rows may be reused [[JoinedRow]] wrappers consumed element-wise,
+    * no copies needed.
     *
     * Invariant (callers must keep it): the RDD is consumed ONLY by
     * that per-element projection. The emitted rows alias buffers the
-    * producer reuses (DistributedRank's and PrefixSum's sorter rows),
+    * producer reuses (the scan's sorter rows and its one JoinedRow),
     * so any operation that holds a row past the next `next()` call —
     * persist/cache, zipPartitions, a debugging collect, any buffering
     * iterator placed between producer and scan — silently corrupts
@@ -41,9 +42,17 @@ object GraftColumnBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(catalystRows, schema)
 
+  /** Catalyst's NaN / -0.0 normalization of a (possibly nested)
+    * floating value — the rewrite the optimizer applies to grouping
+    * and join keys; identity for types without floats. Used for
+    * `PrefixSum.scan`'s group keys.
+    */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Pin a (possibly sort-)column's null ordering to NULLS LAST at
-    * the ColumnNode level (used by DistributedRank/PrefixSum's
-    * RDD-boundary orderings — NULL_CONTRACT.md). A Column's sort
+    * the ColumnNode level (used by `PrefixSum.scan`'s RDD-boundary
+    * ordering — NULL_CONTRACT.md). A Column's sort
     * state is an `internal.SortOrder` COLUMN NODE, not a catalyst
     * SortOrder: converting via [[expression]] and pattern-matching
     * catalyst yields a `ColumnNodeExpression` wrapper that matches

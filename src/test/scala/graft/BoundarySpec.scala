@@ -68,9 +68,10 @@ class BoundarySpec extends SparkTestBase {
   }
 
   /** n < k edge for ntile(100): every nation has < 100 customers, so
-    * band == rank — asserted for BOTH the window form (q3a) and the
-    * DistributedRank formula (q3a_dist), the two implementations the
-    * DuckDB twin cross-checks.
+    * band == rank — asserted for BOTH the window form (q3a) and
+    * DistributedRank's NTILE `CASE` over the scan's (position, group
+    * size) (q3a_dist), the two implementations the DuckDB twin
+    * cross-checks.
     */
   test("q3a and q3a_dist agree on the n<k ntile edge per nation") {
     for (q <- Seq("q3a_rank_ntile", "q3a_rank_ntile_dist")) {

@@ -9,36 +9,49 @@ class DistributedRankSpec extends SparkTestBase {
 
   // Skewed fixture: one hot group with 1000 rows, two small groups.
   // Values are shuffled deterministically so range sampling sees an
-  // unsorted input, as it would in production.
+  // unsorted input, as it would in production. The alternative group
+  // keys cycle NaN, -0.0, 0.0 and 1.0, bare (`d`) and nested in an
+  // array (`a`) and a struct (`s`).
   private lazy val skewed = {
     import spark.implicits._
     val rows =
       (0 until 1000).map(i => ("hot", (i * 7919) % 1000, s"r$i")) ++
         (0 until 5).map(i => ("cold_a", i, s"a$i")) ++
         (0 until 3).map(i => ("cold_b", i, s"b$i"))
-    rows.toDF("grp", "score", "id")
+    val ds = Seq(Double.NaN, -0.0, 0.0, 1.0)
+    rows.zipWithIndex.map { case ((g, score, id), i) =>
+      val d = ds(i % 4)
+      (g, score, id, d, Seq(d, (i % 2).toDouble), (d, g))
+    }.toDF("grp", "score", "id", "d", "a", "s")
   }
 
+  /** Group keys group the way `Window.partitionBy` groups them: NaN
+    * with NaN, -0.0 with 0.0 (Catalyst's float normalization), arrays
+    * and structs by value — floats nested inside them included.
+    */
   test("rank/ntile match the window form on a skewed fixture") {
     import spark.implicits._
-    val w = Window.partitionBy($"grp").orderBy($"score".desc, $"id")
-    val expected = skewed
-      .withColumn("rnk", rank().over(w).cast("long"))
-      .withColumn("band", ntile(7).over(w))
-    val got = DistributedRank.rankNtile(
-      skewed, Seq("grp"), Seq($"score".desc, $"id"),
-      ntiles = 7, rankName = "rnk", ntileName = "band",
-      numPartitions = 8)
-    assert(got.count() == expected.count())
-    assert(expected.exceptAll(got).count() == 0 &&
-      got.exceptAll(expected).count() == 0)
+    for (g <- Seq("grp", "d", "a", "s")) {
+      val w = Window.partitionBy(col(g)).orderBy($"score".desc, $"id")
+      val expected = skewed
+        .withColumn("rnk", rank().over(w).cast("long"))
+        .withColumn("band", ntile(7).over(w))
+      val got = DistributedRank.rankNtile(
+        skewed, Seq(g), Seq($"score".desc, $"id"),
+        ntiles = 7, rankName = "rnk", ntileName = "band",
+        numPartitions = 8)
+      assert(got.count() == expected.count(), s"group key $g")
+      assert(expected.exceptAll(got).count() == 0 &&
+        got.exceptAll(expected).count() == 0, s"group key $g")
+    }
   }
 
-  /** The r16 NULLS LAST normalization (DistributedRank.nullsLast):
-    * the operator's sort hides behind an RDD boundary the
-    * NullOrderCensus cannot see, so the operator itself pins
-    * DuckDB's default — a nullable ASC order value ranks LAST, not
-    * Spark's default FIRST. Mutation m52 flips the pin → red.
+  /** The NULLS LAST normalization (`GraftColumnBridge.nullsLast`,
+    * applied inside `PrefixSum.scan`): the operator's sort hides
+    * behind an RDD boundary the NullOrderCensus cannot see, so the
+    * operator itself pins DuckDB's default — a nullable ASC order
+    * value ranks LAST, not Spark's default FIRST. Mutation m52 flips
+    * the pin → red.
     */
   test("a NULL ASC order value ranks LAST (DuckDB default), not first") {
     import spark.implicits._

@@ -132,9 +132,9 @@ class PlanAuditSpec extends SparkTestBase {
     * no matter the input volume — the q14* md5-medoid seed device and
     * q25c's top-20 re-rank. Every OTHER global window needs an entry
     * here naming the grain that caps its cardinality independent of
-    * data volume. Data-scale global scans use PrefixSum /
-    * DistributedRank instead (q28, q3a_dist, q9t's ntile) — that
-    * design rule is what this test pins.
+    * data volume. Data-scale global scans use PrefixSum's two-pass
+    * scan instead — directly or through DistributedRank (q28,
+    * q3a_dist, q9t's ntile) — that design rule is what this test pins.
     */
   private val globalWindowAllowed: Map[String, String] = Map(
     "q3b_moving_avg_ytd" -> "day grain after pre-agg (~2.4k rows)",

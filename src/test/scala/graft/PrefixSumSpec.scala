@@ -57,7 +57,8 @@ class PrefixSumSpec extends SparkTestBase {
     assert(out == Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 5L, 5L -> 5L))
   }
 
-  /** The r16 NULLS LAST normalization (shared with DistributedRank):
+  /** The NULLS LAST normalization (the scan behind both PrefixSum and
+    * DistributedRank):
     * a NULL ORDER key sorts last, so its value enters no real row's
     * exclusive prefix — under Spark's nulls-first default it would
     * silently enter EVERY row's prefix while the DuckDB twins add it

@@ -31,22 +31,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     }.toMap
   }
 
-  test("driver-side collect() only at the seven documented bounded sites") {
-    // every entry's bound, as verified in the r10 judge audit:
+  test("driver-side collect() only at the five documented bounded sites") {
+    // every entry's bound:
     //   PcaQueries       d x d covariance matrix (d = embedding dim)
     //   SimilarityQueries limit(1) dimensionality probe
-    //   DistributedRank / PrefixSum  per-partition count pass (one row
-    //                    per partition, bounded by parallelism;
-    //                    DistributedRank has 2 sites since r18 — the
-    //                    InternalRow rewrite specialized the ungrouped
-    //                    count pass into its own branch, both the same
-    //                    O(partitions + groups) pass-1 collect)
+    //   PrefixSum        the two-pass scan's pass-1 sums, one row per
+    //                    (partition, group): O(partitions + groups)
     //   Sources          file-listing / distinct-year audits, bounded
     //                    by file and calendar cardinality (2 sites)
     val expected = Map(
       "text/PcaQueries.scala" -> 1,
       "text/SimilarityQueries.scala" -> 1,
-      "operators/DistributedRank.scala" -> 2,
       "operators/PrefixSum.scala" -> 1,
       "sources/Sources.scala" -> 2)
     assert(countsOf("""\.collect\(\)""") === expected)
@@ -70,12 +65,12 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test("RDD drop-downs only inside the two-pass partition operators") {
-    // DistributedRank/PrefixSum are BUILT on per-partition passes
-    // (SURVEY §9); Tables uses rdd.getNumPartitions as a plan probe.
-    // Everything else stays in the Dataset API where Catalyst can see.
+    // PrefixSum's scan (behind DistributedRank too) is BUILT on
+    // per-partition passes (SURVEY §9); Tables uses
+    // rdd.getNumPartitions as a plan probe. Everything else stays in
+    // the Dataset API where Catalyst can see.
     val files = countsOf("""\.rdd\b""").keySet
-    val allowed = Set("operators/DistributedRank.scala",
-      "operators/PrefixSum.scala", "Tables.scala")
+    val allowed = Set("operators/PrefixSum.scala", "Tables.scala")
     assert(files.subsetOf(allowed), s"unexpected .rdd usage in ${files -- allowed}")
   }
 

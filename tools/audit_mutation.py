@@ -515,10 +515,11 @@ MUTATIONS = [
               "ordering sites become invisible to the ratchet",
          subs=[('        case so if so.nullOrdering == NullsFirst && so.child.nullable =>',
                 '        case so if so.nullOrdering == NullsFirst && !so.child.nullable =>')]),
-    # DistributedRank/PrefixSum's internal sort hides behind an RDD
-    # boundary the census cannot see, so the operators normalize
-    # their null ordering to NULLS LAST (DuckDB's default) at the
-    # ColumnNode level. A plausible "preserve the caller's ordering"
+    # PrefixSum.scan's internal sort (behind both PrefixSum and
+    # DistributedRank) hides behind an RDD boundary the census cannot
+    # see, so the scan normalizes its null ordering to NULLS LAST
+    # (DuckDB's default) at the ColumnNode level — one call guards
+    # both operators. A plausible "preserve the caller's ordering"
     # slip restores Spark's nulls-first asc default — a nullable ASC
     # order value then ranks FIRST on the Spark side only. Clean
     # sf0.01 never feeds the operators a null ordering value — gated
