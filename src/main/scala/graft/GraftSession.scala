@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the test base build their session here, so core count, shuffle
   * width, time zone, logging and [[GraftConf.tune]] cannot drift apart
   * between them. Also hosts the one stage listener ([[StageAcc]]) the
-  * measurement mains and scale specs read shuffle and spill from.
+  * measurement mains and scale specs read shuffle and spill from, and
+  * the one parser of the mains' name selections ([[selection]]).
   */
 object GraftSession {
 
@@ -37,6 +38,20 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     GraftConf.tune(spark)
     spark
+  }
+
+  /** A tool main's comma-separated selection, in the given order. It
+    * must name at least one entry and every name must be in `known`,
+    * so a typo fails the run instead of timing or dumping nothing.
+    */
+  private[graft] def selection(
+      csv: String, known: Seq[String], what: String): Seq[String] = {
+    val names = csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = names.filterNot(known.contains)
+    require(unknown.isEmpty, s"unknown $what: ${unknown.mkString(", ")}; " +
+      s"known: ${known.sorted.mkString(", ")}")
+    require(names.nonEmpty, s"no $what selected")
+    names
   }
 
   /** Sums every completed stage's shuffle and spill metrics. */

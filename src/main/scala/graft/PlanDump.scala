@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: PlanDump <sfDir> <outDir> [suffix] [name,...]
   *   - suffix (default ""): appended to the file name, e.g. "_before"
-  *   - names (default all): the queries to dump
+  *   - names (default all): the queries to dump; an unknown name
+  *     fails the run
   *
   * Planning runs no query job, so it cannot perturb a concurrent
   * timing run's data — it does share CPU, so don't run it during a
@@ -18,8 +19,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val suffix = args.lift(2).getOrElse("")
-    val names: Option[Set[String]] =
-      args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val names: Option[Set[String]] = args.lift(3).map(
+      GraftSession.selection(_, SparkEntry.queries.keys.toSeq, "queries").toSet)
     val spark = GraftSession.session()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)

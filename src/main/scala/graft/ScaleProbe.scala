@@ -209,10 +209,7 @@ object ScaleProbe {
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val selected = args.headOption.fold(families) { a =>
-      val names = a.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val unknown = names.filterNot(n => families.exists(_.name == n))
-      require(unknown.isEmpty, s"unknown families: ${unknown.mkString(", ")}; " +
-        s"known: ${families.map(_.name).mkString(", ")}")
+      val names = GraftSession.selection(a, families.map(_.name), "families")
       families.filter(f => names.contains(f.name))
     }
     val shards = selected.flatMap(_.shards).distinct

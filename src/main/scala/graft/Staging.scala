@@ -2,12 +2,20 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The ONE seam for intra-query staging (r18, verdict ask): every
-  * place the library materializes a multi-consumer intermediate —
-  * the q12y tf grain, q24h's purchase-grain band-join counts, q12k's
-  * token-array boundary, the ANN cell assignment, PageRank's
-  * per-iteration labels, the roundtrip read-backs — routes through
-  * [[stage]] so the mechanism is swappable in one line.
+/** The ONE way library code holds an intermediate: every place the
+  * library materializes a multi-consumer frame — the q12y tf grain,
+  * q24h's purchase-grain band-join counts, q12k's token-array
+  * boundary, the ANN cell assignment, the graph builds and PageRank's
+  * per-iteration ranks, connected components' per-round labels, q9j's
+  * training and prediction frames, the roundtrip read-backs — routes
+  * through [[stage]] so the mechanism is swappable in one line.
+  * `src/main` has no `.cache()`/`.persist()` and no memo that keeps a
+  * staged frame past the call (SourceHygieneSpec pins both).
+  *
+  * Lifetime: a staged frame belongs to the call that staged it. It is
+  * never stored across calls, so once the caller drops the result,
+  * its blocks are reclaimed, and a later call rebuilds from the
+  * source instead of reading blocks a lost executor took with it.
   *
   * Current mechanism: EAGER `localCheckpoint`. The contract and its
   * trade, explicitly:

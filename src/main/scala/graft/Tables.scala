@@ -81,28 +81,14 @@ object Tables {
     * scan's stage. A conditional round-robin repartition splits the
     * stage: the 1-task scan stays cheap, the compute fans across all
     * cores. At 100 TB the scan already has >= cores partitions and
-    * this is a NO-OP — no shuffle is added to a well-partitioned read
-    * (the partition-count probe only lists files; it runs no job).
+    * this is a NO-OP — no shuffle is added to a well-partitioned read.
+    * The partition-count probe plans the scan on the driver on every
+    * call (it lists files and runs no job).
     */
   def fanOut(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (probedPartitions(df) < cores) df.repartition(cores) else df
+    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }
-
-  /** `df.rdd.getNumPartitions` runs analysis + physical planning and
-    * builds the RDD lineage on the DRIVER every call (no job, but
-    * repeated per table access). The probe result is a pure function
-    * of the resolved plan, so memoize it per (session, canonicalized
-    * plan): repeat accessors hit the map. A hash collision could at
-    * worst skip/add a fan-out — a performance choice, never a
-    * correctness one.
-    */
-  private val probeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Int), Int]
-  private def probedPartitions(df: DataFrame): Int =
-    probeCache.getOrElseUpdate(
-      (df.sparkSession, df.queryExecution.analyzed.semanticHash()),
-      df.rdd.getNumPartitions)
 
   /** Normalize an events frame's `ts` to session-TZ TIMESTAMP whatever
     * on-disk generation it came from (see `Tables.events` Scaladoc).

@@ -25,9 +25,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val queries = SparkEntry.queries
     val names = args.lift(2).fold(queries.keys.toSeq.sorted)(
-      _.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    val unknown = names.filterNot(queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      GraftSession.selection(_, queries.keys.toSeq, "queries"))
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.session()
     names.foreach { name =>

@@ -23,85 +23,44 @@ import graft.Staging.Stageable
   * `0.15/N + 0.85·(S/1e15)` expression tree in both engines — the
   * whole 8-round chain matches bitwise (the q14j device applied to
   * graphs).
+  *
+  * Every intermediate — the pair frame, the edge lists, the per-round
+  * rank and distance frames — goes through [[graft.Staging.stage]]
+  * and belongs to the query call that built it: nothing is memoized
+  * across calls, so a lost staged block costs one call, never the
+  * session.
   */
 object GraphQueries {
 
   private val Iters = 8
 
-  /** Co-purchase WEIGHTED pair frame (s < t, w = co-occurrence count),
-    * built ONCE per (session, dir) and localCheckpointed — q24e/f/g
-    * all consume the same basket-device build, and the one-off ledger
-    * showed the build dominating every graph query (q24g's two r10
-    * optimization A/Bs washed because of it). This is the q12k/probe
-    * memoization device applied to graphs. The frame is edge-grain
-    * (≪ lineitem), so pinning its checkpoint blocks for the session is
-    * bounded; q24f/g's distinct pair set is exactly the weighted
-    * frame's key set (groupBy already dedups), so sharing is
-    * semantically lossless.
+  /** Co-purchase WEIGHTED pair frame (s < t, w = co-occurrence
+    * count), built and staged on every call: q24e/f/g each consume
+    * their own build, and q24f/g's distinct pair set is exactly this
+    * frame's key set (groupBy already dedups).
     *
-    * Build shape (unchanged from the per-query builds): no
-    * `.distinct()` before the basket build — collect_set dedups within
-    * each order, so a separate pair-distinct pass would only add a
-    * full lineitem-grain shuffle. No scan fan-out either: the heavy
-    * work (collect_set, pair explode, count) all runs AFTER the
-    * orderkey exchange — already cores-wide — so fanning the 1-task
-    * scan measured a wash (r10 A/B).
+    * Build shape: no `.distinct()` before the basket build —
+    * collect_set dedups within each order, so a separate pair-distinct
+    * pass would only add a full lineitem-grain shuffle. No scan
+    * fan-out either: the heavy work (collect_set, pair explode, count)
+    * all runs AFTER the orderkey exchange — already cores-wide — so
+    * fanning the 1-task scan measured a wash (r10 A/B).
     */
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), DataFrame]
-
-  /** Cheap content fingerprint of the lineitem source: file listing +
-    * lengths + mtimes via the Hadoop FS (works on any FS the session
-    * can read). Keys the pair-frame cache so a live session that
-    * re-reads a dir whose parquet was REWRITTEN (fixture regeneration,
-    * re-ingest) recomputes instead of silently serving stale edges.
-    * One listStatus per graph query — file-count grain, no data read.
-    *
-    * Granularity limit (deliberate): the fingerprint is name+length+
-    * mtime, not content bytes — an in-place rewrite that preserves all
-    * three would still serve the cached frame. Spark's own overwrite
-    * mode always generates fresh part-file names (and a manual
-    * same-name rewrite still moves the millisecond mtime), so the
-    * residual window is a byte-patched file with a forged mtime —
-    * accepted: closing it would mean hashing the data, which is the
-    * recompute the cache exists to avoid.
-    */
-  private def lineitemFingerprint(
-      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, "lineitem.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|") // the listing itself (tiny) — no lossy hash
-  }
-
   private[graft] def coPurchasePairs(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val fp = lineitemFingerprint(spark, dir)
-    // evict on access: entries for stopped sessions pin their whole
-    // session graph (and checkpoint blocks) for the JVM's life, and a
-    // stale-fingerprint entry for this (session, dir) is dead weight
-    // (its checkpoint blocks stay pinned until the session ends — the
-    // bounded cost of rewriting a warehouse under a live session)
-    pairCache.filterInPlace { case ((s, d, f), _) =>
-      !s.sparkContext.isStopped && !(s.eq(spark) && d == dir && f != fp)
-    }
-    pairCache.getOrElseUpdate((spark, dir, fp), {
-      import spark.implicits._
-      Tables(spark, dir).lineitem
-        .select($"l_orderkey", $"l_partkey")
-        .groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("bs"))
-        .select(explode(expr(
-          """flatten(transform(bs, (x, i) ->
-            |  transform(slice(bs, i + 2, size(bs)), y ->
-            |    struct(x AS s, y AS t))))""".stripMargin)).as("p"))
-        .select($"p.s", $"p.t")
-        .groupBy($"s", $"t")
-        .agg(count(lit(1)).as("w"))
-        .staged
-    })
+    import spark.implicits._
+    Tables(spark, dir).lineitem
+      .select($"l_orderkey", $"l_partkey")
+      .groupBy($"l_orderkey")
+      .agg(sort_array(collect_set($"l_partkey")).as("bs"))
+      .select(explode(expr(
+        """flatten(transform(bs, (x, i) ->
+          |  transform(slice(bs, i + 2, size(bs)), y ->
+          |    struct(x AS s, y AS t))))""".stripMargin)).as("p"))
+      .select($"p.s", $"p.t")
+      .groupBy($"s", $"t")
+      .agg(count(lit(1)).as("w"))
+      .staged
   }
 
   /** Node-grain frames (rank, degree, frontier distance) are ≪ edges
@@ -377,19 +336,16 @@ object GraphQueries {
     import spark.implicits._
     val e = edges.select(col(s).as("__s"), col(t).as("__t"))
       .staged // consumed every round
-    // Vertex-broadcast rounds were an r10 wash — but only because the
-    // per-query graph BUILD dominated then. With the build now shared
-    // (coPurchasePairs memoization) the per-round cost is visible, and
-    // this is exactly pageRank's situation: both join inputs are
-    // checkpointed LogicalRDDs, so AQE has no shuffle stats and plans
-    // an SMJ that RE-SORTS the full edge list every round. Broadcast
-    // the node-grain frontier explicitly while the graph is below
+    // Both join inputs are checkpointed LogicalRDDs (pageRank's
+    // situation), so AQE has no shuffle stats and would plan an SMJ
+    // that RE-SORTS the full edge list every round. Broadcast the
+    // node-grain frontier explicitly while the graph is below
     // [[BroadcastNodeLimit]] (the frontier is ≤ the node set ≪ edges);
     // past the limit the co-keyed shuffle join is the scale shape.
     // Re-A/B (r11, fresh-JVM min-of-5, standalone, idle, back-to-back):
     // SMJ rounds 6.09 s → broadcast rounds 2.16 s (2.8×) at sf0.1.
-    // The second r10 wash (pre-partition+pre-sort of e) stays retired:
-    // the broadcast path eliminates the per-round sort entirely.
+    // Pre-partitioning and pre-sorting e instead was a wash (r10): the
+    // broadcast path eliminates the per-round sort entirely.
     // The broadcast frame is DIST — node-grain — so the gate counts
     // dist itself, per round: it is checkpointed every round, so the
     // count is a cheap RDD count with no shuffle. (An edge-row gate
@@ -425,7 +381,7 @@ object GraphQueries {
     * from the seed set {parts with partkey % 50 = 0} (a deterministic
     * integer rule both engines apply identically), 4 rounds. The
     * "how far is every item from a campaign item?" recommendation
-    * feature. Graph build shared with q24e/q24f (basket device).
+    * feature. Graph build: [[coPurchasePairs]], as in q24e/q24f.
     */
   val q24gBfsHops: GraftQuery = GraftQuery(
     "q24g_bfs_hops",

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.PrefixSum
 import graft.queries.GraftQuery
+import graft.Staging.Stageable
 
 /** spark.ml equivalents of the reference's sklearn estimators
   * (ref `PythonAnalysis.py:281-302, 346-354`, SURVEY §2.9 M1–M6):
@@ -142,42 +143,35 @@ object MlQueries {
   val q9jChurnModel: GraftQuery = GraftQuery.noOracle("q9j_churn_model") {
     (spark, dir) =>
       import spark.implicits._
-      val data = withBalancedWeights(churnDataset(spark, dir)).cache()
-      try {
-        // stratified 70/30, seed 42 (per-class sampleBy + anti-join)
-        val fractions = Map(0.0 -> 0.7, 1.0 -> 0.7)
-        val train = data.stat.sampleBy("label", fractions, 42L)
-        val test  = data.join(train.select($"c_custkey".as("tk")),
-          $"c_custkey" === $"tk", "left_anti")
-        val assembler = new VectorAssembler()
-          .setInputCols(FeatureCols.toArray).setOutputCol("features")
-        val rf = new RandomForestClassifier()
-          .setNumTrees(200).setSeed(42L).setWeightCol("w")
-          .setLabelCol("label").setFeaturesCol("features")
-        val model = rf.fit(assembler.transform(train))
-        // pred feeds 6 actions (4 counts + evaluator AUC + relational
-        // AUC); cache for their duration only — unpersisted below so no
-        // CacheManager entry outlives the query (CacheSpec invariant).
-        val pred  = model.transform(assembler.transform(test)).cache()
-        val (tp, fp, fn, tn, auc, aucRel) = try {
-          val tp = pred.filter($"label" === 1.0 && $"prediction" === 1.0).count()
-          val fp = pred.filter($"label" === 0.0 && $"prediction" === 1.0).count()
-          val fn = pred.filter($"label" === 1.0 && $"prediction" === 0.0).count()
-          val tn = pred.filter($"label" === 0.0 && $"prediction" === 0.0).count()
-          val auc = new BinaryClassificationEvaluator()
-            .setLabelCol("label").setMetricName("areaUnderROC").evaluate(pred)
-          val aucRel = pairwiseAuc(pred.select(
-            org.apache.spark.ml.functions.vector_to_array($"probability")(1)
-              .as("score"), $"label"))
-          (tp, fp, fn, tn, auc, aucRel)
-        } finally pred.unpersist()
-        val importances = FeatureCols.zip(model.featureImportances.toArray)
-        // exact curve (no evaluator downsampling) → demand equality to
-        // summation-order noise; binned curve → the 0.005 allowance
-        val aucTol = if (aucRel.exists(_._2 <= 1000L)) 1e-9 else 0.005
-        churnVerdicts(tp, fp, fn, tn, auc, aucRel.map(_._1), importances,
-          aucTol).toDF("metric", "value", "ok")
-      } finally data.unpersist()
+      val data = withBalancedWeights(churnDataset(spark, dir)).staged
+      // stratified 70/30, seed 42 (per-class sampleBy + anti-join)
+      val fractions = Map(0.0 -> 0.7, 1.0 -> 0.7)
+      val train = data.stat.sampleBy("label", fractions, 42L)
+      val test  = data.join(train.select($"c_custkey".as("tk")),
+        $"c_custkey" === $"tk", "left_anti")
+      val assembler = new VectorAssembler()
+        .setInputCols(FeatureCols.toArray).setOutputCol("features")
+      val rf = new RandomForestClassifier()
+        .setNumTrees(200).setSeed(42L).setWeightCol("w")
+        .setLabelCol("label").setFeaturesCol("features")
+      val model = rf.fit(assembler.transform(train))
+      // pred feeds 6 actions (4 counts + evaluator AUC + relational AUC)
+      val pred = model.transform(assembler.transform(test)).staged
+      val tp = pred.filter($"label" === 1.0 && $"prediction" === 1.0).count()
+      val fp = pred.filter($"label" === 0.0 && $"prediction" === 1.0).count()
+      val fn = pred.filter($"label" === 1.0 && $"prediction" === 0.0).count()
+      val tn = pred.filter($"label" === 0.0 && $"prediction" === 0.0).count()
+      val auc = new BinaryClassificationEvaluator()
+        .setLabelCol("label").setMetricName("areaUnderROC").evaluate(pred)
+      val aucRel = pairwiseAuc(pred.select(
+        org.apache.spark.ml.functions.vector_to_array($"probability")(1)
+          .as("score"), $"label"))
+      val importances = FeatureCols.zip(model.featureImportances.toArray)
+      // exact curve (no evaluator downsampling) → demand equality to
+      // summation-order noise; binned curve → the 0.005 allowance
+      val aucTol = if (aucRel.exists(_._2 <= 1000L)) 1e-9 else 0.005
+      churnVerdicts(tp, fp, fn, tn, auc, aucRel.map(_._1), importances,
+        aucTol).toDF("metric", "value", "ok")
   }
 
   /** Verdict rows for the elasticity LR: each spark.ml scalar must

@@ -85,28 +85,6 @@ object Exact {
       sqrt(greatest(lit(0.0), n * sxx - sx * sx) / (n * (n - lit(1.0)))))
   }
 
-  /** Pearson correlation from exact decimal moments (same shape as
-    * the DuckDB twin, so bitwise reproducible — unlike built-in
-    * `corr`, whose summation order varies). Correlation is undefined
-    * when either side has zero variance, so both variance terms are
-    * guarded > 0 → NULL (the dstddev class: a constant column makes
-    * the denominator an exact 0, and raw 0/0 THROWS under ANSI on
-    * Spark while DuckDB answers NaN; the guard also absorbs the
-    * tiny-negative pure-rounding variance, where sqrt goes NaN vs
-    * THROW). Mirror the same CASE in any SQL twin.
-    */
-  def dcorr(x: Column, y: Column, scale: Int = 4): Column = {
-    val n   = count(lit(1)).cast(DoubleType)
-    val sx  = dsum(x, Scale)
-    val sy  = dsum(y, Scale)
-    val sxx = dsum(x * x, scale)
-    val syy = dsum(y * y, scale)
-    val sxy = dsum(x * y, scale)
-    val vx  = n * sxx - sx * sx
-    val vy  = n * syy - sy * sy
-    when(vx > 0 && vy > 0, (n * sxy - sx * sy) / (sqrt(vx) * sqrt(vy)))
-  }
-
   /** TPC-H style per-line revenue: extendedprice·(1−discount).
     * Per-row double arithmetic is deterministic; pair with dsum.
     */

@@ -17,9 +17,11 @@ import graft.Staging.Stageable
   * exchange), and the round count is the graph diameter — near-dup
   * graphs are unions of small cliques/chains, so a handful of rounds
   * at any corpus scale. The driver-side loop is iteration CONTROL
-  * only (a count per round); all data stays distributed, and caching
-  * is per-round with eager unpersist of the previous label set so
-  * lineage and storage stay O(1) across rounds.
+  * only (a count per round); all data stays distributed. The edge
+  * closure, the seed labels and every round's labels go through
+  * [[graft.Staging.stage]], so each round reads the previous round's
+  * materialized labels (lineage stays one round deep) and every staged
+  * frame is released once the call's result no longer references it.
   */
 object ConnectedComponents {
 
@@ -50,47 +52,32 @@ object ConnectedComponents {
     // self edge carries no information), but the LABEL set must cover
     // every endpoint in the input, or self-loop-only vertices vanish
     val sym = raw.unionByName(raw.select($"dst".as("src"), $"src".as("dst")))
-      .filter($"src" =!= $"dst").distinct().cache()
+      .filter($"src" =!= $"dst").distinct().staged
 
     var labels = raw.select($"src".as("id"))
       .unionByName(raw.select($"dst".as("id"))).distinct()
-      .select($"id", $"id".as("component")).cache()
+      .select($"id", $"id".as("component")).staged
     var converged = false
     var iter = 0
-    try {
-      while (!converged && iter < maxIter) {
-        // neighbor labels flow along edges; keep own label in the race
-        val next = sym
-          .join(labels, $"src" === $"id")
-          .select($"dst".as("id"), $"component")
-          .unionByName(labels)
-          .groupBy($"id").agg(min($"component").as("component"))
-          .cache()
-        val changed =
-          try next.as("n")
-            .join(labels.as("o"), $"n.id" === $"o.id")
-            .filter($"n.component" =!= $"o.component")
-            .count()
-          catch { case t: Throwable => next.unpersist(); throw t }
-        labels.unpersist()
-        labels = next
-        converged = changed == 0
-        iter += 1
-      }
-      require(converged,
-        s"connected components did not converge within $maxIter rounds " +
-          "(graph diameter exceeds the bound — raise maxIter)")
-      // Materialize with the iterative lineage CUT (localCheckpoint is
-      // eager here), then drop the loop's cache: the result must not
-      // stay pinned in the session's cache manager for the life of the
-      // session (an O(vertices) leak per call), and it must not carry
-      // an N-round join lineage that an uncached consumer would replay.
-      // Checkpoint blocks are released by the ContextCleaner once the
-      // caller drops the DataFrame.
-      (labels.staged, iter)
-    } finally {
-      labels.unpersist()
-      sym.unpersist()
+    while (!converged && iter < maxIter) {
+      // neighbor labels flow along edges; keep own label in the race
+      val next = sym
+        .join(labels, $"src" === $"id")
+        .select($"dst".as("id"), $"component")
+        .unionByName(labels)
+        .groupBy($"id").agg(min($"component").as("component"))
+        .staged
+      val changed = next.as("n")
+        .join(labels.as("o"), $"n.id" === $"o.id")
+        .filter($"n.component" =!= $"o.component")
+        .count()
+      labels = next
+      converged = changed == 0
+      iter += 1
     }
+    require(converged,
+      s"connected components did not converge within $maxIter rounds " +
+        "(graph diameter exceeds the bound — raise maxIter)")
+    (labels, iter)
   }
 }

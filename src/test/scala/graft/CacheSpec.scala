@@ -2,11 +2,10 @@ package graft
 
 /** Cache-neutrality invariant: library queries must not leave
   * session-lifetime entries in the CacheManager. Multi-consumer
-  * staging inside an operator materializes via eager
-  * `localCheckpoint` (blocks reclaimed by the ContextCleaner when the
-  * plan goes unreachable) or caches strictly within the call and
-  * unpersists before returning — never a bare `.cache()` whose entry
-  * outlives the query. This pins the round-7 verdict's last two
+  * staging inside an operator materializes via `Staging.stage` (eager
+  * `localCheckpoint`; blocks reclaimed by the ContextCleaner when the
+  * plan goes unreachable) — never a `.cache()` whose entry outlives
+  * the query. This pins the round-7 verdict's last two
   * corpus/member-scale cache pins (q13b postings, q10a/q10b activity)
   * plus the audited small ones (q9b moment row, q9j predictions):
   * at 100 TB a shingle-grain pin evict-thrashes executor storage for
@@ -30,8 +29,8 @@ class CacheSpec extends SparkTestBase {
   }
 
   test("q13f (which re-runs q13b) pins no CacheManager entries") {
-    // ConnectedComponents caches per-round but unpersists eagerly —
-    // by return time the manager must be empty again.
+    // ConnectedComponents stages every round through Staging.stage,
+    // which never touches the CacheManager.
     assertCacheNeutral("q13f") {
       graft.text.DedupQueries.q13fDedupComponents.fn(spark, sfDir).collect()
     }

@@ -184,26 +184,39 @@ class GraphSpec extends SparkTestBase {
         (viaShuffle.toSet diff viaBroadcast.toSet)}")
   }
 
-  test("pair-frame cache serves cached on identical bytes, recomputes on rewrite") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graph_cache").toString
-    def writeLineitem(orders: Seq[(Long, Long)]): Unit =
-      orders.toDF("l_orderkey", "l_partkey")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/lineitem.parquet")
+  /** Writes `(l_orderkey, l_partkey)` rows as a fresh lineitem table. */
+  private def writeLineitem(dir: String, rows: Seq[(Long, Long)]): Unit =
+    rows.toDF("l_orderkey", "l_partkey")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/lineitem.parquet")
+
+  test("pair frame reflects a rewritten lineitem") {
+    val dir = java.nio.file.Files.createTempDirectory("graph_pairs").toString
     // one order with items {1,2,3} → 3 co-purchase pairs
-    writeLineitem(Seq((10L, 1L), (10L, 2L), (10L, 3L)))
-    val first = GraphQueries.coPurchasePairs(spark, dir)
-    assert(first.count() === 3L)
-    // identical bytes → the memoized frame itself comes back
-    assert(GraphQueries.coPurchasePairs(spark, dir) eq first)
+    writeLineitem(dir, Seq((10L, 1L), (10L, 2L), (10L, 3L)))
+    assert(GraphQueries.coPurchasePairs(spark, dir).count() === 3L)
     // REWRITE the warehouse under the live session: one order with
-    // items {1,2} → exactly 1 pair. A path-keyed cache would serve the
-    // stale 3-pair frame; the content fingerprint must recompute.
-    writeLineitem(Seq((20L, 1L), (20L, 2L)))
-    val second = GraphQueries.coPurchasePairs(spark, dir)
-    assert(second.count() === 1L,
-      "pair cache served stale edges after the source parquet was rewritten")
+    // items {1,2} → exactly 1 pair
+    writeLineitem(dir, Seq((20L, 1L), (20L, 2L)))
+    assert(GraphQueries.coPurchasePairs(spark, dir).count() === 1L,
+      "pair frame served stale edges after the source parquet was rewritten")
+  }
+
+  test("q24f recomputes after the staged blocks of an earlier call are lost") {
+    val dir = java.nio.file.Files.createTempDirectory("graph_lost").toString
+    // baskets {1,2,3}, {2,3,4}, {1,4}: triangles 123, 234, 124, 134
+    writeLineitem(dir, Seq((1L, 1L), (1L, 2L), (1L, 3L),
+      (2L, 2L), (2L, 3L), (2L, 4L), (3L, 1L), (3L, 4L)))
+    def run(): Seq[String] = GraphQueries.q24fTriangles.fn(spark, dir)
+      .collect().map(_.toString).toSeq.sorted
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val first = run()
+    // drop exactly the blocks that call staged, as an executor loss would
+    spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before.contains(id) }
+      .foreach { case (_, rdd) => rdd.unpersist(blocking = true) }
+    val second = run()
+    assert(first.nonEmpty && second === first)
   }
 
   test("iteration plan is equi-join + hash agg — no cartesian") {

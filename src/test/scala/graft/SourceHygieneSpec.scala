@@ -74,6 +74,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(files.subsetOf(allowed), s"unexpected .rdd usage in ${files -- allowed}")
   }
 
+  test("no cache/persist/unpersist code sites: Staging.stage holds every intermediate") {
+    // code only: a comment naming .cache() as the rejected
+    // alternative is not a call site
+    assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*\.(cache|persist|unpersist)\(""") ===
+      Map.empty[String, Int])
+  }
+
+  test("no process-global memo maps (TrieMap / ConcurrentHashMap)") {
+    // a map keyed by session or path outlives the calls that fill it:
+    // it pins stopped sessions and serves staged blocks that may be gone
+    assert(countsOf("""TrieMap|ConcurrentHashMap""") === Map.empty[String, Int])
+  }
+
   test("one session builder: SparkSession.builder( only in GraftSession") {
     // code lines only; a scaladoc usage example is not a second builder
     assert(countsOf("""(?m)^(?!\s*(\*|//)).*SparkSession\.builder\(""") ===
