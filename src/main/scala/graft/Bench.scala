@@ -7,7 +7,8 @@ package graft
   * Reported value = MIN over iterations of the per-iteration headline
   * total: single totals on a shared box carry ±20 % noise, and min-of-n
   * strips scheduler and IO interference from a CPU-bound measurement.
-  * Per-iteration totals and per-query mins ride along.
+  * Per-iteration totals and per-query mins ride along; the side file
+  * also counts each headline iteration's codegen compiles.
   *
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ITERS,
   * SPARK_GRAFT_BENCH_ONLY (comma-separated registered names to time
@@ -54,12 +55,16 @@ object Bench {
     // noisy-neighbour episode is attributable from the JSON alone
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadAvgs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // each iteration's runs and its Janino compiles: near 0 once the
+    // codegen cache holds the set's generated classes
     def iterate(names: Seq[String]) = (1 to iters).map { _ =>
       loadAvgs += osBean.getSystemLoadAverage
-      runSet(names)
-    }
-    val headlineRuns = iterate(headline)
-    val extRuns = iterate(ext)
+      val compiled = GraftConf.codegenCompiles
+      val runs = runSet(names)
+      (runs, GraftConf.codegenCompiles - compiled)
+    }.unzip
+    val (headlineRuns, compilesPerIter) = iterate(headline)
+    val (extRuns, _) = iterate(ext)
 
     // per-query min over SUCCESSFUL iterations only; a query with zero
     // successes reports -1 (JSON has no NaN) and shows up in "failed"
@@ -105,6 +110,7 @@ object Bench {
         s""""queries":${js(headlineMin)},""" +
         s""""totals_per_iter":${arr(totalsPerIter)},""" +
         s""""load_avg_per_iter":${arr(loadAvgs.toSeq)},""" +
+        s""""compiles_per_iter":${compilesPerIter.mkString("[", ",", "]")},""" +
         s""""ext_queries":${js(extMin)},""" +
         s""""ext_totals_per_iter":${arr(extTotalsPerIter)},""" +
         s""""failed":${js(failed)}}"""

@@ -32,7 +32,8 @@ final class Tables(spark: SparkSession, dir: String) {
 
   /** events.parquet's `ts` physical type has drifted across harness
     * testdata generations: TIMESTAMP(NANOS) (read as LONG via the
-    * legacy nanosAsLong conf — Spark's vectorized reader rejects nanos),
+    * legacy nanosAsLong conf that [[GraftConf.tune]] sets — Spark's
+    * vectorized reader rejects nanos),
     * then TIMESTAMP_MICROS with isAdjustedToUTC=false (read as
     * timestamp_ntz). Normalize every variant to a session-TZ TIMESTAMP
     * (session TZ is pinned UTC in GraftSession) so downstream
@@ -43,12 +44,7 @@ final class Tables(spark: SparkSession, dir: String) {
     *    wall-clock instant, zero-cost)
     *  - TimestampType   → pass through
     */
-  def events: DataFrame = {
-    // Harmless for micros data; required for schema inference to even
-    // succeed on the nanos generation of the file.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.fanOut(Tables.normalizeEventsTs(t("events")))
-  }
+  def events: DataFrame = Tables.fanOut(Tables.normalizeEventsTs(t("events")))
   def documents: DataFrame  = Tables.fanOut(t("documents"))
   /** documents WITHOUT the conditional fan-out — for multi-stage
     * pipelines (q12k) whose cost at small SF is stage scheduling, not
@@ -63,7 +59,7 @@ final class Tables(spark: SparkSession, dir: String) {
     * [[documentsNoFanOut]]: the IVF probe queries' (q14f/q14g)
     * per-vector map work is a few μs/row, so at small SF the
     * round-robin exchange plus the 32-task stages it prepends cost
-    * more than they parallelize (adjudicated idle r10). Heavy
+    * more than they parallelize (measured on an idle box). Heavy
     * embedding consumers (q14j covariance/PCA) keep the fanned
     * accessor — measured there the fan-out wins 4×.
     */

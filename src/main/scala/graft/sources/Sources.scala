@@ -149,12 +149,11 @@ object Sources {
   /** RUN-UNIQUE roundtrip output root: the DuckDB oracle must read
     * the very files Spark wrote, so the path is baked into the oracle
     * SQL at object init (both sides run on the same host — the driver
-    * runs Verify first, then the oracles read its dump). Through r16
-    * the root was FIXED per tmpdir, which made the q17 oracles
-    * process-shared state: any concurrent JVM (even an sbt testOnly
-    * rebuilding sf0.001 fixtures) overwrote the files between a
-    * replica's Verify and its DuckDB read — the judge demonstrated
-    * 164/7 live, every failure in the q17 family. The root now
+    * runs Verify first, then the oracles read its dump). A root fixed
+    * per tmpdir would make the q17 oracles process-shared state: any
+    * concurrent JVM (even an sbt testOnly rebuilding sf0.001
+    * fixtures) could overwrite the files between a replica's Verify
+    * and its DuckDB read, failing the q17 family. The root therefore
     * carries the JVM pid, captured ONCE here at object init (NOT a
     * per-call clock — the oracle SQL must stay deterministic within
     * a run): the writing JVM and the oracle_sql.json it dumps agree
@@ -637,8 +636,7 @@ object Sources {
       // bucket id precedes any .cNNN file counter — a write that splits
       // files (e.g. maxRecordsPerFile on the session) emits .c001+, so
       // the pattern accepts any counter and an UNPARSED name fails
-      // loudly instead of yielding a silent NULL bucket group (r9
-      // ADVICE)
+      // loudly instead of yielding a silent NULL bucket group
       .withColumn("bucket_id",
         when(regexp_extract($"f", "_(\\d+)\\.c\\d+", 1) === "",
           raise_error(concat(lit("q17h: unparsed bucket file name: "), $"f")))
@@ -659,8 +657,9 @@ object Sources {
     * (recheck §8.8), so this is the warehouse-upsert pattern a plain
     * parquet lake actually runs: compute the affected partitions'
     * post-merge state (base rows minus superseded keys, plus updates,
-    * plus inserts), write with
-    * `spark.sql.sources.partitionOverwriteMode=dynamic`, and ONLY the
+    * plus inserts), write with the per-write option
+    * `partitionOverwriteMode=dynamic` (the session conf is left
+    * alone), and ONLY the
     * partitions present in the new data are replaced — every other
     * partition's files must survive byte-identical.
     *
@@ -732,15 +731,9 @@ object Sources {
     val postState = slice.filter(!($"o_orderkey" % 13 === 0))
       .unionByName(updates).unionByName(inserts)
 
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try postState.write.mode("overwrite").partitionBy("o_year")
-      .parquet(UpsertOut)
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None    => spark.conf.unset(modeKey)
-    }
+    postState.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_year").parquet(UpsertOut)
 
     val after = listing()
     val preserved = (before.keySet ++ after.keySet).toSeq.map { y =>
@@ -823,29 +816,23 @@ object Sources {
         .filter($"o_orderkey" % 17 === 0 && $"o_year" === 1997)
         .withColumn("o_orderkey", $"o_orderkey" + 1000000000L))
 
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try {
-      // the merge, fragmented: 16 round-robin tasks → many files per
-      // touched partition (the debt OPTIMIZE exists to pay off)
-      postState.repartition(16).write.mode("overwrite")
+    // the merge, fragmented: 16 round-robin tasks → many files per
+    // touched partition (the debt OPTIMIZE exists to pay off)
+    postState.repartition(16).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_year").parquet(OptimizeOut)
+    // OPTIMIZE scoped to the touched partitions, deterministic file
+    // count per year; source is the logical post-state, so no
+    // read-and-overwrite-the-same-path hazard
+    affected.foreach { y =>
+      val d = postState.filter($"o_year" === y)
+      // floor of 1: a year absent from the merge slice (degenerate
+      // input) must not ask for a 0-partition shuffle — the empty
+      // write is a no-op under dynamic overwrite either way
+      val k = math.max(1L, (d.count() + TargetRows - 1) / TargetRows).toInt
+      d.repartition(k).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("o_year").parquet(OptimizeOut)
-      // OPTIMIZE scoped to the touched partitions, deterministic file
-      // count per year; source is the logical post-state, so no
-      // read-and-overwrite-the-same-path hazard
-      affected.foreach { y =>
-        val d = postState.filter($"o_year" === y)
-        // floor of 1: a year absent from the merge slice (degenerate
-        // input) must not ask for a 0-partition shuffle — the empty
-        // write is a no-op under dynamic overwrite either way
-        val k = math.max(1L, (d.count() + TargetRows - 1) / TargetRows).toInt
-        d.repartition(k).write.mode("overwrite")
-          .partitionBy("o_year").parquet(OptimizeOut)
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None    => spark.conf.unset(modeKey)
     }
 
     spark.read.schema(base.schema).parquet(OptimizeOut)

@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * Column⇄Expression bridge (GeoRules' marker Column, the rewritten
   * predicate, VectorOps' native dot/norm2) and the live session's
   * FunctionRegistry (idempotent installs on sessions graft did not
-  * build). This is the standard extension-library technique; no Spark
-  * internals are modified. Keep ALL private[sql] access in this one
-  * file so the exposure stays auditable.
+  * build), and the session SQLConf for the static codegen-cache size
+  * that `GraftConf.tune` sets. This is the standard extension-library
+  * technique; no Spark internals are modified. Keep ALL private[sql]
+  * access in this one file so the exposure stays auditable.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -16,6 +17,18 @@ object GraftColumnBridge {
   def functionRegistry(spark: SparkSession)
       : catalyst.analysis.FunctionRegistry =
     spark.sessionState.functionRegistry
+
+  /** Set a STATIC SQL conf on a classic session's own SQLConf, which
+    * `spark.conf.set` refuses for static keys. Whether the value has
+    * any effect is the caller's concern: most static confs are read
+    * once, when the component behind them first starts. A Spark
+    * Connect session holds no local SQLConf and is left as it is.
+    */
+  def setStaticConf(spark: SparkSession, key: String, value: String): Unit =
+    spark match {
+      case s: classic.SparkSession => s.sessionState.conf.setConfString(key, value)
+      case _ =>
+    }
 
   /** Build a DataFrame from an RDD of catalyst [[InternalRow]]s
     * without the external-Row round trip. Its one caller is

@@ -19,15 +19,15 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
 
-  private def scalaFiles: Seq[Path] =
-    Files.walk(mainRoot).iterator().asScala
+  private def scalaFiles(root: Path): Seq[Path] =
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
 
-  private def countsOf(pattern: String): Map[String, Int] = {
+  private def countsOf(pattern: String, root: Path = mainRoot): Map[String, Int] = {
     val re = pattern.r
-    scalaFiles.flatMap { p =>
+    scalaFiles(root).flatMap { p =>
       val n = re.findAllIn(new String(Files.readAllBytes(p))).length
-      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
+      if (n > 0) Some(root.relativize(p).toString -> n) else None
     }.toMap
   }
 
@@ -91,5 +91,13 @@ class SourceHygieneSpec extends AnyFunSuite {
     // code lines only; a scaladoc usage example is not a second builder
     assert(countsOf("""(?m)^(?!\s*(\*|//)).*SparkSession\.builder\(""") ===
       Map("GraftSession.scala" -> 1))
+  }
+
+  test("session conf is set only in GraftConf, never from inside a query") {
+    // code lines only, over every source file including the Spark
+    // bridge; a write that needs its own mode takes it as a per-write
+    // option (q17i/q17j's partitionOverwriteMode)
+    assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*\.conf\.(set|unset)\(""",
+      Paths.get("src/main/scala")) === Map("graft/GraftConf.scala" -> 3))
   }
 }

@@ -26,10 +26,8 @@ class StreamingSpec extends SparkTestBase {
     * schema); inferred from a batch read so the spec tracks testdata
     * regenerations instead of hardcoding one ts physical type.
     */
-  private lazy val eventsDiskSchema: StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private lazy val eventsDiskSchema: StructType =
     spark.read.parquet(s"$sfDir/events.parquet").schema
-  }
 
   private def streamingEvents() =
     Tables.normalizeEventsTs(
