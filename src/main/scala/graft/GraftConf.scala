@@ -77,11 +77,5 @@ object GraftConf {
     // joins are AQE-broadcast at runtime anyway or sort too little to
     // matter, and at 100 TB the per-partition size guard keeps them
     // sort-merge regardless (OPTIMIZATION_r17.md).
-
-    // One generation of events.parquet stores `ts` as TIMESTAMP(NANOS),
-    // which Spark's reader rejects unless it reads it as LONG
-    // ([[Tables.events]] converts every generation). Harmless for
-    // files without nanos timestamps.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }

@@ -73,14 +73,14 @@ object ScaleProbe {
 
   private type Keys = Seq[(String, Any)]
 
-  /** A shard input: the table it writes, the key its row count prints
-    * under, and the writer of its replicas (spark, base dir, factor,
-    * out dir).
+  /** A shard input: the reader of the table it writes, the key its row
+    * count prints under, and the writer of its replicas (spark, base
+    * dir, factor, out dir).
     */
-  private final case class Shard(table: String, sizeKey: String,
-      build: (SparkSession, String, Int, String) => Unit)
-  private val Docs = Shard("documents", "docs", buildShards)
-  private val Emb = Shard("embeddings", "vecs", buildEmbShards)
+  private final case class Shard(read: (SparkSession, String) => DataFrame,
+      sizeKey: String, build: (SparkSession, String, Int, String) => Unit)
+  private val Docs = Shard(docs, "docs", buildShards)
+  private val Emb = Shard(vecs, "vecs", buildEmbShards)
 
   /** One probed family: the shards it reads, the timed query, and the
     * measurement taken after the timing window. `timed` builds any
@@ -96,9 +96,9 @@ object ScaleProbe {
   private def rows(key: String, q: GraftQuery)(spark: SparkSession, dir: String): () => Keys =
     () => Seq(key -> q.fn(spark, dir).count())
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables(spark, dir).documentsNoFanOut
   private def vecs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Tables(spark, dir).embeddingsNoFanOut
   private def pairs13b(spark: SparkSession, dir: String): DataFrame =
     DedupQueries.q13bNgramJaccard.fn(spark, dir).select("doc_a", "doc_b")
 
@@ -224,7 +224,7 @@ object ScaleProbe {
       val dir = tmp.toString
       shards.foreach(_.build(spark, base, n, dir))
       val sizes = shards.map(s =>
-        s.sizeKey -> spark.read.parquet(s"$dir/${s.table}.parquet").count())
+        s.sizeKey -> s.read(spark, dir).count())
       val measured = selected.map { f =>
         val body = f.timed(spark, dir)
         val (keys, wall, acc) = GraftSession.timed(spark)(body())

@@ -423,8 +423,10 @@ object Sources {
       .sortWithinPartitions($"ship_day")
       .write.mode("overwrite").parquet(SortOut)
 
+    // read back under the written schema, as every audit reader does:
+    // an empty slice leaves no footers to infer from
     def fileStats(path: String): DataFrame =
-      spark.read.parquet(path)
+      spark.read.schema(slice.schema).parquet(path)
         .withColumn("f", input_file_name())
         .groupBy($"f")
         .agg(min($"ship_day").as("dmin"), max($"ship_day").as("dmax"),
@@ -499,7 +501,7 @@ object Sources {
       layoutKey = $"o_orderkey")
 
     def fileRows(path: String): DataFrame =
-      spark.read.parquet(path)
+      spark.read.schema(slice.schema).parquet(path)
         .withColumn("f", input_file_name())
         .groupBy($"f").agg(count(lit(1)).as("n"))
 

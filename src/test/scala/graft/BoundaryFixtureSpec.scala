@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Boundary-exercise fixture for the two gate edges the r13 mutation
@@ -59,22 +59,17 @@ class BoundaryFixtureSpec extends SparkTestBase {
   }
 }
 
-/** Builds target/boundary once per JVM: the sf0.001 schema with
+/** Builds target/boundary once per JVM: the declared star schema with
   * hand-crafted customer/orders/lineitem/part/events rows (everything
-  * else 0-row). Rows are aligned to the on-disk sf0.001 schema so the
-  * same read/normalization paths (Tables.events ts handling, fanOut)
-  * run as in production.
+  * else 0-row). Rows are aligned to [[Tables.schema]] so the same
+  * read/normalization paths (Tables.events ts handling, fanOut) run as
+  * in production.
   */
 object BoundaryData {
-  private val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   private def align(spark: SparkSession, crafted: DataFrame,
       table: String): DataFrame = {
-    val target =
-      spark.read.parquet(s"/root/testdata/sf0.001/$table.parquet").schema
     val have = crafted.columns.toSet
-    val cols = target.fields.map { f =>
+    val cols = Tables.schema(table).fields.map { f =>
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
@@ -153,11 +148,11 @@ object BoundaryData {
 
     val crafted = Map("customer" -> customer, "orders" -> orders,
       "lineitem" -> lineitem, "part" -> part, "events" -> events)
-    tables.foreach { t =>
+    Tables.names.foreach { t =>
       val df = crafted.get(t) match {
         case Some(c) => align(spark, c, t)
-        case None =>
-          spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet").limit(0)
+        case None => spark.createDataFrame(
+          java.util.List.of[Row](), Tables.schema(t))
       }
       df.coalesce(1).write.mode("overwrite").parquet(s"$root/$t.parquet")
     }

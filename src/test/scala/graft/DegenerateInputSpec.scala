@@ -158,9 +158,6 @@ class DegenerateInputSpec extends SparkTestBase {
   * on-disk types) with 0 and 3 rows per table.
   */
 object DegenerateData {
-  private val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   /** The one build scaffold every fixture shares: per-table transform
     * of the raw sf0.001 read, single-file write, `_BUILT` marker for
     * once-per-JVM idempotence. A new degenerate shape is just its
@@ -184,7 +181,7 @@ object DegenerateData {
     val fresh = java.nio.file.Files.exists(done) &&
       java.nio.file.Files.readString(done).trim == token
     if (!fresh) {
-      tables.foreach { t =>
+      Tables.names.foreach { t =>
         transform(t,
           spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet"))
           .coalesce(1)

@@ -98,6 +98,13 @@ class SourceHygieneSpec extends AnyFunSuite {
     // bridge; a write that needs its own mode takes it as a per-write
     // option (q17i/q17j's partitionOverwriteMode)
     assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*\.conf\.(set|unset)\(""",
-      Paths.get("src/main/scala")) === Map("graft/GraftConf.scala" -> 3))
+      Paths.get("src/main/scala")) === Map("graft/GraftConf.scala" -> 2))
+  }
+
+  test("no schema-inferring parquet reads: Tables declares the star schema") {
+    // code only; a read that names its schema (`read.schema(s).parquet(`)
+    // plans a scan, a bare `read.parquet(` runs an inference job
+    assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*\bread\s*\.parquet\(""",
+      Paths.get("src/main/scala")) === Map.empty[String, Int])
   }
 }

@@ -77,9 +77,15 @@ class StreamingScaleSpec extends SparkTestBase {
     dir
   }
 
+  /** The replicas are written from the normalized events, so their
+    * `ts` is a UTC-adjusted TIMESTAMP; the stream reads them under the
+    * declared events schema (as TIMESTAMP_NTZ, which the session's UTC
+    * zone makes the same instant) and casts back through
+    * [[Tables.normalizeEventsTs]]. The tumbling test's batch twin reads
+    * the written TIMESTAMP as is, so the two readings are compared.
+    */
   private def streamFrom(dir: Path, onePerTrigger: Boolean): DataFrame = {
-    val schema = spark.read.parquet(dir.toString).schema
-    val r = spark.readStream.schema(schema)
+    val r = spark.readStream.schema(Tables.schema("events"))
     val r2 = if (onePerTrigger) r.option("maxFilesPerTrigger", 1) else r
     Tables.normalizeEventsTs(r2.parquet(dir.toString))
   }
@@ -106,7 +112,8 @@ class StreamingScaleSpec extends SparkTestBase {
       "sscale_tumbling", "complete")
     val streamed = spark.table("sscale_tumbling")
 
-    // parity: the batch twin on the SAME x10 input, bitwise
+    // parity: the batch twin on the SAME x10 input, bitwise, read
+    // under the files' own written schema
     val batchRep = EventKpis.tumblingKpis(
       spark.read.parquet(dir.toString), exactDistinct = false)
     assert(streamed.exceptAll(batchRep).count() == 0 &&

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 import graft.streaming.{EventKpis, Sessionize}
 
@@ -22,16 +21,9 @@ class StreamingSpec extends SparkTestBase {
     d.toString
   }
 
-  /** On-disk schema of events.parquet (readStream requires an explicit
-    * schema); inferred from a batch read so the spec tracks testdata
-    * regenerations instead of hardcoding one ts physical type.
-    */
-  private lazy val eventsDiskSchema: StructType =
-    spark.read.parquet(s"$sfDir/events.parquet").schema
-
   private def streamingEvents() =
     Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsDiskSchema).parquet(streamDir))
+      spark.readStream.schema(Tables.schema("events")).parquet(streamDir))
 
   test("streaming tumbling KPIs match the batch twin") {
     import spark.implicits._
@@ -122,7 +114,7 @@ class StreamingSpec extends SparkTestBase {
     // duplicates or as late data — both are the dedup contract
     val stream = EventKpis.streamDedup(EventKpis.plantedRedelivery(
       Tables.normalizeEventsTs(
-        spark.readStream.schema(eventsDiskSchema).parquet(dupDir.toString))))
+        spark.readStream.schema(Tables.schema("events")).parquet(dupDir.toString))))
     val q = stream.writeStream.format("memory").queryName("dedup_test")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)

@@ -1,108 +1,88 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Testdata schema-drift guard.
-  *
-  * The harness regenerated /root/testdata mid-round-8 and silently
-  * changed events.ts from TIMESTAMP(NANOS) to TIMESTAMP_MICROS, which
-  * broke 13 queries at analysis time with an error that named neither
-  * the table nor the drift. This spec pins the column names and types
-  * of every table AS OBSERVED THROUGH `Tables` (i.e. after the
-  * events-ts normalization), so the next regeneration fails here first
-  * with a message naming the exact drifted column.
-  *
-  * Timestamp-ish columns accept {timestamp, timestamp_ntz, date}: with
-  * the session TZ pinned UTC the three are value-equivalent for every
-  * query in the registry, and the harness has already flip-flopped
-  * between ntz and tz-adjusted encodings across generations.
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Guards `Tables`' declared star schema against the files it reads:
+  * the declaration must match every local data set's footers, a table
+  * access must run no Spark job, and a drifted column type must fail
+  * naming the column.
   */
 class TablesSpec extends SparkTestBase {
 
-  private val TsFamily = Set("timestamp", "timestamp_ntz", "date")
+  private val localSets =
+    Files.list(Paths.get(sfDir).getParent).iterator().asScala
+      .filter(Files.isDirectory(_)).map(_.toString).toSeq.sorted
 
-  /** expected column -> exact type, or "ts-family" for the flexible set */
-  private val expected: Map[String, Seq[(String, String)]] = Map(
-    "region" -> Seq("r_regionkey" -> "int", "r_name" -> "string"),
-    "nation" -> Seq("n_nationkey" -> "int", "n_name" -> "string",
-      "n_regionkey" -> "int"),
-    "customer" -> Seq("c_custkey" -> "bigint", "c_name" -> "string",
-      "c_nationkey" -> "int", "c_acctbal" -> "double",
-      "c_mktsegment" -> "string"),
-    "supplier" -> Seq("s_suppkey" -> "bigint", "s_name" -> "string",
-      "s_nationkey" -> "int", "s_acctbal" -> "double"),
-    "part" -> Seq("p_partkey" -> "bigint", "p_name" -> "string",
-      "p_brand" -> "string", "p_type" -> "string", "p_size" -> "int",
-      "p_retailprice" -> "double"),
-    "orders" -> Seq("o_orderkey" -> "bigint", "o_custkey" -> "bigint",
-      "o_orderstatus" -> "string", "o_totalprice" -> "double",
-      "o_orderdate" -> "ts-family", "o_orderpriority" -> "string"),
-    "lineitem" -> Seq("l_orderkey" -> "bigint", "l_partkey" -> "bigint",
-      "l_suppkey" -> "bigint", "l_linenumber" -> "int",
-      "l_quantity" -> "double", "l_extendedprice" -> "double",
-      "l_discount" -> "double", "l_tax" -> "double",
-      "l_returnflag" -> "string", "l_linestatus" -> "string",
-      "l_shipdate" -> "ts-family"),
-    // events.ts must be exactly `timestamp` AFTER Tables.normalizeEventsTs —
-    // that is the loader's contract to every downstream window()/as-of/
-    // interval consumer, whatever the on-disk generation stores.
-    "events" -> Seq("event_id" -> "bigint", "ts" -> "timestamp",
-      "user_id" -> "bigint", "event_type" -> "string",
-      "value" -> "double", "props" -> "string"),
-    "documents" -> Seq("doc_id" -> "bigint", "text" -> "string",
-      "lang" -> "string", "source" -> "string", "n_chars" -> "bigint"),
-    "embeddings" -> Seq("vec_id" -> "bigint",
-      "embedding" -> "array<float>", "label" -> "int")
-  )
-
-  private def check(table: String, df: DataFrame): Unit = {
-    val actual = df.schema.fields.map(f => f.name -> f.dataType.simpleString)
-    val exp = expected(table)
-    val actualNames = actual.map(_._1).toSeq
-    val expNames = exp.map(_._1)
-    assert(actualNames == expNames,
-      s"testdata drift: $table columns are $actualNames, expected $expNames")
-    exp.zip(actual).foreach { case ((col, want), (_, got)) =>
-      val ok = if (want == "ts-family") TsFamily(got) else got == want
-      assert(ok, s"testdata drift: $table.$col is $got, expected " +
-        (if (want == "ts-family") s"one of $TsFamily" else want) +
-        " — update Tables/this spec together (see Tables.normalizeEventsTs)")
+  test("the declared schema equals the footer schema of every local data set") {
+    assert(localSets.contains(sfDir))
+    for (set <- localSets; t <- Tables.names) {
+      // the one place a test infers: the footers are what is checked
+      val footer = spark.read.parquet(s"$set/$t.parquet").schema
+      val declared = Tables.schema(t)
+      assert(footer.map(f => f.name -> f.dataType) == declared.map(f => f.name -> f.dataType),
+        s"$set/$t.parquet reads as ${footer.toDDL}; Tables declares ${declared.toDDL}")
     }
   }
 
-  test("all ten testdata tables match the pinned schemas") {
-    val t = Tables(spark, sfDir)
-    check("region", t.region); check("nation", t.nation)
-    check("customer", t.customer); check("supplier", t.supplier)
-    check("part", t.part); check("orders", t.orders)
-    check("lineitem", t.lineitem); check("events", t.events)
-    check("documents", t.documents); check("embeddings", t.embeddings)
+  test("touching all ten accessors and their schemas starts no Spark job") {
+    val group = "tables-spec-no-jobs"
+    val jobs = new AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "sentinel")
+            sentinelSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "tables")
+      val t = Tables(spark, sfDir)
+      Seq(t.region, t.nation, t.customer, t.supplier, t.part, t.orders,
+        t.lineitem, t.events, t.documents, t.documentsNoFanOut,
+        t.embeddings, t.embeddingsNoFanOut).foreach(_.schema)
+      // the listener bus is FIFO: once this job's start arrives, every
+      // job started before it has been counted
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran while tables were only touched")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
-  test("events loader normalizes every supported on-disk ts generation") {
+  test("a drifted column type fails on read, naming the column") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-drift").toString
+    Seq((1L, "2024-01-01 00:00:00", 2L, "view", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val e = intercept[Exception](Tables(spark, dir).events.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("[ts]") && messages.contains("timestamp_ntz"), messages)
+  }
+
+  test("events loader casts the declared NTZ ts to a session-TZ timestamp") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import spark.implicits._
-    // micros-long generation (nanosAsLong path)
-    val nanos = Seq((1L, 1700000000123456789L)).toDF("event_id", "ts")
-    assert(Tables.normalizeEventsTs(nanos).schema("ts").dataType == TimestampType)
-    // value check: nanos truncate to micros
-    val v = Tables.normalizeEventsTs(nanos)
-      .select(unix_micros($"ts")).head.getLong(0)
-    assert(v == 1700000000123456L, s"nanos→micros conversion wrong: $v")
-    // ntz generation
     val ntz = Seq((1L, 1700000000123456L)).toDF("event_id", "us")
       .select($"event_id", timestamp_micros($"us").cast(TimestampNTZType).as("ts"))
     val n = Tables.normalizeEventsTs(ntz)
     assert(n.schema("ts").dataType == TimestampType)
     assert(n.select(unix_micros($"ts")).head.getLong(0) == 1700000000123456L)
-    // already-timestamp generation: pass-through
-    val tz = Seq((1L, 1700000000123456L)).toDF("event_id", "us")
-      .select($"event_id", timestamp_micros($"us").as("ts"))
-    assert(Tables.normalizeEventsTs(tz).schema("ts").dataType == TimestampType)
-    // unknown generation: fail loudly, naming the drift
-    val bad = Seq((1L, "oops")).toDF("event_id", "ts")
-    val e = intercept[IllegalStateException](Tables.normalizeEventsTs(bad))
-    assert(e.getMessage.contains("drifted"))
+    assert(Tables(spark, sfDir).events.schema("ts").dataType == TimestampType)
   }
 }
