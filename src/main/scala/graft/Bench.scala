@@ -8,7 +8,9 @@ package graft
   * total: single totals on a shared box carry ±20 % noise, and min-of-n
   * strips scheduler and IO interference from a CPU-bound measurement.
   * Per-iteration totals and per-query mins ride along; the side file
-  * also counts each headline iteration's codegen compiles.
+  * also counts each headline iteration's codegen compiles and holds
+  * one [[GraftSession.Measured]] record per query (jobs, stages,
+  * tasks, CPU, shuffle, spill, compiles) from its last successful run.
   *
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ITERS,
   * SPARK_GRAFT_BENCH_ONLY (comma-separated registered names to time
@@ -36,47 +38,41 @@ object Bench {
       only.fold(Seq.empty[String])(o =>
         SparkEntry.queries.keys.toSeq.sorted.filter(o).diff(headline))).distinct
 
-    // (seconds, succeeded) — a failed run must NOT feed the min: a
-    // query that dies fast would otherwise win its per-query min and
-    // a regression would silently LOWER the reported totals.
-    def timeOne(name: String): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+    // one run's record, None when the query failed — a failed run must
+    // NOT feed the min: a query that dies fast would otherwise win its
+    // per-query min and a regression would silently LOWER the totals.
+    type Runs = Map[String, Option[GraftSession.Measured]]
+    def runSet(names: Seq[String]): Runs = names.map { n =>
+      val (ok, m) = GraftSession.measure(spark, n) {
+        try { SparkEntry.queries(n)(spark, sfDir).count(); true }
         catch { case t: Throwable =>
-          System.err.println(s"BENCH FAILURE $name: ${t.getMessage}"); false
+          System.err.println(s"BENCH FAILURE $n: ${t.getMessage}"); false
         }
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
-    def runSet(names: Seq[String]): Map[String, (Double, Boolean)] =
-      names.map(n => n -> timeOne(n)).toMap
+      }
+      n -> Option.when(ok)(m)
+    }.toMap
 
     // 1-minute system load average before each iteration, so a
     // noisy-neighbour episode is attributable from the JSON alone
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadAvgs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // each iteration's runs and its Janino compiles: near 0 once the
-    // codegen cache holds the set's generated classes
-    def iterate(names: Seq[String]) = (1 to iters).map { _ =>
+    def iterate(names: Seq[String]): Seq[Runs] = (1 to iters).map { _ =>
       loadAvgs += osBean.getSystemLoadAverage
-      val compiled = GraftConf.codegenCompiles
-      val runs = runSet(names)
-      (runs, GraftConf.codegenCompiles - compiled)
-    }.unzip
-    val (headlineRuns, compilesPerIter) = iterate(headline)
-    val (extRuns, _) = iterate(ext)
+      runSet(names)
+    }
+    val headlineRuns = iterate(headline)
+    val extRuns = iterate(ext)
+    // each headline iteration's Janino compiles (its successful runs):
+    // near 0 once the codegen cache holds the set's generated classes
+    val compilesPerIter = headlineRuns.map(_.values.flatten.map(_.compiles).sum)
 
     // per-query min over SUCCESSFUL iterations only; a query with zero
     // successes reports -1 (JSON has no NaN) and shows up in "failed"
-    def minPerQuery(runs: Seq[Map[String, (Double, Boolean)]]): Map[String, Double] =
-      runs.head.keys.map { k =>
-        val ok = runs.map(_(k)).collect { case (t, true) => t }
-        k -> (if (ok.nonEmpty) ok.min else -1.0)
-      }.toMap
+    def minPerQuery(runs: Seq[Runs]): Map[String, Double] = runs.head.keys.map(k =>
+      k -> runs.flatMap(_(k)).map(_.wallS).minOption.getOrElse(-1.0)).toMap
     // query -> number of failed iterations (only queries that failed)
-    def failures(runs: Seq[Map[String, (Double, Boolean)]]): Map[String, Int] =
-      runs.head.keys.map(k => k -> runs.map(_(k)).count(!_._2))
-        .filter(_._2 > 0).toMap
+    def failures(runs: Seq[Runs]): Map[String, Int] =
+      runs.head.keys.map(k => k -> runs.count(_(k).isEmpty)).filter(_._2 > 0).toMap
     def med(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -90,17 +86,20 @@ object Bench {
     // iteration is clean, fall back to the sum of per-query successful
     // mins (comparable coverage-wise, biased fast — flagged by
     // "failed" being non-empty either way)
-    def totals(runs: Seq[Map[String, (Double, Boolean)]],
-        mins: Map[String, Double]): Seq[Double] = {
-      val clean = runs.filter(_.values.forall(_._2))
-        .map(_.values.map(_._1).sum)
+    def totals(runs: Seq[Runs], mins: Map[String, Double]): Seq[Double] = {
+      val clean = runs.filter(_.values.forall(_.nonEmpty)).map(_.values.flatten.map(_.wallS).sum)
       if (clean.nonEmpty) clean else Seq(mins.values.filter(_ >= 0).sum)
     }
+    // each query's record from its last successful run
+    val lastOk = (headlineRuns ++ extRuns).flatten.collect { case (k, Some(m)) => k -> m }.toMap
     val totalsPerIter = totals(headlineRuns, headlineMin)
     val extTotalsPerIter = totals(extRuns, extMin)
 
-    def js(m: Map[String, Any]): String =
+    def js(m: Iterable[(String, Any)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // a measure record, snake_case keys in field order
+    def rec(m: GraftSession.Measured): String = js(m.productElementNames
+      .map(_.replaceAll("([A-Z])", "_$1").toLowerCase).zip(m.productIterator).toSeq)
     def arr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
     // A reader that records only the last ~2 KB of stdout must still
     // get the whole summary, so full detail goes to a side file and
@@ -113,6 +112,7 @@ object Bench {
         s""""compiles_per_iter":${compilesPerIter.mkString("[", ",", "]")},""" +
         s""""ext_queries":${js(extMin)},""" +
         s""""ext_totals_per_iter":${arr(extTotalsPerIter)},""" +
+        s""""measure":${js(lastOk.map { case (k, m) => k -> rec(m) })},""" +
         s""""failed":${js(failed)}}"""
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")

@@ -2,15 +2,19 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 
 /** The one place a graft session is configured: every tool main and
   * the test base build their session here, so core count, shuffle
   * width, time zone, logging and [[GraftConf.tune]] cannot drift apart
-  * between them. Also hosts the one stage listener ([[StageAcc]]) the
-  * measurement mains and scale specs read shuffle and spill from, and
-  * the one parser of the mains' name selections ([[selection]]).
+  * between them. Also hosts the one way to ask what a call cost
+  * ([[measure]]), which the measurement mains and the scale specs read
+  * jobs, shuffle and spill from, and the one parser of the mains' name
+  * selections ([[selection]]).
   */
 object GraftSession {
 
@@ -54,50 +58,77 @@ object GraftSession {
     names
   }
 
-  /** Sums every completed stage's shuffle and spill metrics. */
-  class StageAcc extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val shuffleRecords = new AtomicLong
-    val shuffleRead = new AtomicLong
-    val diskSpill = new AtomicLong
-    val memSpill = new AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        memSpill.addAndGet(m.memoryBytesSpilled)
+  /** What one [[measure]]d call cost, counting only the jobs, stages
+    * (completed attempts) and tasks of the call's own job group.
+    * `wallS` is the body's wall, without the bus drain; `cpuNs` is
+    * executor CPU and `peakExecMem` the largest peak of one task.
+    * `compiles` is the [[GraftConf.codegenCompiles]] delta over the
+    * body: that counter is JVM-wide, so it is exact only when nothing
+    * else compiles at the same time.
+    */
+  final case class Measured(
+      wallS: Double, jobs: Long, stages: Long, tasks: Long, cpuNs: Long,
+      shuffleWriteBytes: Long, shuffleWriteRecords: Long, shuffleReadBytes: Long,
+      memSpill: Long, diskSpill: Long, peakExecMem: Long, compiles: Long)
+
+  private val groups = new AtomicLong
+
+  /** Charges to `group` every job started under it, and every stage
+    * submitted under it with all of that stage's tasks. The bus calls
+    * it from one thread; [[measure]] reads `m` after draining the bus.
+    */
+  private final class GroupListener(group: String) extends SparkListener {
+    private val stageIds = mutable.Set.empty[Int]
+    var m = Measured(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+    private def ours(p: java.util.Properties) = p != null && p.getProperty("spark.jobGroup.id") == group
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (ours(e.properties)) m = m.copy(jobs = m.jobs + 1)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (ours(e.properties)) stageIds += e.stageInfo.stageId
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (stageIds(e.stageInfo.stageId)) m = m.copy(stages = m.stages + 1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (stageIds(e.stageId)) {
+        m = m.copy(tasks = m.tasks + 1)
+        Option(e.taskMetrics).foreach(t => m = m.copy(cpuNs = m.cpuNs + t.executorCpuTime,
+          shuffleWriteBytes = m.shuffleWriteBytes + t.shuffleWriteMetrics.bytesWritten,
+          shuffleWriteRecords = m.shuffleWriteRecords + t.shuffleWriteMetrics.recordsWritten,
+          shuffleReadBytes = m.shuffleReadBytes + t.shuffleReadMetrics.totalBytesRead,
+          memSpill = m.memSpill + t.memoryBytesSpilled, diskSpill = m.diskSpill + t.diskBytesSpilled,
+          peakExecMem = math.max(m.peakExecMem, t.peakExecutionMemory)))
       }
-    }
   }
 
-  /** Listener events arrive asynchronously: poll until the counters
-    * have stayed unchanged for three 100 ms ticks.
-    */
-  def quiesce(acc: StageAcc): Unit = {
-    var last = -1L
-    var same = 0
-    while (same < 3) {
-      val now = acc.shuffleWrite.get + acc.shuffleRecords.get +
-        acc.shuffleRead.get + acc.diskSpill.get + acc.memSpill.get
-      if (now == last) same += 1 else { same = 0; last = now }
-      Thread.sleep(100)
-    }
-  }
+  // the thread-local properties SparkContext.setJobGroup sets
+  private val groupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
-  /** Runs `f` under a fresh listener: (result, wall seconds of `f`
-    * alone, the drained counters).
+  /** Runs `body` under a fresh job group described by `label` and
+    * returns its result with what it cost. Jobs the body starts from
+    * its thread inherit the group, broadcast exchanges included, so
+    * calls measured at once on one session are charged apart. The bus
+    * is drained first, so the record is complete when `measure`
+    * returns. The caller's job group and description are put back,
+    * also when `body` throws.
     */
-  def timed[T](spark: SparkSession)(f: => T): (T, Double, StageAcc) = {
-    val acc = new StageAcc
-    spark.sparkContext.addSparkListener(acc)
-    val t0 = System.nanoTime()
-    val r = f
-    val wall = (System.nanoTime() - t0) / 1e9
-    quiesce(acc)
-    spark.sparkContext.removeSparkListener(acc)
-    (r, wall, acc)
+  def measure[T](spark: SparkSession, label: String)(body: => T): (T, Measured) = {
+    val sc = spark.sparkContext
+    val saved = groupProps.map(k => k -> sc.getLocalProperty(k))
+    val group = s"graft-measure-${groups.incrementAndGet()}"
+    val listener = new GroupListener(group)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      val compiled = GraftConf.codegenCompiles
+      val t0 = System.nanoTime()
+      val r = body
+      val wallS = (System.nanoTime() - t0) / 1e9
+      val compiles = GraftConf.codegenCompiles - compiled
+      GraftColumnBridge.drainListenerBus(sc)
+      (r, listener.m.copy(wallS = wallS, compiles = compiles))
+    } finally {
+      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.removeSparkListener(listener)
+    }
   }
 }

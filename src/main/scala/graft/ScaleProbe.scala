@@ -12,8 +12,8 @@ import graft.text.{DedupQueries, KMeansQueries, SimilarityQueries, TfIdfQueries}
 
 /** Decade-up scale probe for the scale-critical extension families.
   * For each factor f it builds an f-times corpus from disjoint shards
-  * of the base data, runs each family's timed query under a
-  * [[GraftSession.StageAcc]], then measures the family's candidate
+  * of the base data, runs each family's timed query under
+  * [[GraftSession.measure]], then measures the family's candidate
   * structure outside the timing window from the query's own building
   * blocks. Adjacent factors are compared through a growth exponent
   * ln(m₂/m₁) / ln(f₂/f₁) for every numeric key (1.0 = linear, 0 =
@@ -227,11 +227,11 @@ object ScaleProbe {
         s.sizeKey -> s.read(spark, dir).count())
       val measured = selected.map { f =>
         val body = f.timed(spark, dir)
-        val (keys, wall, acc) = GraftSession.timed(spark)(body())
-        f.name -> (keys ++ Seq("wall_sec" -> wall,
-          "shuffle_bytes" -> acc.shuffleWrite.get,
-          "shuffle_records" -> acc.shuffleRecords.get,
-          "spill_bytes" -> acc.diskSpill.get) ++
+        val (keys, m) = GraftSession.measure(spark, f.name)(body())
+        f.name -> (keys ++ Seq("wall_sec" -> m.wallS,
+          "shuffle_bytes" -> m.shuffleWriteBytes,
+          "shuffle_records" -> m.shuffleWriteRecords,
+          "spill_bytes" -> m.diskSpill) ++
           f.mass.toSeq.flatMap(_(spark, dir)))
       }
       FileUtils.deleteDirectory(tmp.toFile)

@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * Column⇄Expression bridge (GeoRules' marker Column, the rewritten
   * predicate, VectorOps' native dot/norm2) and the live session's
   * FunctionRegistry (idempotent installs on sessions graft did not
-  * build), and the session SQLConf for the static codegen-cache size
-  * that `GraftConf.tune` sets. This is the standard extension-library
-  * technique; no Spark internals are modified. Keep ALL private[sql]
-  * access in this one file so the exposure stays auditable.
+  * build), the session SQLConf for the static codegen-cache size that
+  * `GraftConf.tune` sets, and the listener bus `GraftSession.measure`
+  * drains. This is the standard extension-library technique; no Spark
+  * internals are modified. Keep ALL private[sql]/private[spark] access
+  * in this one file so the exposure stays auditable.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -29,6 +30,10 @@ object GraftColumnBridge {
       case s: classic.SparkSession => s.sessionState.conf.setConfString(key, value)
       case _ =>
     }
+
+  /** Blocks until every listener event posted so far is delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Build a DataFrame from an RDD of catalyst [[InternalRow]]s
     * without the external-Row round trip. Its one caller is

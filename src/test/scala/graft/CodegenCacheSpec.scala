@@ -19,12 +19,10 @@ class CodegenCacheSpec extends SparkTestBase {
   /** Codegen compiles while the corpus set builds and fully writes its
     * results to the noop sink.
     */
-  private def pass(): Long = {
-    val before = GraftConf.codegenCompiles
+  private def pass(): Long = GraftSession.measure(spark, "corpus pass") {
     corpus.foreach(n => SparkEntry.queries(n)(spark, sfDir)
       .write.format("noop").mode("overwrite").save())
-    GraftConf.codegenCompiles - before
-  }
+  }._2.compiles
 
   test("a graft session sizes the codegen cache") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1024")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,31 +34,6 @@ class GraphScaleSpec extends SparkTestBase {
   private val baseDir = "/root/testdata/sf0.01"
   private val reps = 10
   private val Shift = 1000000L // base part keys are ≤ ~2000
-
-  private class SpillAcc extends SparkListener {
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) diskSpill.addAndGet(m.diskBytesSpilled)
-    }
-  }
-  private def assertNoSpill[A](label: String)(body: => A): A = {
-    val acc = new SpillAcc
-    spark.sparkContext.addSparkListener(acc)
-    try {
-      val r = body
-      // listener delivery is async; settle before reading
-      var last = -1L; var same = 0
-      while (same < 3) {
-        val now = acc.diskSpill.get
-        if (now == last) same += 1 else { same = 0; last = now }
-        Thread.sleep(100)
-      }
-      assert(acc.diskSpill.get == 0,
-        s"$label spilled ${acc.diskSpill.get} bytes to disk at 10x")
-      r
-    } finally spark.sparkContext.removeSparkListener(acc)
-  }
 
   private lazy val basePairs: DataFrame =
     GraphQueries.coPurchasePairs(spark, baseDir)

@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
 
-/** Decade-up stress for the MULTIMODAL family — the last family
-  * without one (relational/corpus: ScaleSpec, streaming:
-  * StreamingScaleSpec, graphs/geo: GraphScaleSpec).
+/** Decade-up stress for the MULTIMODAL family (relational/corpus:
+  * ScaleSpec, streaming: StreamingScaleSpec, graphs/geo: GraphScaleSpec).
   *
   * Two cost shapes exist in this family and each gets its own gate:
   *
@@ -33,30 +31,6 @@ class MultimodalScaleSpec extends SparkTestBase {
   private val baseDir = "/root/testdata/sf0.01"
   private val reps = 10
   private val Shift = 10000000L
-
-  private class SpillAcc extends SparkListener {
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) diskSpill.addAndGet(m.diskBytesSpilled)
-    }
-  }
-  private def assertNoSpill[A](label: String)(body: => A): A = {
-    val acc = new SpillAcc
-    spark.sparkContext.addSparkListener(acc)
-    try {
-      val r = body
-      var last = -1L; var same = 0
-      while (same < 3) {
-        val now = acc.diskSpill.get
-        if (now == last) same += 1 else { same = 0; last = now }
-        Thread.sleep(100)
-      }
-      assert(acc.diskSpill.get == 0,
-        s"$label spilled ${acc.diskSpill.get} bytes to disk at 10x")
-      r
-    } finally spark.sparkContext.removeSparkListener(acc)
-  }
 
   test("decode/feature pass at 10x media: copy-exact, zero keyed shuffles") {
     assertNoSpill("pixel features x10") {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Repo-WIDE physical-plan audit over every registered query.
   *
   * PlanSpec pins ~a dozen individually-designed plans; this spec is the
-  * complement — the anti-pattern scan the judge runs by hand each round
-  * (no cartesians, no unbounded nested-loop joins, zero UDFs),
-  * automated so a future registration can't silently introduce one.
+  * complement — an anti-pattern scan (no cartesians, no unbounded
+  * nested-loop joins, zero UDFs), automated so a future registration
+  * can't silently introduce one.
   *
   * Method: build each query's DataFrame at sf0.001 and inspect the
   * pre-AQE physical plan (`queryExecution.sparkPlan`) WITHOUT
@@ -249,10 +249,9 @@ class PlanAuditSpec extends SparkTestBase {
         (if (stale.nonEmpty) s"\nstale allowlist entries: ${stale.toSeq.sorted.mkString(", ")}" else ""))
   }
 
-  /** Registry-wide grouped-SortAggregate census (r13 session 4),
-    * generalizing the fan-out axis above: a SortAggregateExec with
-    * non-empty grouping keys external-sorts its input per task even
-    * over LINEAR input — at 100 TB that is a spill-prone sort where a
+  /** Registry-wide grouped-SortAggregate census, generalizing the
+    * fan-out axis above: a SortAggregateExec with non-empty grouping
+    * keys external-sorts its input per task even over LINEAR input — at 100 TB that is a spill-prone sort where a
     * hash aggregate streams. The census found exactly three linear
     * sites; two were avoidable and are now hash shapes (q13i's
     * max(struct) argmax → max_by over a collision-free decimal
@@ -272,12 +271,11 @@ class PlanAuditSpec extends SparkTestBase {
       ("8 signature string-mins at (doc, shingle) grain — DF-cap " +
         "bounded, measured linear with zero spill to ×1000"))
 
-  /** Null-order census RATCHET (r16 verdict task 1, mechanizing the
-    * r15 hand triage that caught q9f live): every NULLS-FIRST
-    * ordering over a NULLABLE expression in the registry's analyzed
-    * plans — the one direction where Spark's defaults diverge from
-    * DuckDB's (Spark asc = nulls FIRST; DuckDB = nulls LAST both
-    * ways) — must carry a triage annotation below. A NEW query with
+  /** Null-order census RATCHET: every NULLS-FIRST ordering over a
+    * NULLABLE expression in the registry's analyzed plans — the one
+    * direction where Spark's defaults diverge from DuckDB's (Spark asc
+    * = nulls FIRST; DuckDB = nulls LAST both ways) — must carry a
+    * triage annotation below. A NEW query with
     * an untriaged site FAILS until it is pinned (`asc_nulls_last`),
     * convention-filtered, or triaged here; a fixed/removed site goes
     * STALE and fails too, the same exact-match contract as every
@@ -300,7 +298,7 @@ class PlanAuditSpec extends SparkTestBase {
     *  - operator-contract: AsofJoin's ts ordering — right-side nulls
     *    dropped, left-side carries nullified, AT the operator.
     *
-    * Since the first r16 pass the census ALSO collects
+    * The census also collects
     * EXPRESSION-level orderings ([[NullOrderCensus.exprSortHits]]:
     * sort_array / array_sort over a nullable element or struct
     * field) — the scope gap where q27's NULL-month EMA seed hid;
@@ -341,12 +339,8 @@ class PlanAuditSpec extends SparkTestBase {
       ("q14c_ann_ivf", s"EXPR SORT_ARRAY $centFrame") -> dn,
       ("q14e_semantic_dedup", s"EXPR SORT_ARRAY $centFrame") -> dn,
       ("q14f_ann_ivf_multiprobe", s"EXPR SORT_ARRAY $centFrame") -> dn,
-      // (q14g's centFrame sort_array entry removed r17: the cell
-      // assignment is now staged behind an eager localCheckpoint, so
-      // the site executes inside assignCells during construction —
-      // unchanged code, pinned by q14c/q14e/q14f/q14k's identical
-      // entries above and TextDedupSpec's exactness tests — and is no
-      // longer visible in q14g's registered plan.)
+      // q14g stages its cell assignment while its frame is built, so
+      // its centFrame sort_array is not in its registered plan
       ("q14g_ann_ivfpq",
         "EXPR SORT_ARRAY struct<cell:int,cemb:array<float>>") -> dn,
       ("q14k_ann_recall", s"EXPR SORT_ARRAY $centFrame") -> dn,
@@ -354,11 +348,10 @@ class PlanAuditSpec extends SparkTestBase {
         "EXPR SORT_ARRAY struct<cell:int,cemb:array<float>>") -> dn,
       ("q14h_kmeans_step",
         "EXPR SORT_ARRAY struct<cell:int,ccs:array<bigint>>") -> dn,
-      // surfaced by the r17 nested-struct census recursion: the sg
-      // fields are min(md5(non-null)) over >=1-row per-doc groups
-      // (derived-non-null), and the LEADING sort field doc_id is
-      // unique inside each bucket's collect_list, so the nested
-      // fields never act as comparator tiebreaks at all
+      // the sg fields are min(md5(non-null)) over >=1-row per-doc
+      // groups (derived-non-null), and the LEADING sort field doc_id is
+      // unique inside each bucket's collect_list, so the nested fields
+      // never act as comparator tiebreaks at all
       ("q13c_minhash_lsh",
         "EXPR SORT_ARRAY struct<doc_id:bigint,sg:struct<h0:string," +
           "h1:string,h2:string,h3:string,h4:string,h5:string") -> dn,
@@ -415,12 +408,11 @@ class PlanAuditSpec extends SparkTestBase {
         else ""))
   }
 
-  /** Unit pin for the census collector itself (r17 ADVICE): a
-    * nullable field NESTED one struct level deeper
-    * (struct<a:struct<b:nullable>>) still steers Spark's struct
-    * comparator inside sort_array/array_sort, so [[NullOrderCensus
-    * .exprSortHits]] must see it — the top-level-only check it
-    * shipped with in r16 was blind to exactly this shape. Negative
+  /** Unit pin for the census collector itself: a nullable field
+    * NESTED one struct level deeper (struct<a:struct<b:nullable>>)
+    * still steers Spark's struct comparator inside
+    * sort_array/array_sort, so [[NullOrderCensus.exprSortHits]] must
+    * see it; a top-level-only check is blind to this shape. Negative
     * control: the same nesting with every field non-null must stay
     * invisible (no false positives widening the ratchet allowlist).
     */

@@ -5,9 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level ratchets for the driver-side anti-patterns the judge
-  * greps for each round — automated so a future query can't silently
-  * add an unbounded collect, a scalar UDF, or an RDD drop-down.
+/** Source-level ratchets for driver-side anti-patterns, automated so
+  * a future query can't silently add an unbounded collect, a scalar
+  * UDF, or an RDD drop-down.
   *
   * These complement PlanAuditSpec (which inspects what Catalyst
   * planned); a `collect()` is invisible to a plan audit because it
@@ -53,10 +53,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     // typed Aggregators (partial-aggregable, Tungsten-encoded,
     // BOUNDED state: Misra-Gries k-counter sketch, top-k heaps, the
     // DF-capped posting list) — the documented exceptions; scalar
-    // row-at-a-time UDFs stay banned. The top-k udaf moved from its
-    // two call sites (BasketQueries/OlapExtras) INTO TopK.topk in r16
-    // so the null-preserving boxed-input encoder is baked in — a
-    // call site can no longer pick the primitive encoder that
+    // row-at-a-time UDFs stay banned. The top-k udaf lives inside
+    // TopK.topk so the null-preserving boxed-input encoder is baked
+    // in — a call site cannot pick the primitive encoder that
     // coerced NULL scores to 0.0 (NULL_CONTRACT.md).
     assert(countsOf("""udaf\(""") === Map(
       "text/HeavyHitterQueries.scala" -> 1,
@@ -106,5 +105,16 @@ class SourceHygieneSpec extends AnyFunSuite {
     // plans a scan, a bare `read.parquet(` runs an inference job
     assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*\bread\s*\.parquet\(""",
       Paths.get("src/main/scala")) === Map.empty[String, Int])
+  }
+
+  test("one measurement path: GraftSession.measure holds the only listener, no sleeps") {
+    // code only: one job-group listener, whose bus is drained, never polled
+    def sites(call: String, root: String) =
+      countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*""" + call, Paths.get(root))
+    val one = Map("graft/GraftSession.scala" -> 1)
+    assert(sites("""addSparkListener\(""", "src/main/scala") === one)
+    assert(sites("""extends SparkListener\b""", "src/main/scala") === one)
+    assert(sites("""addSparkListener\(""", "src/test/scala") === Map.empty[String, Int])
+    assert(sites("""Thread\.sleep\(""", "src/main/scala") === Map.empty[String, Int])
   }
 }

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result, failing if it spilled to disk. */
+  def assertNoSpill[A](label: String)(body: => A): A = {
+    val (r, m) = GraftSession.measure(spark, label)(body)
+    assert(m.diskSpill == 0, s"$label spilled ${m.diskSpill} bytes to disk")
+    r
+  }
 }
 
 object SparkTestBase {

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Guards `Tables`' declared star schema against the files it reads:
   * the declaration must match every local data set's footers, a table
@@ -30,36 +27,13 @@ class TablesSpec extends SparkTestBase {
   }
 
   test("touching all ten accessors and their schemas starts no Spark job") {
-    val group = "tables-spec-no-jobs"
-    val jobs = new AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "sentinel")
-            sentinelSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "tables")
+    val (_, m) = GraftSession.measure(spark, "tables") {
       val t = Tables(spark, sfDir)
       Seq(t.region, t.nation, t.customer, t.supplier, t.part, t.orders,
         t.lineitem, t.events, t.documents, t.documentsNoFanOut,
         t.embeddings, t.embeddingsNoFanOut).foreach(_.schema)
-      // the listener bus is FIFO: once this job's start arrives, every
-      // job started before it has been counted
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran while tables were only touched")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(m.jobs == 0, s"${m.jobs} Spark jobs ran while tables were only touched")
   }
 
   test("a drifted column type fails on read, naming the column") {
