@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftColumnBridge
 
 import graft.functions.{NGramExpressions, NormalizeText, VectorExpressions}
+import graft.operators.PrefixScanStrategy
 import graft.plans.{GeoRules, Norm2Rewrite}
 
 /** THE session extension for the graft engine — registers everything
@@ -17,6 +18,8 @@ import graft.plans.{GeoRules, Norm2Rewrite}
   *    → `graft_norm2(e)`) and
   *    [[graft.plans.GeoRules.RewriteWithinRadius]] (geo-radius marker
   *    → pushdown-able bbox ∧ exact haversine)
+  *  - planner strategy: [[graft.operators.PrefixScanStrategy]] (the
+  *    `PrefixScan` node behind PrefixSum and DistributedRank)
   *
   * Wire-up:
   *
@@ -25,36 +28,35 @@ import graft.plans.{GeoRules, Norm2Rewrite}
   *
   * For sessions graft did not build (the harness driver's), call
   * [[GraftExtensions.install]] — idempotent post-hoc registration via
-  * the live FunctionRegistry + `spark.experimental.extraOptimizations`.
+  * the live FunctionRegistry + `spark.experimental`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(VectorExpressions.dotDescriptor)
-    ext.injectFunction(VectorExpressions.norm2Descriptor)
-    ext.injectFunction(NGramExpressions.ngramsDescriptor)
-    ext.injectFunction(NormalizeText.nfcDescriptor)
-    ext.injectFunction(NormalizeText.nfkcDescriptor)
-    ext.injectOptimizerRule(_ => Norm2Rewrite)
-    ext.injectOptimizerRule(_ => GeoRules.RewriteWithinRadius)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(rule => ext.injectOptimizerRule(_ => rule))
+    ext.injectPlannerStrategy(_ => PrefixScanStrategy)
   }
 }
 
 object GraftExtensions {
-  def install(spark: SparkSession): Unit = {
+  private val functions = Seq(VectorExpressions.dotDescriptor, VectorExpressions.norm2Descriptor,
+    NGramExpressions.ngramsDescriptor, NormalizeText.nfcDescriptor, NormalizeText.nfkcDescriptor)
+  private val rules = Seq(Norm2Rewrite, GeoRules.RewriteWithinRadius)
+
+  /** Registers the extension set on a live session. Idempotent, and
+    * atomic across threads: the appends to `extraOptimizations` and
+    * `extraStrategies` are check-then-write, so concurrent callers on
+    * a fresh session could otherwise lose or duplicate an append.
+    */
+  def install(spark: SparkSession): Unit = synchronized {
     val reg = GraftColumnBridge.functionRegistry(spark)
-    Seq(VectorExpressions.dotDescriptor, VectorExpressions.norm2Descriptor,
-        NGramExpressions.ngramsDescriptor,
-        NormalizeText.nfcDescriptor, NormalizeText.nfkcDescriptor)
-      .foreach { case (ident, info, builder) =>
-        if (!reg.functionExists(ident))
-          reg.registerFunction(ident, info, builder)
-      }
-    // extraOptimizations is the public post-hoc seam for optimizer
-    // rules on an already-built session; keep the appends idempotent
-    Seq(Norm2Rewrite, GeoRules.RewriteWithinRadius).foreach { rule =>
-      if (!spark.experimental.extraOptimizations.contains(rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
+    functions.foreach { case (ident, info, builder) =>
+      if (!reg.functionExists(ident)) reg.registerFunction(ident, info, builder)
     }
+    // spark.experimental is the public post-hoc seam for optimizer
+    // rules and planner strategies on an already-built session
+    val x = spark.experimental
+    x.extraOptimizations ++= rules.filterNot(x.extraOptimizations.contains)
+    if (!x.extraStrategies.contains(PrefixScanStrategy)) x.extraStrategies :+= PrefixScanStrategy
   }
 }

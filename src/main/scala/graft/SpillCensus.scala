@@ -3,7 +3,9 @@ package graft
 /** Registry-wide spill census: execute every registered query once
   * under [[GraftSession.measure]] and report its wall, the total
   * shuffle volume, and memory/disk spill. Any query with nonzero
-  * spill is named in `spilled_queries`.
+  * spill is named in `spilled_queries`. Shuffle bytes move between
+  * runs of the same tree; `shuffle_write_records` is the total to
+  * compare two trees by.
   *
   * q15* (streaming batch twins) are excluded: their readStream
   * execution is driven by StreamingSpec, and the twin bodies re-run
@@ -41,6 +43,7 @@ object SpillCensus {
         s""""queries":{${perQuery.map(q => s""""${q._1}":${r3(q._2.wallS)}""").mkString(",")}},""" +
         s""""shuffle_read_bytes":${total(_.shuffleReadBytes)},""" +
         s""""shuffle_write_bytes":${total(_.shuffleWriteBytes)},""" +
+        s""""shuffle_write_records":${total(_.shuffleWriteRecords)},""" +
         s""""mem_spill_bytes":${total(_.memSpill)},""" +
         s""""disk_spill_bytes":${total(_.diskSpill)},""" +
         s""""spilled_queries":{${spilled.mkString(",")}},""" +

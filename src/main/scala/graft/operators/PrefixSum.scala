@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
@@ -22,14 +24,21 @@ import org.apache.spark.sql.types.LongType
   *     collected to the driver, turned into per-(partition, group)
   *     starting offsets and group totals, and broadcast back.
   *  3. Pass 2: each row gets its group's running prefix and total.
-  *     Both passes run on ONE `queryExecution.toRdd` lineage, so the
-  *     second job skips the range shuffle's stages: the input
-  *     shuffles once.
   *
-  * mapPartitions is justified here (per SURVEY §2 preference order):
-  * the offset handoff between range partitions is genuinely
-  * per-partition imperative state that no built-in operator expresses
-  * without re-introducing the single-task sort.
+  * Both passes live in one planned operator: the logical
+  * [[PrefixScan]] node sits on the sorted frame and
+  * [[PrefixScanStrategy]] (registered by [[graft.GraftExtensions]])
+  * plans it as [[PrefixScanExec]], whose execution runs pass 1 and
+  * returns pass 2 over ONE `child.execute()` lineage, so the second
+  * pass skips the range shuffle's stages: the input shuffles once.
+  * Building the frame runs no job, and `explain` shows the whole
+  * plan, `Exchange rangepartitioning → Sort → PrefixScan`, down to
+  * the source scan.
+  *
+  * A per-partition operator is justified here (per SURVEY §2
+  * preference order): the offset handoff between range partitions is
+  * genuinely per-partition imperative state that no built-in operator
+  * expresses without re-introducing the single-task sort.
   *
   * `orderCols` must be a total order within each group (tie-broken)
   * for a deterministic result. A NULL value contributes 0 to the
@@ -44,11 +53,13 @@ import org.apache.spark.sql.types.LongType
   * `Window.partitionBy` groups them.
   *
   * NULL ordering is normalized to NULLS LAST in both directions
-  * ([[GraftColumnBridge.nullsLast]]): the internal sort sits behind an
-  * RDD boundary the NullOrderCensus cannot see, and under Spark's
-  * nulls-FIRST default a NULL-keyed row would silently lead every
-  * group's order (entering every prefix, taking rank 1) while the
-  * DuckDB twins' nulls-last ordering puts it last. A caller that needs
+  * ([[GraftColumnBridge.nullsLast]]), the operator's ordering
+  * contract: under Spark's nulls-FIRST default a NULL order value
+  * would silently lead its group (entering every prefix, taking
+  * rank 1) while the DuckDB twins' nulls-last ordering puts it last.
+  * The group columns are pinned the same way, which changes no result
+  * (a NULL group key is its own group wherever it sorts) and keeps
+  * the operator's Sort off the null-order census. A caller that needs
   * nulls-first must pre-transform (e.g. coalesce to a sentinel).
   */
 object PrefixSum {
@@ -82,63 +93,86 @@ object PrefixSum {
     for (c <- Seq("__psum_v", prefixName, totalName))
       require(!df.columns.contains(c), s"input already contains column '$c'")
     val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sortCols = groupCols.map(col) ++ orderCols.map(GraftColumnBridge.nullsLast)
+    graft.GraftExtensions.install(spark)
+    val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
+    val sortCols = (groupCols.map(col) ++ orderCols).map(GraftColumnBridge.nullsLast)
     val parted = df
       .withColumn("__psum_v", value.cast(LongType))
       .repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-    val schema = parted.schema
-    val vIdx = schema.fieldIndex("__psum_v")
-    val keyExprs = groupCols.map { c =>
-      val i = schema.fieldIndex(c)
-      GraftColumnBridge.normalizeFloats(
-        BoundReference(i, schema(i).dataType, schema(i).nullable))
-    }
+    val child = parted.queryExecution.analyzed
+    def attr(c: String): Attribute = child.output(parted.schema.fieldIndex(c))
+    val node = PrefixScan(groupCols.map(attr), attr("__psum_v"),
+      AttributeReference(prefixName, LongType, nullable = false)(),
+      AttributeReference(totalName, LongType, nullable = false)(), child)
+    // the analyzer renews a Project's aliases when a frame meets itself
+    // in a join, so the two new columns leave the scan through one
+    GraftColumnBridge.ofRows(spark, node).drop("__psum_v")
+      .withColumns(Map(prefixName -> col(prefixName), totalName -> col(totalName)))
+  }
+}
 
-    // Catalyst InternalRows in both passes: `.rdd` would deserialize
-    // every row per pass (and build a second QueryExecution, losing
-    // the shared shuffle), `createDataFrame(RDD[Row])` re-serialize
-    // the output. Sorter rows and the key projection's buffer are
-    // reused between `next()` calls, so only a key held across rows
-    // is copied. Ungrouped input projects the empty key every row.
-    val rdd = parted.queryExecution.toRdd
-    val sums = rdd.mapPartitionsWithIndex { (pid, it) =>
+/** The scan's logical node: `child` (range-partitioned and sorted by
+  * group ++ order) plus the row's exclusive `prefix` of `value` and
+  * its group's `total`.
+  */
+case class PrefixScan(
+    groupKeys: Seq[Attribute], value: Attribute,
+    prefix: Attribute, total: Attribute, child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output :+ prefix :+ total
+  override def producedAttributes: AttributeSet = AttributeSet(Seq(prefix, total))
+  override protected def withNewChildInternal(c: LogicalPlan): PrefixScan = copy(child = c)
+}
+
+/** Plans [[PrefixScan]]; the scan's only physical form. */
+object PrefixScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = Seq(plan).collect {
+    case PrefixScan(g, v, p, t, child) => PrefixScanExec(g, v, p, t, planLater(child))
+  }
+}
+
+/** [[PrefixScan]]'s physical form: pass 1 runs inside its execution,
+  * and pass 2 emits one UnsafeRow per input row.
+  */
+case class PrefixScanExec(
+    groupKeys: Seq[Attribute], value: Attribute,
+    prefix: Attribute, total: Attribute, child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output :+ prefix :+ total
+  override def producedAttributes: AttributeSet = AttributeSet(Seq(prefix, total))
+  override protected def withNewChildInternal(c: SparkPlan): PrefixScanExec = copy(child = c)
+
+  // Both passes read the child's reused sorter rows; only a key held
+  // across rows is copied. Ungrouped input projects the empty key
+  // every row.
+  override protected def doExecute() = {
+    val in = child.output
+    val keyExprs = groupKeys.map(k =>
+      GraftColumnBridge.normalizeFloats(BindReferences.bindReference(k, in)))
+    val vIdx = in.indexWhere(_.exprId == value.exprId)
+    val rows = child.execute()
+    val sums = rows.mapPartitionsWithIndex { (pid, it) =>
       val key = UnsafeProjection.create(keyExprs)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, UnsafeRow, Long)]
-      var cur: UnsafeRow = null
-      var s = 0L
+      val groups = scala.collection.mutable.ArrayBuffer.empty[(UnsafeRow, Array[Long])]
       it.foreach { row =>
         val k = key(row)
-        if (cur == null || k != cur) {
-          if (cur != null) out += ((pid, cur, s))
-          cur = k.copy()
-          s = 0L
-        }
-        if (!row.isNullAt(vIdx)) s += row.getLong(vIdx)
+        if (groups.isEmpty || k != groups.last._1) groups += ((k.copy(), Array(0L)))
+        if (!row.isNullAt(vIdx)) groups.last._2(0) += row.getLong(vIdx)
       }
-      if (cur != null) out += ((pid, cur, s))
-      out.iterator
+      groups.iterator.map { case (k, s) => (pid, k, s(0)) }
     }.collect()
 
     // (partition, group) -> (group prefix before the partition, group total)
-    val starts: Map[(Int, UnsafeRow), (Long, Long)] =
-      sums.groupBy(_._2).flatMap { case (k, ps) =>
-        val sorted = ps.sortBy(_._1)
-        val total = sorted.map(_._3).sum
-        sorted.zip(sorted.scanLeft(0L)(_ + _._3)).map {
-          case ((pid, _, _), off) => (pid, k) -> ((off, total))
-        }
-      }
-    val bcStarts = spark.sparkContext.broadcast(starts)
+    val starts = sums.groupBy(_._2).flatMap { case (k, ps) =>
+      val sorted = ps.sortBy(_._1)
+      val offs = sorted.scanLeft(0L)(_ + _._3)
+      sorted.iterator.zip(offs).map { case ((pid, _, _), off) => (pid, k) -> ((off, offs.last)) }
+    }
+    val bcStarts = sparkContext.broadcast(starts)
 
-    // Emits one reused JoinedRow(input, [prefix, total]) per row: the
-    // downstream RDDScanExec projects each row before pulling the next
-    // (the internalCreateDataFrame invariant).
-    val scanned = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val out = output
+    rows.mapPartitionsWithIndex { (pid, it) =>
       val key = UnsafeProjection.create(keyExprs)
+      val emit = UnsafeProjection.create(out, out)
       val tail = new SpecificInternalRow(Seq(LongType, LongType))
       val joined = new JoinedRow
       var cur: UnsafeRow = null
@@ -153,13 +187,8 @@ object PrefixSum {
         }
         tail.setLong(0, run)
         if (!row.isNullAt(vIdx)) run += row.getLong(vIdx)
-        joined(row, tail): InternalRow
+        emit(joined(row, tail)): InternalRow
       }
     }
-    val outSchema = schema
-      .add(prefixName, LongType, nullable = false)
-      .add(totalName, LongType, nullable = false)
-    GraftColumnBridge.internalCreateDataFrame(spark, scanned, outSchema)
-      .drop("__psum_v")
   }
 }

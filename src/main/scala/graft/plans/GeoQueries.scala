@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 import graft.functions.Geo
 import graft.queries.GraftQuery
 import graft.Staging.Stageable
@@ -28,7 +28,7 @@ object GeoQueries {
           Geo.demoLatSql("l_suppkey"), Geo.demoLngSql("l_suppkey"))} <= 500
        |GROUP BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    GeoRules.install(spark)
+    GraftExtensions.install(spark)
     val t = Tables(spark, dir)
     t.lineitem
       .join(t.orders, $"l_orderkey" === $"o_orderkey")

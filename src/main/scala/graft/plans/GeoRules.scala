@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -27,8 +27,8 @@ import graft.functions.Geo
   * user's own `&&` would work per query, the Rule does it for every
   * query, which is the legitimate use of `SparkSessionExtensions`.
   *
-  * Install per session via [[graft.GraftExtensions.install]] (uses
-  * `spark.experimental.extraOptimizations`) or cluster-wide with
+  * Installed with the rest of the extension set, per session via
+  * [[graft.GraftExtensions.install]] or cluster-wide with
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GeoRules {
@@ -88,15 +88,5 @@ object GeoRules {
         case WithinRadiusKm(lat1e, lng1e, lat2e, lng2e, re) =>
           rewrite(lat1e, lng1e, lat2e, lng2e, re)
       }
-  }
-
-  /** Idempotently register the rewrite on an existing session.
-    * (Subsumed by [[graft.GraftExtensions.install]], which registers
-    * the full extension set; kept for callers that want geo only.)
-    */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(RewriteWithinRadius))
-      spark.experimental.extraOptimizations = cur :+ RewriteWithinRadius
   }
 }

@@ -281,7 +281,7 @@ object CurationQueries {
   // ---------------------------------------------------------------
   // q12j — corpus vocabulary stats (exact + HLL scale twin)
   //
-  // Naming note (r12 verdict nit): the registry holds BOTH
+  // Naming note: the registry holds BOTH
   // `q12j_vocab_stats` and `q12j_vocab_approx` — the only shared
   // letter-prefix in the registry. Deliberate: they are the exact/
   // sketch twin pair of ONE operator (like q9a/q9a_approx, which
@@ -347,11 +347,11 @@ object CurationQueries {
         approx_count_distinct($"tok", 0.01).as("v_approx"),
         countDistinct($"tok").as("v_exact"))
       .select($"lang", $"n_tokens",
-        // rel 5% + abs 2, same contract as q26a's sketch_ok (r17
+        // rel 5% + abs 2, same contract as q26a's sketch_ok (the
         // `boundary` class: HLL++'s integer estimate + collision
         // bias have an absolute floor at tiny vocabularies that a
         // relative band cannot cover). Defense-in-depth at THIS rsd:
-        // an r17 sweep found no ≤20-token vocabulary where rsd-1%
+        // a sweep found no ≤20-token vocabulary where rsd-1%
         // HLL deviates, so the class's red-case pin and mutation
         // (m53) live on q26a's rsd-2% site in ProfileSpec — a
         // removal here has no reachable witness and would be an
@@ -417,8 +417,8 @@ object CurationQueries {
       // repetition / contamination tokenizes) consume the d1
       // checkpoint, whose partitioning comes from the dedup join's
       // AQE-coalesced exchange — fanning the scan only prepends a
-      // 32-task exchange to every stage of a ~6-stage plan
-      // (adjudicated idle r10: 3.7 s → timed below 2 s without it)
+      // 32-task exchange to every stage of a ~6-stage plan (measured
+      // on an idle box: 3.7 s with it, below 2 s without)
       val docs = Tables(spark, dir).documentsNoFanOut
       val plant = docs.select($"doc_id", $"text", $"lang", $"n_chars")
         .unionByName(docs.filter($"doc_id" % 7 === 0)
@@ -431,16 +431,16 @@ object CurationQueries {
       // kept join) — left as pure lineage the dedup join and
       // everything above it would re-execute per consumer.
       // Materialize once via an EAGER local checkpoint — and stage
-      // the TOKEN ARRAY, not the raw text (r18): before, every gate
-      // re-ran the whitespace-regex split on the full corpus (5
-      // tokenizations per run); now the split happens exactly once at
+      // the TOKEN ARRAY, not the raw text: otherwise every gate
+      // re-runs the whitespace-regex split on the full corpus (5
+      // tokenizations per run); staged, the split happens exactly once at
       // this boundary and each gate derives its grain (tokens,
       // 2-grams, 3-gram shingles — both n-gram walks are the codegen
       // WordNGrams expression) from the staged array. Unlike cache(),
       // localCheckpoint registers nothing in the CacheManager (a
-      // library call must not pin session-lifetime state — r6 ADVICE
-      // item 3), and its blocks are reclaimed by the ContextCleaner
-      // when the returned plan goes unreachable. A production
+      // library call must not pin session-lifetime state), and its
+      // blocks are reclaimed by the ContextCleaner when the returned
+      // plan goes unreachable. A production
       // pipeline at corpus scale stages this boundary to parquet
       // (disk-backed, partitioned); MEMORY_AND_DISK-backed
       // localCheckpoint stands in for that here.

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * predicate, VectorOps' native dot/norm2) and the live session's
   * FunctionRegistry (idempotent installs on sessions graft did not
   * build), the session SQLConf for the static codegen-cache size that
-  * `GraftConf.tune` sets, and the listener bus `GraftSession.measure`
-  * drains. This is the standard extension-library technique; no Spark
+  * `GraftConf.tune` sets, the listener bus `GraftSession.measure`
+  * drains, and the DataFrame of a graft logical plan ([[ofRows]]).
+  * This is the standard extension-library technique; no Spark
   * internals are modified. Keep ALL private[sql]/private[spark] access
   * in this one file so the exposure stays auditable.
   */
@@ -35,30 +36,12 @@ object GraftColumnBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** Build a DataFrame from an RDD of catalyst [[InternalRow]]s
-    * without the external-Row round trip. Its one caller is
-    * `PrefixSum.scan`, the two-pass operator behind PrefixSum and
-    * DistributedRank: `createDataFrame(RDD[Row])` pays a full
-    * RowEncoder serialization per row, while the physical scan of this
-    * form (`RDDScanExec`) applies one codegen'd UnsafeProjection —
-    * rows may be reused [[JoinedRow]] wrappers consumed element-wise,
-    * no copies needed.
-    *
-    * Invariant (callers must keep it): the RDD is consumed ONLY by
-    * that per-element projection. The emitted rows alias buffers the
-    * producer reuses (the scan's sorter rows and its one JoinedRow),
-    * so any operation that holds a row past the next `next()` call —
-    * persist/cache, zipPartitions, a debugging collect, any buffering
-    * iterator placed between producer and scan — silently corrupts
-    * the output. A caller that needs such an operation must `copy()`
-    * each row first.
+  /** The DataFrame of an analyzable logical plan, the way the
+    * Dataset API builds its own (`PrefixSum.scan` wraps its
+    * `PrefixScan` node in one).
     */
-  def internalCreateDataFrame(
-      spark: SparkSession,
-      catalystRows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
-      schema: types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(catalystRows, schema)
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Catalyst's NaN / -0.0 normalization of a (possibly nested)
     * floating value — the rewrite the optimizer applies to grouping
@@ -69,8 +52,8 @@ object GraftColumnBridge {
     catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
   /** Pin a (possibly sort-)column's null ordering to NULLS LAST at
-    * the ColumnNode level (used by `PrefixSum.scan`'s RDD-boundary
-    * ordering — NULL_CONTRACT.md). A Column's sort
+    * the ColumnNode level (`PrefixSum.scan`'s ordering contract —
+    * NULL_CONTRACT.md). A Column's sort
     * state is an `internal.SortOrder` COLUMN NODE, not a catalyst
     * SortOrder: converting via [[expression]] and pattern-matching
     * catalyst yields a `ColumnNodeExpression` wrapper that matches

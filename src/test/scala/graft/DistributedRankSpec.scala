@@ -1,9 +1,15 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, Executors}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.DistributedRank
+import graft.operators.{DistributedRank, PrefixScanStrategy}
 
 class DistributedRankSpec extends SparkTestBase {
 
@@ -47,11 +53,10 @@ class DistributedRankSpec extends SparkTestBase {
   }
 
   /** The NULLS LAST normalization (`GraftColumnBridge.nullsLast`,
-    * applied inside `PrefixSum.scan`): the operator's sort hides
-    * behind an RDD boundary the NullOrderCensus cannot see, so the
-    * operator itself pins DuckDB's default — a nullable ASC order
-    * value ranks LAST, not Spark's default FIRST. Mutation m52 flips
-    * the pin → red.
+    * applied inside `PrefixSum.scan`) is the operator's ordering
+    * contract: whatever order the caller passes, it pins DuckDB's
+    * default — a nullable ASC order value ranks LAST, not Spark's
+    * default FIRST. Mutation m52 flips the pin → red.
     */
   test("a NULL ASC order value ranks LAST (DuckDB default), not first") {
     import spark.implicits._
@@ -91,5 +96,46 @@ class DistributedRankSpec extends SparkTestBase {
     val sizes = got.groupBy($"band").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(sizes == Map(1 -> 4L, 2 -> 3L, 3 -> 3L))
+  }
+
+  /** The scan is a planned operator: building a ranked frame runs no
+    * job (both passes run inside the action), and its plan shows the
+    * PrefixScan node above the source table's scan.
+    */
+  test("a ranked frame builds with no job and plans PrefixScan over the source scan") {
+    for ((q, table) <- Seq(
+        "q28_rfm_segments" -> "orders",
+        "q3a_rank_ntile_dist" -> "customer",
+        "q12i_shuffle_order" -> "documents")) {
+      val (df, m) = GraftSession.measure(spark, q)(SparkEntry.queries(q)(spark, sfDir))
+      assert(m.jobs == 0, s"$q ran ${m.jobs} job(s) while its frame was built")
+      val plan = df.queryExecution.explainString(FormattedMode)
+      assert(plan.contains("PrefixScan") && plan.contains("Scan parquet") &&
+        plan.contains(s"/$table.parquet]"), s"$q plan:\n$plan")
+    }
+  }
+
+  /** `GraftExtensions.install` runs on every scan; concurrent first
+    * calls on a fresh session must neither lose nor duplicate its append.
+    */
+  test("concurrent rankNtile builds on a fresh session install the strategy once") {
+    def input(s: org.apache.spark.sql.SparkSession) =
+      s.range(200).select((col("id") % 3).as("g"), col("id"))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      DistributedRank.rankNtile(df, Seq("g"), Seq(col("id").desc), 4, "rnk", "nt", 4)
+        .collect().map(_.toString).sorted.toSeq
+    val serial = ranked(input(spark))
+    val fresh = spark.newSession()
+    val inputs = Seq.fill(4)(input(fresh))
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      // released together, so the four first scans race into install
+      val start = new CountDownLatch(1)
+      val runs = inputs.map(df => Future { start.await(); ranked(df) })
+      start.countDown()
+      Await.result(Future.sequence(runs), 5.minutes).foreach(r => assert(r == serial))
+      assert(fresh.experimental.extraStrategies.count(_ == PrefixScanStrategy) == 1)
+    } finally pool.shutdown()
   }
 }

@@ -71,7 +71,7 @@ class GeoSpec extends SparkTestBase {
 
   test("withinRadiusKm rewrite preserves the naive haversine result") {
     import spark.implicits._
-    GeoRules.install(spark)
+    GraftExtensions.install(spark)
     val df = coords()
     val viaMarker = df.filter(Geo.withinRadiusKm(
       $"lat1", $"lng1", $"lat2", $"lng2", lit(800.0)))
@@ -86,7 +86,7 @@ class GeoSpec extends SparkTestBase {
 
   test("optimizer expands the marker into bbox AND exact haversine") {
     import spark.implicits._
-    GeoRules.install(spark)
+    GraftExtensions.install(spark)
     val df = coords().filter(Geo.withinRadiusKm(
       $"lat1", $"lng1", $"lat2", $"lng2", lit(500.0)))
     val optimized = df.queryExecution.optimizedPlan.toString

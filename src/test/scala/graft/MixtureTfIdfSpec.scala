@@ -91,10 +91,10 @@ class MixtureTfIdfSpec extends SparkTestBase {
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    // tokenize happens once inside the eager tf checkpoint (r17: tf
-    // moved to the q12s staging pattern — previously the cf branch
-    // relied on AQE exchange reuse, and the THIRD consumer in the
-    // q12t composition still re-tokenized); the query plan proper
+    // tokenize happens once inside the eager tf checkpoint (tf
+    // follows the q12s staging pattern — without it the cf branch
+    // relies on AQE exchange reuse, and the THIRD consumer in the
+    // q12t composition re-tokenizes); the query plan proper
     // must not re-tokenize for any consumer
     assert("Generate explode".r.findAllIn(plan).length === 0,
       s"a consumer re-tokenized instead of reading staged tf:\n$plan")
@@ -196,10 +196,10 @@ class MixtureTfIdfSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     // per-source ranking rides DistributedRank, never
-    // Window.partitionBy(source) — q12p's scale rule. (A window
-    // rewrite would surface here; the upstream xent plan sits behind
-    // DistributedRank's RDD boundary, and its tokenize-once pin lives
-    // in the q12r test — same shared xentPerDoc helper.)
+    // Window.partitionBy(source) — q12p's scale rule. The plan shows
+    // the upstream xent plan below the PrefixScan node too, so this
+    // also covers it; its tokenize-once pin lives in the q12r test
+    // (same shared xentPerDoc helper).
     assert(!plan.contains("Window"),
       s"per-source bucketing fell back to a window:\n$plan")
     // tercile sanity: buckets ∈ {1,2,3}, sizes within 1 per source,

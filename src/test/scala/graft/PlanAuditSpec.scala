@@ -50,6 +50,7 @@ class PlanAuditSpec extends SparkTestBase {
     "q12v_heavy_hitters" -> "Misra-Gries candidate row (1 row, <=k cands)",
     "q12x_bigram_logprob" -> "corpus totals scalar",
     "q12y_bm25_topk" -> "corpus stats scalar",
+    "q12t_perplexity_buckets" -> "corpus token-total scalar (q12r's xentPerDoc)",
     "q25_basket_rules" -> "basket-count scalar",
     "q26a_profile" -> "global sketch agg, 1 row",
     "q26b_integrity" -> "two 1-row audit aggs",
@@ -57,6 +58,7 @@ class PlanAuditSpec extends SparkTestBase {
     "q26f_skew_audit" -> "capped top-k hot-key row",
     "q26g_hll_merge" -> "merged HLL sketch, 1 row",
     "q26h_hll_overlap" -> "two 1-row HLL sketches",
+    "q28_rfm_segments" -> "max-order-date scalar (RFM recency)",
     "q28b_abc_classification" -> "revenue grand-total scalar",
     "q17d_orc_roundtrip" -> "1-row extra/missing audit aggs",
     // literal constant frames (rows fixed in source code)
@@ -333,6 +335,8 @@ class PlanAuditSpec extends SparkTestBase {
     val centFrame = "struct<cell:int,cemb:array<float>,cn2:double>"
     val exprHits = Seq(
       ("q12r_unigram_logprob",
+        "EXPR SORT_ARRAY struct<term:string,x:double>") -> dn,
+      ("q12t_perplexity_buckets", // q12r's xentPerDoc, below its rank
         "EXPR SORT_ARRAY struct<term:string,x:double>") -> dn,
       ("q12x_bigram_logprob",
         "EXPR SORT_ARRAY struct<w1:string,w2:string,x:double>") -> dn,

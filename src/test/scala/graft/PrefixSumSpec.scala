@@ -86,4 +86,16 @@ class PrefixSumSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(out == Map(1L -> 0L, 2L -> 5L, 3L -> 12L))
   }
+
+  /** The scan is a plan node that adds two attributes; its frame must
+    * still join with itself the way any DataFrame does.
+    */
+  test("a prefix-sum frame joins with itself") {
+    import spark.implicits._
+    val df = spark.range(20).select($"id", ($"id" % 3).as("v"))
+    val p = PrefixSum.exclusivePrefixSum(df, Seq($"id"), $"v", "pre", numPartitions = 4)
+    val pairs = p.as("a").join(p.as("b"), $"a.id" === $"b.id" + 1)
+      .select($"a.pre" - $"b.pre", $"b.v").collect()
+    assert(pairs.length == 19 && pairs.forall(r => r.getLong(0) == r.getLong(1)))
+  }
 }

@@ -36,7 +36,8 @@ class SourceHygieneSpec extends AnyFunSuite {
     //   PcaQueries       d x d covariance matrix (d = embedding dim)
     //   SimilarityQueries limit(1) dimensionality probe
     //   PrefixSum        the two-pass scan's pass-1 sums, one row per
-    //                    (partition, group): O(partitions + groups)
+    //                    (partition, group): O(partitions + groups),
+    //                    collected inside PrefixScanExec's execution
     //   Sources          file-listing / distinct-year audits, bounded
     //                    by file and calendar cardinality (2 sites)
     val expected = Map(
@@ -63,14 +64,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       "text/DedupQueries.scala" -> 1))
   }
 
-  test("RDD drop-downs only inside the two-pass partition operators") {
-    // PrefixSum's scan (behind DistributedRank too) is BUILT on
-    // per-partition passes (SURVEY §9); Tables uses
-    // rdd.getNumPartitions as a plan probe. Everything else stays in
-    // the Dataset API where Catalyst can see.
+  test("RDD drop-downs only in Tables' partition-count probe") {
+    // Tables uses rdd.getNumPartitions as a plan probe; everything
+    // else, PrefixSum's two passes included (a planned PrefixScanExec),
+    // stays in the plan where Catalyst and explain can see it
     val files = countsOf("""\.rdd\b""").keySet
-    val allowed = Set("operators/PrefixSum.scala", "Tables.scala")
+    val allowed = Set("Tables.scala")
     assert(files.subsetOf(allowed), s"unexpected .rdd usage in ${files -- allowed}")
+  }
+
+  test("no plan exits: no toRdd and no DataFrame rebuilt from internal rows") {
+    // code only, over every source file including the Spark bridge: a
+    // multi-pass operator is a planned node (PrefixScan), never a
+    // round trip through an RDD of catalyst rows
+    assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*(internalCreateDataFrame\(|\.toRdd\b)""",
+      Paths.get("src/main/scala")) === Map.empty[String, Int])
   }
 
   test("no cache/persist/unpersist code sites: Staging.stage holds every intermediate") {

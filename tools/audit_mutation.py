@@ -516,8 +516,8 @@ MUTATIONS = [
          subs=[('        case so if so.nullOrdering == NullsFirst && so.child.nullable =>',
                 '        case so if so.nullOrdering == NullsFirst && !so.child.nullable =>')]),
     # PrefixSum.scan's internal sort (behind both PrefixSum and
-    # DistributedRank) hides behind an RDD boundary the census cannot
-    # see, so the scan normalizes its null ordering to NULLS LAST
+    # DistributedRank) takes whatever order its caller passes, so the
+    # scan normalizes its null ordering to NULLS LAST
     # (DuckDB's default) at the ColumnNode level — one call guards
     # both operators. A plausible "preserve the caller's ordering"
     # slip restores Spark's nulls-first asc default — a nullable ASC

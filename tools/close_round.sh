@@ -136,7 +136,8 @@ for name, st in status.items():
                          mem_spill=c["mem_spill_bytes"],
                          disk_spill=c["disk_spill_bytes"],
                          shuffle_rw_mb=[round(c["shuffle_read_bytes"]/1e6),
-                                        round(c["shuffle_write_bytes"]/1e6)])
+                                        round(c["shuffle_write_bytes"]/1e6)],
+                         shuffle_write_records=c["shuffle_write_records"])
             entry["green"] &= (c["mem_spill_bytes"] == 0
                                and c["disk_spill_bytes"] == 0
                                and not c["failed"])
