@@ -6,15 +6,19 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one place a graft session is configured: every tool main and
   * the test base build their session here, so core count, shuffle
   * width, time zone, logging and [[GraftConf.tune]] cannot drift apart
   * between them. Also hosts the one way to ask what a call cost
   * ([[measure]]), which the measurement mains and the scale specs read
-  * jobs, shuffle and spill from, and the one parser of the mains' name
-  * selections ([[selection]]).
+  * jobs, shuffle and spill from, the one way to produce a frame's
+  * whole result ([[materialize]]), and the one parser of the mains'
+  * name selections ([[selection]]).
   */
 object GraftSession {
 
@@ -71,7 +75,7 @@ object GraftSession {
       shuffleWriteBytes: Long, shuffleWriteRecords: Long, shuffleReadBytes: Long,
       memSpill: Long, diskSpill: Long, peakExecMem: Long, compiles: Long)
 
-  private val groups = new AtomicLong
+  private val ids = new AtomicLong
 
   /** Charges to `group` every job started under it, and every stage
     * submitted under it with all of that stage's tasks. The bus calls
@@ -114,7 +118,7 @@ object GraftSession {
   def measure[T](spark: SparkSession, label: String)(body: => T): (T, Measured) = {
     val sc = spark.sparkContext
     val saved = groupProps.map(k => k -> sc.getLocalProperty(k))
-    val group = s"graft-measure-${groups.incrementAndGet()}"
+    val group = s"graft-measure-${ids.incrementAndGet()}"
     val listener = new GroupListener(group)
     sc.addSparkListener(listener)
     try {
@@ -130,5 +134,33 @@ object GraftSession {
       saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Produces `df`'s whole result and returns its row count. The rows
+    * go to the `noop` sink, so every output column is computed (a
+    * `count()` lets Catalyst prune them), and the count rides the same
+    * write as a named observed metric, read off the write's query
+    * execution once the bus has delivered it. Not through an
+    * `Observation`: that sets the session's non-serializable
+    * observation manager, after which any task closure that captures
+    * the session (q9j's random-forest training summary does) fails
+    * with "Task not serializable". It never nests a [[measure]], so a
+    * caller's enclosing `measure` is charged every job it starts.
+    */
+  def materialize(df: DataFrame): Long = {
+    val name = s"graft_rows_${ids.incrementAndGet()}"
+    @volatile var rows = Option.empty[Long]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(r => rows = Some(r.getLong(0)))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val spark = df.sparkSession
+    spark.listenerManager.register(listener)
+    try {
+      df.observe(name, count(lit(1))).write.format("noop").mode("overwrite").save()
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
+      rows.getOrElse(throw new IllegalStateException(s"the noop write reported no $name"))
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -84,18 +84,17 @@ object NullOrderCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.session()
-    SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.startsWith("q15")).foreach { name =>
-        try {
-          val plan: LogicalPlan =
-            SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed
-          (asymmetricHits(plan) ++ exprSortHits(plan))
-            .foreach(h => println(s"$name\t$h"))
-        } catch {
-          case t: Throwable =>
-            println(s"$name\tERROR ${t.getMessage.take(80)}")
-        }
+    BenchSets.census.foreach { name =>
+      try {
+        val plan: LogicalPlan =
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed
+        (asymmetricHits(plan) ++ exprSortHits(plan))
+          .foreach(h => println(s"$name\t$h"))
+      } catch {
+        case t: Throwable =>
+          println(s"$name\tERROR ${t.getMessage.take(80)}")
       }
+    }
     spark.stop()
   }
 }

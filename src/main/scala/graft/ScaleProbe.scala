@@ -13,7 +13,8 @@ import graft.text.{DedupQueries, KMeansQueries, SimilarityQueries, TfIdfQueries}
 /** Decade-up scale probe for the scale-critical extension families.
   * For each factor f it builds an f-times corpus from disjoint shards
   * of the base data, runs each family's timed query under
-  * [[GraftSession.measure]], then measures the family's candidate
+  * [[GraftSession.measure]] (a query's whole result, produced by
+  * [[GraftSession.materialize]]), then measures the family's candidate
   * structure outside the timing window from the query's own building
   * blocks. Adjacent factors are compared through a growth exponent
   * ln(m₂/m₁) / ln(f₂/f₁) for every numeric key (1.0 = linear, 0 =
@@ -94,7 +95,7 @@ object ScaleProbe {
       mass: Option[(SparkSession, String) => Keys] = None)
 
   private def rows(key: String, q: GraftQuery)(spark: SparkSession, dir: String): () => Keys =
-    () => Seq(key -> q.fn(spark, dir).count())
+    () => Seq(key -> GraftSession.materialize(q.fn(spark, dir)))
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).documentsNoFanOut
   private def vecs(spark: SparkSession, dir: String): DataFrame =

@@ -4,10 +4,13 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{broadcast, col, lit, raise_error}
 
 /** [[GraftSession.measure]] charges each call only its own work, is
   * complete when it returns, and leaves the caller's job group alone.
+  * [[GraftSession.materialize]] produces every output column, and
+  * [[Bench.run]] measures a query's build and its whole result apart.
   */
 class MeasureSpec extends SparkTestBase {
 
@@ -52,5 +55,33 @@ class MeasureSpec extends SparkTestBase {
       assert(sc.getLocalProperty("spark.job.description") == "caller's work")
       assert(sc.statusTracker.getJobIdsForGroup("caller").isEmpty)
     } finally sc.clearJobGroup()
+  }
+
+  test("materialize computes every output column and returns the row count") {
+    // count() prunes x, so only materialize meets the raised error
+    val boom = spark.range(0, 5, 1, 2).select(col("id"), raise_error(lit("boom")).as("x"))
+    assert(boom.count() == 5)
+    // frame -> its row count, or None when producing it must fail
+    val cases = Seq[(String, DataFrame, Option[Long])](
+      ("a pruned failing column", boom, None),
+      ("seven rows", spark.range(0, 7, 1, 3).toDF(), Some(7L)),
+      ("an empty frame", spark.range(0, 10, 1, 2).filter(col("id") < 0).toDF(), Some(0L)),
+      ("an empty aggregate", spark.range(0, 10, 1, 2).filter(col("id") < 0)
+        .groupBy((col("id") % 3).as("k")).count(), Some(0L)))
+    cases.foreach {
+      case (what, df, Some(n)) => assert(GraftSession.materialize(df) == n, what)
+      case (what, df, None) => intercept[Exception](GraftSession.materialize(df))
+    }
+    // a task closure that captures the session (an ML model's training
+    // summary does) can still serialize it
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream).writeObject(spark)
+  }
+
+  test("Bench.run charges the frame's build and its whole result to separate records") {
+    Seq("q29_bpe_train", "q12k_curation_pipeline").foreach { n =>
+      val r = Bench.run(spark, sfDir, n).getOrElse(fail(s"$n failed"))
+      assert(r.build.jobs > 0 && r.action.jobs > 0, s"$n: $r")
+      assert(r.rows == SparkEntry.queries(n)(spark, sfDir).collect().length, n)
+    }
   }
 }

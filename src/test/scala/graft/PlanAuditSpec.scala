@@ -187,12 +187,13 @@ class PlanAuditSpec extends SparkTestBase {
     * (documented bounded windows drowned the tail), which is safe
     * ONLY while this spec provably audits everything a tool main CAN
     * run. Bench can time any REGISTERED name — the membership lists
-    * plus arbitrary SPARK_GRAFT_BENCH_ONLY one-offs — and SpillCensus
-    * runs the whole registry, so coverage is asserted over the WHOLE
-    * registry minus the streaming entries (whose stateful plans are
+    * plus arbitrary SPARK_GRAFT_BENCH_ONLY one-offs — and its census
+    * pass runs every timeable query ([[BenchSets.census]]: the whole
+    * registry minus the streaming entries, whose stateful plans are
     * pinned in StreamingSpec / StreamingScaleSpec instead — batch
     * plan-auditing a sink read-back would say nothing about their
-    * join shape), not just over BenchSets membership.
+    * join shape), so coverage is asserted over that whole set, not
+    * just over BenchSets membership.
     */
   test("every timeable query (whole registry minus q15) is registered and plan-audited") {
     val benched = (BenchSets.headline ++ BenchSets.ext).distinct
@@ -200,8 +201,7 @@ class PlanAuditSpec extends SparkTestBase {
     assert(unregistered.isEmpty,
       s"benched but not registered: ${unregistered.mkString(", ")}")
     val auditedNames = audits.map(_.name).toSet
-    val uncovered = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => n.startsWith("q15") || auditedNames(n))
+    val uncovered = BenchSets.census.filterNot(auditedNames)
     assert(uncovered.isEmpty,
       s"registered but not plan-audited (BENCH_ONLY could time these " +
         s"behind the silenced WindowExec logger): ${uncovered.mkString(", ")}")

@@ -125,4 +125,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(sites("""addSparkListener\(""", "src/test/scala") === Map.empty[String, Int])
     assert(sites("""Thread\.sleep\(""", "src/main/scala") === Map.empty[String, Int])
   }
+
+  test("five tool mains, and Bench produces whole results, never a count()") {
+    // code only; Bench times GraftSession.materialize, which computes
+    // every output column a count() would let Catalyst prune
+    def code(call: String) = """(?m)^(?!\s*(\*|//))(?:(?!//).)*""" + call
+    assert(countsOf(code("""\bdef main\("""), Paths.get("src/main/scala")) === Seq(
+      "Bench", "NullOrderCensus", "PlanDump", "ScaleProbe", "Verify")
+      .map(m => s"graft/$m.scala" -> 1).toMap)
+    assert(!countsOf(code("""\.count\(\)""")).contains("Bench.scala"))
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # One-command round close: runs every close gate SEQUENTIALLY (the
 # degenerate and mutation audits share Spark temp dirs / mutated
-# sources with sbt test, and concurrent load skews bench and census)
+# sources with sbt test, and concurrent load skews the bench)
 # and emits ONE JSON ledger line, so a close can't silently skip a gate.
 #
 # Gates (in order):
@@ -12,10 +12,12 @@
 #                work tree on the mutated files)
 #   replica    — sf0.01 full-registry graft.Verify + DuckDB compare
 #                (the driver-gate replica; expect 171/0)
-#   census     — graft.SpillCensus at sf0.1 (expect zero spill)
 #   bench      — standalone fresh-JVM full bench at sf0.1 (sbt-forked
 #                samples read high, and subset runs are JIT-cold);
-#                headline/ext mins land in the ledger line
+#                headline/ext mins and the census of its untimed first
+#                pass (every query but the q15 twins) land in the
+#                ledger line; green iff no query failed and nothing
+#                spilled
 #   delta      — dated Delta/Iceberg/Hudi classpath recheck (expect 0
 #                jars; if nonzero, the q17i/k emulations have a real
 #                backend to swap in — see SURVEY)
@@ -23,7 +25,7 @@
 # The JVMs use every core (GraftSession's default; SPARK_GRAFT_CPUS
 # overrides) and half the machine's memory clamped to 2-8 GB as heap.
 #
-# Usage: tools/close_round.sh [gate ...]     (default: all seven)
+# Usage: tools/close_round.sh [gate ...]     (default: all six)
 # Output: per-gate logs under /tmp/close_round/, one JSON summary line
 # on stdout (also saved to /tmp/close_round/ledger.json). Exit 0 iff
 # every requested gate is green.
@@ -42,7 +44,7 @@ HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 
 jvm() { java $OPENS -Xmx"$HEAP" -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"; }
 
 gates=("$@")
-[ $# -eq 0 ] && gates=(suite degenerate mutation replica census bench delta)
+[ $# -eq 0 ] && gates=(suite degenerate mutation replica bench delta)
 : > "$OUT/status"
 
 run_gate() { # run_gate <name> <cmd...>
@@ -66,10 +68,6 @@ gate_replica() {
   python3 tools/check_oracle.py /root/testdata/sf0.01 "$OUT/replica_dump"
 }
 
-gate_census() {
-  jvm graft.SpillCensus  # sf0.1 is its default
-}
-
 gate_bench() {
   SPARK_GRAFT_BENCH_DETAIL="$OUT/bench_detail.json" jvm graft.Bench  # sf0.1 default
 }
@@ -88,7 +86,6 @@ for g in "${gates[@]}"; do
     degenerate) run_gate degenerate tools/audit_degenerate.sh ;;
     mutation)   run_gate mutation tools/audit_mutation.sh ;;
     replica)    run_gate replica gate_replica ;;
-    census)     run_gate census gate_census ;;
     bench)      run_gate bench gate_bench ;;
     delta)      run_gate delta gate_delta ;;
     *) echo "unknown gate: $g"; overall=1; continue ;;
@@ -128,29 +125,29 @@ for name, st in status.items():
         m = re.search(r"== (\d+) pass / (\d+) fail ==", text)
         if m: entry["oracle"] = f"{m.group(1)}/{m.group(2)}"
         entry["green"] &= bool(m) and m.group(2) == "0"
-    elif name == "census":
-        m = re.search(r'\{"metric":"spill_census".*\}', text)
-        if m:
-            c = json.loads(m.group(0))
-            entry.update(n_queries=c["n_queries"], failed=c["failed"],
-                         mem_spill=c["mem_spill_bytes"],
-                         disk_spill=c["disk_spill_bytes"],
-                         shuffle_rw_mb=[round(c["shuffle_read_bytes"]/1e6),
-                                        round(c["shuffle_write_bytes"]/1e6)],
-                         shuffle_write_records=c["shuffle_write_records"])
-            entry["green"] &= (c["mem_spill_bytes"] == 0
-                               and c["disk_spill_bytes"] == 0
-                               and not c["failed"])
-        else:
-            entry["green"] = False
     elif name == "bench":
         m = re.search(r'\{"metric":"total".*\}', text)
         if m:
             b = json.loads(m.group(0))
+            c = b["census"]
+            # per-query census records (build + action) from the side file
+            census = json.load(open(f"{out}/bench_detail.json"))["census"]
+            def shuffle_mb(key):
+                return round(sum(r[ph][key] for r in census.values() if r
+                                 for ph in ("build", "action")) / 1e6)
+            # a query that failed in the census or in any timed pass
+            failed = sorted(set(b["failed"]) | set(c["failed"]))
             entry.update(headline_min=b["value"],
                          median_total=b["median_total"],
-                         ext_total=b["ext_total"], failed=b["failed"])
-            entry["green"] &= not b["failed"]
+                         ext_total=b["ext_total"], failed=failed,
+                         n_queries=c["n_queries"],
+                         mem_spill=c["mem_spill_bytes"],
+                         disk_spill=c["disk_spill_bytes"],
+                         shuffle_rw_mb=[shuffle_mb("shuffle_read_bytes"),
+                                        shuffle_mb("shuffle_write_bytes")],
+                         shuffle_write_records=c["shuffle_write_records"])
+            entry["green"] &= (not failed and c["mem_spill_bytes"] == 0
+                               and c["disk_spill_bytes"] == 0)
         else:
             entry["green"] = False
     elif name == "delta":
