@@ -1,43 +1,38 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.queries.GraftQuery
-import graft.Staging.Stageable
 
-/** BPE merge-rule TRAINING as iterative dataflow — the step q12e's
-  * BPE-ish tokenizer presupposes: learn the merge table itself from
-  * corpus pair statistics (count adjacent symbol pairs weighted by
-  * word frequency → take the argmax pair → rewrite every vocabulary
-  * entry → repeat). This is how production tokenizer trainers work:
-  * ONE corpus-scale aggregation builds the (word, freq) vocabulary,
-  * and every training round after that runs at VOCABULARY grain
-  * (millions of rows at 100 TB, never the corpus), so the loop's
-  * per-round cost is a vocab-grain shuffle + a broadcast 1-row argmax
-  * — the pageRank iteration discipline applied to tokenizers.
+/** BPE merge-rule TRAINING — the step q12e's BPE-ish tokenizer
+  * presupposes: learn the merge table itself from corpus pair
+  * statistics (count adjacent symbol pairs weighted by word frequency
+  * → take the argmax pair → rewrite every vocabulary entry → repeat).
+  * ONE corpus-scale aggregation builds the (word, freq) vocabulary in
+  * Spark; every training round after it runs at VOCABULARY grain.
+  * The rounds form a sequential chain (each argmax reads the previous
+  * rewrite), so, as production tokenizer trainers do, they all run in
+  * ONE task over the whole vocabulary ([[train]]): its state is
+  * O(distinct words) symbol sequences, never the corpus, and a run
+  * builds one plan instead of a plan and staged vocabulary per round.
   *
-  * Determinism devices: symbol sequences are UNIT-SEPARATOR-joined
-  * strings; the merge rewrite is a left-to-right fold at SYMBOL
-  * granularity (see [[mergeSeqCol]]) implemented identically on both
-  * engines (Spark `aggregate` over the split sequence; DuckDB
-  * `list_reduce`) — greedy non-overlapping, whole-symbol matches
-  * only; pair counts are integer SUMs of integer frequencies
-  * (order-free); the argmax tie-breaks lexicographically on (count
-  * DESC, l ASC, r ASC). The whole k-round chain therefore hash-gates
-  * exactly against the unrolled DuckDB twin.
+  * Determinism: symbols are code points, as Spark's `substring`
+  * splits them; pair counts are integer sums of
+  * integer frequencies (order-free); the argmax breaks ties on (count
+  * DESC, l ASC, r ASC) with strings in UTF-8 byte order, the order of
+  * Spark's `orderBy` and DuckDB's `ORDER BY`; each merge is greedy,
+  * left to right, non-overlapping, over whole symbols. The whole
+  * k-round chain therefore hash-gates exactly against the unrolled
+  * DuckDB twin.
   */
 object BpeQueries {
 
   /** Number of merge rules to learn. */
   val Merges = 6
-
-  /** Symbol delimiter inside a sequence string: US (0x1F) never
-    * appears in text tokens (tokens containing it are excluded on
-    * both engines — a guard, not an expectation).
-    */
-  private val US = "\u001f"
 
   private def roundSql(k: Int): String =
     s"""pairs$k AS (
@@ -58,28 +53,42 @@ object BpeQueries {
        |           ELSE acc || chr(31) || x END) AS seq
        |  FROM v${k - 1}, best$k b)""".stripMargin
 
-  /** One merge round applied at SYMBOL granularity: left-to-right fold
-    * over the split sequence, merging when the accumulator's LAST
-    * SYMBOL equals l and the incoming symbol equals r. A raw string
-    * `replace(seq, l∥US∥r, l∥r)` anchors only the internal separator
-    * and false-matches across a symbol boundary once a learned symbol
-    * ENDS in l (e.g. [ab, c] under rule (b, c) would fuse to 'abc');
-    * the fold compares whole symbols, so that can't happen. The fold
-    * is still BPE's greedy non-overlapping order: a just-merged last
-    * symbol is l∥r ≠ l, so it can never be the left side of another
-    * merge in the same round — exactly the i += 2 skip of the
-    * imperative scan (BpeSpec.trainReference pins the equivalence).
+  /** Learns up to `merges` rules from a (word, freq) vocabulary:
+    * (step, merged symbol, pair count) per round, in step order. It
+    * stops early once no word holds two symbols. Holds the vocabulary's
+    * symbol sequences and one round's pair counts in memory.
     */
-  private def mergeSeqCol(seq: Column, l: Column, r: Column): Column =
-    array_join(
-      aggregate(
-        split(seq, US),
-        array().cast("array<string>"),
-        (acc: Column, x: Column) =>
-          when(size(acc) > 0 && element_at(acc, -1) === l && x === r,
-            concat(slice(acc, lit(1), size(acc) - 1), array(concat(l, r))))
-            .otherwise(concat(acc, array(x)))),
-      US)
+  def train(vocab: Iterator[(String, Long)], merges: Int): Seq[(Int, String, Long)] = {
+    val words = vocab.map { case (w, f) =>
+      val u = UTF8String.fromString(w)
+      (Array.tabulate(u.numChars)(i => u.substring(i, i + 1)), f)
+    }.toArray
+    def round(k: Int): Option[(Int, String, Long)] = {
+      val counts = mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+      for ((syms, f) <- words; i <- 1 until syms.length) {
+        val p = (syms(i - 1), syms(i))
+        counts(p) = counts.getOrElse(p, 0L) + f
+      }
+      if (counts.isEmpty) None
+      else {
+        val ((l, r), c) = counts.minBy { case ((a, b), n) => (-n, a, b) }
+        val lr = UTF8String.concat(l, r)
+        words.mapInPlace { case (syms, f) =>
+          val b = mutable.ArrayBuilder.make[UTF8String]
+          var i = 0
+          while (i < syms.length) {
+            if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+              b += lr; i += 2
+            } else { b += syms(i); i += 1 }
+          }
+          (b.result(), f)
+        }
+        Some((k, lr.toString, c))
+      }
+    }
+    // rounds run in step order, each rewriting `words` for the next
+    Iterator.range(1, merges + 1).map(round).takeWhile(_.isDefined).flatten.toSeq
+  }
 
   /** q29 — the learned merge table: (step, merged symbol, corpus pair
     * count). Each row depends on every rewrite before it, so the hash
@@ -107,51 +116,16 @@ object BpeQueries {
             .mkString("\nUNION ALL\n")}
        |) ORDER BY step""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val docs = Tables(spark, dir).documents
-    // the ONLY corpus-scale pass: word frequencies
-    val words = docs
+    // the ONLY corpus-scale pass: word frequencies. The twin joins
+    // symbols with US (0x1F), so both engines drop words holding it.
+    Tables(spark, dir).documents
       .select(explode(TextQueries.words($"text")).as("w"))
-      .filter(length($"w") > 0 && !$"w".contains(US))
+      .filter(length($"w") > 0 && !$"w".contains("\u001f"))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
-    var vocab = words.select($"w".as("word"), $"freq",
-      array_join(expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"), US)
-        .as("seq"))
-      .staged
-    var bests = Seq.empty[DataFrame]
-    for (k <- 1 to Merges) {
-      val pairs = vocab
-        .select($"freq", split($"seq", US).as("syms"))
-        .select($"freq", explode(expr(
-          """zip_with(slice(syms, 1, size(syms) - 1),
-            |         slice(syms, 2, size(syms) - 1),
-            |         (a, b) -> struct(a AS l, b AS r))""".stripMargin))
-          .as("p"))
-        .groupBy($"p.l".as("l"), $"p.r".as("r"))
-        .agg(sum($"freq").as("c"))
-      // argmax with total tie-break → a deterministic 1-row frame,
-      // broadcast onto the vocab for the map-side rewrite
-      val best = pairs.orderBy($"c".desc, $"l".asc, $"r".asc).limit(1)
-        .staged
-      bests = bests :+ best.select(lit(k).as("step"),
-        concat($"l", $"r").as("merged"), $"c".as("pair_count"))
-      vocab = vocab.crossJoin(broadcast(best))
-        .select($"word", $"freq",
-          mergeSeqCol($"seq", $"l", $"r").as("seq"))
-        .staged
-    }
-    bests.reduce(_ unionByName _).orderBy($"step")
-  }
-
-  /** Re-tokenize the vocabulary with a learned merge table (apply
-    * rules in training order — BPE inference at vocab grain). Exposed
-    * for the spec's round-trip check.
-    */
-  def applyMerges(vocab: DataFrame, merges: Seq[(String, String)])
-      : DataFrame = {
-    merges.foldLeft(vocab) { case (v, (l, r)) =>
-      v.withColumn("seq", mergeSeqCol(col("seq"), lit(l), lit(r)))
-    }
+      .repartition(1)
+      .as[(String, Long)]
+      .mapPartitions(vocab => train(vocab, Merges).iterator)
+      .toDF("step", "merged", "pair_count")
   }
 
   val all: Seq[GraftQuery] = Seq(q29BpeTrain)

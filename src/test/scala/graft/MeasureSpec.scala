@@ -78,7 +78,7 @@ class MeasureSpec extends SparkTestBase {
   }
 
   test("Bench.run charges the frame's build and its whole result to separate records") {
-    Seq("q29_bpe_train", "q12k_curation_pipeline").foreach { n =>
+    Seq("q12t_perplexity_buckets", "q12k_curation_pipeline").foreach { n =>
       val r = Bench.run(spark, sfDir, n).getOrElse(fail(s"$n failed"))
       assert(r.build.jobs > 0 && r.action.jobs > 0, s"$n: $r")
       assert(r.rows == SparkEntry.queries(n)(spark, sfDir).collect().length, n)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.etl.{EtlQueries, Warehouse}
@@ -11,7 +13,7 @@ import graft.queries.AnalyticalQueries
   * filters and projections pushed into the parquet scan, whole-stage
   * codegen covering the hot path.
   */
-class PlanSpec extends SparkTestBase {
+class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def executedPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -334,14 +336,23 @@ class PlanSpec extends SparkTestBase {
       s"a sketch rollup join fell off broadcast:\n$plan")
   }
 
-  test("q29 BPE training: vocab rewrite joins are 1-row broadcasts") {
-    val df = graft.text.BpeQueries.q29BpeTrain.fn(spark, sfDir)
-    df.collect()
-    val plan = executedPlan(df)
-    // per-round rewrite = crossJoin(broadcast(1-row argmax)): a
-    // BroadcastNestedLoopJoin over one row is the designed shape; a
-    // CartesianProduct (both sides unbroadcast) is the failure
-    assert(!plan.contains("CartesianProduct"),
-      s"BPE rewrite degraded to a cartesian:\n$plan")
+  test("q29 BPE training: builds with no job and runs in at most 4") {
+    val (df, build) = GraftSession.measure(spark, "q29/build")(
+      graft.text.BpeQueries.q29BpeTrain.fn(spark, sfDir))
+    assert(build.jobs == 0, s"q29's build ran jobs: $build")
+    // the word-count scan and shuffle, the single-partition shuffle
+    // into the training task, and the result
+    val (_, action) = GraftSession.measure(spark, "q29/action")(
+      GraftSession.materialize(df))
+    assert(action.jobs <= 4, s"q29 ran ${action.jobs} jobs: $action")
+    // no per-round lambda or cross join is left in the plan
+    val plan = df.queryExecution.executedPlan
+    val found = collectWithSubqueries(plan) { case p =>
+      p.nodeName +: p.expressions.flatMap(_.collect {
+        case e @ (_: ArrayAggregate | _: ZipWith) => e.nodeName
+      })
+    }.flatten
+    Seq("ArrayAggregate", "ZipWith", "CartesianProduct").foreach(n =>
+      assert(!found.contains(n), s"q29 plans $n:\n$plan"))
   }
 }

@@ -252,9 +252,9 @@ MUTATIONS = [
     dict(id="m30_q29_bpe_rarest_pair", query="q29_bpe_train",
          gate="oracle",
          file="src/main/scala/graft/text/BpeQueries.scala",
-         desc="BPE merge picks the RAREST pair each round (sort direction slip)",
-         subs=[('val best = pairs.orderBy($"c".desc, $"l".asc, $"r".asc).limit(1)',
-                'val best = pairs.orderBy($"c".asc, $"l".asc, $"r".asc).limit(1)')]),
+         desc="BPE merge picks the RAREST pair each round (argmax direction slip)",
+         subs=[('counts.minBy { case ((a, b), n) => (-n, a, b) }',
+                'counts.minBy { case ((a, b), n) => (n, a, b) }')]),
     dict(id="m32_q23_probe_neighborhood", query="q23_proximity_join",
          gate="oracle",
          file="src/main/scala/graft/operators/RangeJoin.scala",
