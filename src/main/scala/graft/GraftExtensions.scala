@@ -5,7 +5,6 @@ import org.apache.spark.sql.GraftColumnBridge
 
 import graft.functions.{NGramExpressions, NormalizeText, VectorExpressions}
 import graft.operators.PrefixScanStrategy
-import graft.plans.{GeoRules, Norm2Rewrite}
 
 /** THE session extension for the graft engine — registers everything
   * the library adds to a Spark session in one place:
@@ -14,12 +13,12 @@ import graft.plans.{GeoRules, Norm2Rewrite}
   *    vector expressions, [[graft.functions.VectorExpressions]]),
   *    `graft_ngrams`, and `graft_nfc` / `graft_nfkc` Unicode
   *    normalization ([[graft.functions.NormalizeText]])
-  *  - optimizer rules: [[graft.plans.Norm2Rewrite]] (`graft_dot(e,e)`
-  *    → `graft_norm2(e)`) and
-  *    [[graft.plans.GeoRules.RewriteWithinRadius]] (geo-radius marker
-  *    → pushdown-able bbox ∧ exact haversine)
   *  - planner strategy: [[graft.operators.PrefixScanStrategy]] (the
   *    `PrefixScan` node behind PrefixSum and DistributedRank)
+  *
+  * It adds no optimizer rule: what a query needs rewritten it writes
+  * as Columns (`Geo.withinRadiusKm` composes its bounding box), so no
+  * plan depends on whether the session ran an install first.
   *
   * Wire-up:
   *
@@ -33,7 +32,6 @@ import graft.plans.{GeoRules, Norm2Rewrite}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    GraftExtensions.rules.foreach(rule => ext.injectOptimizerRule(_ => rule))
     ext.injectPlannerStrategy(_ => PrefixScanStrategy)
   }
 }
@@ -41,22 +39,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   private val functions = Seq(VectorExpressions.dotDescriptor, VectorExpressions.norm2Descriptor,
     NGramExpressions.ngramsDescriptor, NormalizeText.nfcDescriptor, NormalizeText.nfkcDescriptor)
-  private val rules = Seq(Norm2Rewrite, GeoRules.RewriteWithinRadius)
 
   /** Registers the extension set on a live session. Idempotent, and
-    * atomic across threads: the appends to `extraOptimizations` and
-    * `extraStrategies` are check-then-write, so concurrent callers on
-    * a fresh session could otherwise lose or duplicate an append.
+    * atomic across threads: the function registrations and the append
+    * to `extraStrategies` are check-then-write, so concurrent callers
+    * on a fresh session could otherwise duplicate an append.
     */
   def install(spark: SparkSession): Unit = synchronized {
     val reg = GraftColumnBridge.functionRegistry(spark)
     functions.foreach { case (ident, info, builder) =>
       if (!reg.functionExists(ident)) reg.registerFunction(ident, info, builder)
     }
-    // spark.experimental is the public post-hoc seam for optimizer
-    // rules and planner strategies on an already-built session
+    // spark.experimental is the public post-hoc seam for planner
+    // strategies on an already-built session
     val x = spark.experimental
-    x.extraOptimizations ++= rules.filterNot(x.extraOptimizations.contains)
     if (!x.extraStrategies.contains(PrefixScanStrategy)) x.extraStrategies :+= PrefixScanStrategy
   }
 }

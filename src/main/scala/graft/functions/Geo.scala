@@ -14,8 +14,8 @@ object Geo {
 
   /** Kilometres per degree of latitude on that sphere (π·R/180).
     * Exact on the haversine sphere: great-circle distance ≥ this ×
-    * |Δlat|, which is what makes the bounding-box prefilter a
-    * NECESSARY condition (see graft.plans.RewriteWithinRadius).
+    * |Δlat|, which is what makes [[withinRadiusKm]]'s bounding-box
+    * prefilter a NECESSARY condition.
     */
   val KmPerDegLat: Double = math.Pi * EarthRadiusKm / 180.0
 
@@ -28,14 +28,15 @@ object Geo {
         cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLng), 2)))
   }
 
-  /** Radius predicate that plans through the optimizer marker: with
-    * [[graft.plans.GeoRules]] installed, `filter(withinRadiusKm(...))`
-    * is rewritten to a cheap latitude bounding-box prefilter (pushdown-
-    * able, prunes row groups) ∧ the exact haversine test.
+  /** Radius predicate: a latitude bounding box ∧ the exact haversine
+    * test. The box is necessary on the sphere (see [[KmPerDegLat]]),
+    * so it changes no result; it costs one subtraction and one
+    * comparison, and rejects most far pairs before any `sin` runs.
     */
   def withinRadiusKm(lat1: Column, lng1: Column, lat2: Column, lng2: Column,
                      radiusKm: Column): Column =
-    graft.plans.GeoRules.marker(lat1, lng1, lat2, lng2, radiusKm)
+    abs(lat1 - lat2) <= radiusKm / KmPerDegLat &&
+      haversineKm(lat1, lng1, lat2, lng2) <= radiusKm
 
   /** Deterministic pseudo-coordinates derived from integer keys —
     * the harness schema has no lat/lng, so geo queries synthesize

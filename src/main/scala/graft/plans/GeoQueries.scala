@@ -2,18 +2,21 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, Tables}
+import graft.Tables
 import graft.functions.Geo
 import graft.queries.GraftQuery
 import graft.Staging.Stageable
 
-/** Query surface of the [[GeoRules]] optimizer extension. */
+/** The geo queries (SURVEY §2.8 F7): radius search, grid-cell
+  * proximity self-join and hotspot clustering over the demo
+  * coordinates of [[Geo]].
+  */
 object GeoQueries {
 
-  /** q19 — radius search through the `withinRadiusKm` marker: lines
-    * whose customer sits within 500 km of the supplier, counted per
-    * nation. The oracle applies the PLAIN haversine predicate — a
-    * hash match proves the bbox-strengthened rewrite changes nothing.
+  /** q19 — radius search through [[Geo.withinRadiusKm]]: lines whose
+    * customer sits within 500 km of the supplier, counted per nation.
+    * The oracle applies the PLAIN haversine predicate — a hash match
+    * proves the bounding box in front of it changes nothing.
     */
   val q19GeoRadius: GraftQuery = GraftQuery(
     "q19_geo_radius",
@@ -28,7 +31,6 @@ object GeoQueries {
           Geo.demoLatSql("l_suppkey"), Geo.demoLngSql("l_suppkey"))} <= 500
        |GROUP BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    GraftExtensions.install(spark)
     val t = Tables(spark, dir)
     t.lineitem
       .join(t.orders, $"l_orderkey" === $"o_orderkey")

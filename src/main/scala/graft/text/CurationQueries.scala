@@ -88,11 +88,12 @@ object CurationQueries {
   // q12h — repetition quality signals (Gopher-style)
   // ---------------------------------------------------------------
 
-  /** Repetition transform over any (doc_id, text) frame — reused by
-    * q12h and the q12k curation pipeline. Two-level hash aggregation:
-    * (doc, gram) counts, then per-doc max/sum — no windows, no
-    * sorts; 2-grams come from the same native codegen n-gram
-    * expression as the shingle path.
+  /** Repetition transform over any (doc_id, text) frame — q12h's body,
+    * and the unfused reference CurationSpec compares q12k's fused
+    * repetition gate against (q12k does not call it). Two-level hash
+    * aggregation: (doc, gram) counts, then per-doc max/sum — no
+    * windows, no sorts; 2-grams come from the same native codegen
+    * n-gram expression as the shingle path.
     */
   def repetitionStats(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
@@ -186,10 +187,11 @@ object CurationQueries {
     * docs BEFORE the n-gram explode (partition-prunable scan), so
     * the corpus-side mass is shingled exactly once.
     */
-  /** Contamination transform over any (doc_id, text) frame — reused
-    * by q13g and the q12k pipeline. Docs with doc_id % 97 == 0 play
-    * the holdout; output covers non-holdout docs that have at least
-    * one shingle.
+  /** Contamination transform over any (doc_id, text) frame — q13g's
+    * body, and the unfused reference CurationSpec compares q12k's
+    * fused contamination gate against (q12k does not call it). Docs
+    * with doc_id % 97 == 0 play the holdout; output covers
+    * non-holdout docs that have at least one shingle.
     */
   def contaminationFlags(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame): DataFrame = {

@@ -160,9 +160,11 @@ object TextQueries {
   /** English-ish stopwords present in the corpus vocabulary. */
   private[text] val stopEn = Seq("the", "a", "and", "of", "to", "is")
 
-  /** Quality transform over any (doc_id, text, n_chars) frame —
-    * reused by q12b and the q12k curation pipeline. One token
-    * explode + hash agg + doc join.
+  /** Quality transform over any (doc_id, text, n_chars) frame — q12b's
+    * body. One token explode + hash agg + doc join. q12k does not call
+    * it: its quality gate is fused over one staged token array, and
+    * this function is the unfused reference CurationSpec compares
+    * that gate against.
     */
   def qualityScores(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._

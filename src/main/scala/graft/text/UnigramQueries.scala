@@ -16,11 +16,13 @@ import graft.Staging.Stageable
   * quantile — the missing "statistical quality" sibling of q12b's
   * rule-based score.
   *
-  * Scale shape mirrors q12o: tokenize once (the cf branch consumes
-  * tf's count, so ReuseExchange collapses both consumers onto ONE
-  * scan — spec-pinned), model probabilities are one term-keyed
-  * aggregate joined back at term grain, the corpus total rides a
-  * broadcast scalar, and the per-doc reduction is doc-bounded.
+  * Scale shape: tokenize once — the (doc, term) tf grain is staged,
+  * so its consumers (the cf model, the corpus total through cf, and
+  * the scoring join) read the staged blocks and the query plan proper
+  * holds no `Generate explode` (MixtureTfIdfSpec pins it). Model
+  * probabilities are one term-keyed aggregate joined back at term
+  * grain, the corpus total rides a broadcast scalar, and the per-doc
+  * reduction is doc-bounded.
   *
   * CROSS-ENGINE FLOAT DISCIPLINE: a plain SUM of doubles is
   * order-dependent and flaky across engines, so the per-doc sum is a
@@ -61,10 +63,8 @@ object UnigramQueries {
       : org.apache.spark.sql.DataFrame = {
     import docs.sparkSession.implicits._
     // tf fans out to the model branch (cf→tot) and the scoring join;
-    // unstaged, the optimizer tokenized the corpus once per consumer
-    // (3 Generate+scan branches in the r17 baseline plan,
-    // plans/r17/q12r_unigram_logprob_before.txt) — the q12s staging
-    // pattern applies: (doc, term) grain ≪ corpus, materialize once.
+    // unstaged, the optimizer would tokenize the corpus once per
+    // consumer. The (doc, term) grain ≪ corpus, so it is staged once.
     val tf = docs
       .select($"doc_id", explode(TextQueries.words($"text")).as("term"))
       .groupBy($"doc_id", $"term")

@@ -3,8 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Narrow accessor for graft's `private[sql]` seams — the
-  * Column⇄Expression bridge (GeoRules' marker Column, the rewritten
-  * predicate, VectorOps' native dot/norm2) and the live session's
+  * Column⇄Expression bridge (VectorOps' native dot/norm2, the native
+  * n-gram expression) and the live session's
   * FunctionRegistry (idempotent installs on sessions graft did not
   * build), the session SQLConf for the static codegen-cache size that
   * `GraftConf.tune` sets, the listener bus `GraftSession.measure`

@@ -149,9 +149,9 @@ class CurationSpec extends SparkTestBase {
     import spark.implicits._
     import graft.text.TextQueries
     import graft.text.CurationQueries.{repetitionStats, contaminationFlags}
-    // r18 fused the three gate tokenizations into one staged token
+    // q12k fuses the three gate tokenizations into one staged token
     // array + one token-grain aggregation; this witness recomputes
-    // the r17 shape (independent qualityScores / repetitionStats /
+    // the unfused shape (independent qualityScores / repetitionStats /
     // contaminationFlags over the deduped corpus) and asserts the
     // full pipeline outputs are identical row-for-row.
     val docs = Tables(spark, sfDir).documents

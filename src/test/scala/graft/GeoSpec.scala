@@ -1,16 +1,17 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
-import graft.plans.GeoRules
 
 class GeoSpec extends SparkTestBase {
 
-  private def coords() = {
-    import spark.implicits._
-    Tables(spark, sfDir).lineitem
-      .join(Tables(spark, sfDir).orders, $"l_orderkey" === $"o_orderkey")
+  private def coords(s: SparkSession = spark) = {
+    import s.implicits._
+    val t = Tables(s, sfDir)
+    t.lineitem
+      .join(t.orders, $"l_orderkey" === $"o_orderkey")
       .select(
         Geo.demoLat($"o_custkey").as("lat1"),
         Geo.demoLng($"o_custkey").as("lng1"),
@@ -69,29 +70,41 @@ class GeoSpec extends SparkTestBase {
     out.unpersist()
   }
 
-  test("withinRadiusKm rewrite preserves the naive haversine result") {
-    import spark.implicits._
-    GraftExtensions.install(spark)
-    val df = coords()
-    val viaMarker = df.filter(Geo.withinRadiusKm(
-      $"lat1", $"lng1", $"lat2", $"lng2", lit(800.0)))
-      .select($"l_orderkey", $"l_linenumber")
-    val naive = df.filter(
-      Geo.haversineKm($"lat1", $"lng1", $"lat2", $"lng2") <= 800.0)
-      .select($"l_orderkey", $"l_linenumber")
-    assert(viaMarker.exceptAll(naive).count() == 0 &&
-      naive.exceptAll(viaMarker).count() == 0)
-    assert(viaMarker.count() > 0, "radius filter selected nothing")
+  /** The rows `withinRadiusKm` keeps on `s` and those the naive
+    * haversine filter keeps, as (orderkey, linenumber) sets.
+    */
+  private def radiusVsNaive(s: SparkSession, r: Double) = {
+    import s.implicits._
+    val df = coords(s)
+    def keys(f: org.apache.spark.sql.Column) = df.filter(f)
+      .select($"l_orderkey", $"l_linenumber").as[(Long, Int)].collect().toSet
+    (keys(Geo.withinRadiusKm($"lat1", $"lng1", $"lat2", $"lng2", lit(r))),
+      keys(Geo.haversineKm($"lat1", $"lng1", $"lat2", $"lng2") <= r))
   }
 
-  test("optimizer expands the marker into bbox AND exact haversine") {
+  test("withinRadiusKm rewrite preserves the naive haversine result") {
+    val (viaRadius, naive) = radiusVsNaive(spark, 800.0)
+    assert(viaRadius == naive)
+    assert(viaRadius.nonEmpty, "radius filter selected nothing")
+  }
+
+  test("withinRadiusKm evaluates on a session that never ran install") {
+    // a fresh session shares the context but none of the session
+    // state an earlier GraftExtensions.install registered
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    val (viaRadius, naive) = radiusVsNaive(fresh, 500.0)
+    assert(viaRadius == naive)
+    assert(viaRadius.nonEmpty, "radius filter selected nothing")
+  }
+
+  test("withinRadiusKm plans as bbox AND exact haversine, no marker") {
     import spark.implicits._
-    GraftExtensions.install(spark)
-    val df = coords().filter(Geo.withinRadiusKm(
+    val df = coords(spark.newSession()).filter(Geo.withinRadiusKm(
       $"lat1", $"lng1", $"lat2", $"lng2", lit(500.0)))
     val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("WithinRadiusKm"),
-      s"marker survived optimization:\n$optimized")
+    assert(!optimized.toLowerCase.contains("withinradiuskm"),
+      s"a radius marker reached the optimized plan:\n$optimized")
     assert(optimized.contains("abs("),
       s"no bounding-box prefilter in plan:\n$optimized")
     assert(optimized.toLowerCase.contains("sin("),

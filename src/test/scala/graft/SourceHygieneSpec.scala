@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.PrefixScanStrategy
 
 /** Source-level ratchets for driver-side anti-patterns, automated so
   * a future query can't silently add an unbounded collect, a scalar
@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are exact per file: a NEW collect in an allowlisted file fails
   * too, and so does a removal (stale allowlist).
   */
-class SourceHygieneSpec extends AnyFunSuite {
+class SourceHygieneSpec extends SparkTestBase {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
 
@@ -124,6 +124,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(sites("""extends SparkListener\b""", "src/main/scala") === one)
     assert(sites("""addSparkListener\(""", "src/test/scala") === Map.empty[String, Int])
     assert(sites("""Thread\.sleep\(""", "src/main/scala") === Map.empty[String, Int])
+  }
+
+  test("no optimizer rule: install registers SQL functions and PrefixScan only") {
+    // code only: a query writes what it needs rewritten as Columns
+    // (Geo.withinRadiusKm's bbox), so no optimized plan depends on
+    // whether the session ran an install before it
+    assert(countsOf("""(?m)^(?!\s*(\*|//))(?:(?!//).)*(Rule\[LogicalPlan\]|\bUnevaluable\b)""",
+      Paths.get("src/main/scala")) === Map.empty[String, Int])
+    val fresh = spark.newSession()
+    GraftExtensions.install(fresh)
+    GraftExtensions.install(fresh)
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+    assert(fresh.experimental.extraStrategies === Seq(PrefixScanStrategy))
   }
 
   test("five tool mains, and Bench produces whole results, never a count()") {

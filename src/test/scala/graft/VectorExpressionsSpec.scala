@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 
@@ -84,27 +83,6 @@ class VectorExpressionsSpec extends SparkTestBase {
         |""".stripMargin).collect().head
     assert(r.getDouble(0) === 11.0)
     assert(r.getDouble(1) === 25.0)
-  }
-
-  test("Norm2Rewrite canonicalizes dot(e, e) into norm2(e)") {
-    import spark.implicits._
-    GraftExtensions.install(spark)
-    // parquet-backed (a LocalRelation would be constant-folded away
-    // before user-provided optimizer rules run)
-    val v = Tables(spark, sfDir).embeddings.limit(3)
-    val df = v.select(VectorOps.dot($"embedding", $"embedding").as("n2"),
-      VectorOps.dot($"embedding", reverse($"embedding")).as("d"))
-    val exprs = df.queryExecution.optimizedPlan
-      .collect { case n => n.expressions }.flatten
-      .flatMap(_.collect {
-        case _: graft.functions.Norm2 => "norm2"
-        case _: graft.functions.DotProduct => "dot"
-      })
-    assert(exprs.count(_ == "norm2") === 1) // self-dot rewritten
-    assert(exprs.count(_ == "dot") === 1)   // genuine dot untouched
-    df.collect().foreach { r =>
-      assert(!r.isNullAt(0) && r.getDouble(0) >= 0.0)
-    }
   }
 
   test("wrong arity is rejected with a clear message") {

@@ -564,6 +564,14 @@ MUTATIONS = [
               "session_window and the islands twins",
          subs=[('                case Some(c) if s.start_us - c.last_us > GapMicros =>',
                 '                case Some(c) if s.start_us - c.last_us >= GapMicros =>')]),
+    # q19's bbox prefilter is composed in Geo.withinRadiusKm; a box
+    # tighter than r/KmPerDegLat loses pairs the oracle's plain
+    # haversine keeps.
+    dict(id="m55_q19_bbox_halved", query="q19_geo_radius",
+         gate="oracle", file="src/main/scala/graft/functions/Geo.scala",
+         desc="radius bbox halved: the latitude prefilter drops in-radius pairs the haversine keeps",
+         subs=[('abs(lat1 - lat2) <= radiusKm / KmPerDegLat',
+                'abs(lat1 - lat2) <= radiusKm / (2 * KmPerDegLat)')]),
 ]
 
 OPENS = " ".join(
