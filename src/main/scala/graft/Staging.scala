@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   * trade, explicitly:
   *
   *  - **Why not cache()**: a library call must not register
-  *    session-lifetime state in the CacheManager (r6 ADVICE 3);
+  *    session-lifetime state in the CacheManager;
   *    localCheckpoint blocks are reclaimed by the ContextCleaner as
   *    soon as the returned plan becomes unreachable, and the
   *    truncated lineage also caps plan size for iterative consumers
@@ -30,6 +30,13 @@ import org.apache.spark.sql.DataFrame
   *    consumer's job, charging one branch for the shared build and
   *    (for AQE) planning downstream stages before the staged
   *    statistics exist.
+  *  - **No partitioning survives**: under AQE a staged frame
+  *    reports an unknown partitioning, even when the plan it
+  *    materialized ended in a hash exchange, so a consumer that wants
+  *    its input clustered by a key gets a fresh exchange. Put that
+  *    one exchange in the consuming plan, where every consumer of
+  *    the key can share it: q12k repartitions its staged token array
+  *    by doc_id once, and all three of its gates aggregate on top.
   *  - **NOT fault-tolerant** (guide §5): lineage is truncated and the
   *    blocks are unreplicated executor-local state — at cluster scale
   *    an executor loss AFTER the checkpoint fails the query instead

@@ -22,11 +22,13 @@ import graft.queries.GraftQuery
   * 64-cell rollup hashes bitwise.
   *
   * Scale shape: one orders-grain hash-agg collapses to customer grain,
-  * then THREE global quartile assignments ride
-  * [[graft.operators.DistributedRank]] — range-repartitioned rank, NO
+  * then the three quartile assignments ride ONE grouped
+  * [[graft.operators.DistributedRank]] scan over three rows per
+  * customer (one per metric kind) — range-repartitioned rank, NO
   * single-task Window sort (a global `ntile() OVER (ORDER BY …)` is
   * the one-thread funnel the q3a scale note bans at 10⁹ customers) —
-  * and the final rollup is a 64-key hash-agg with map-side combine.
+  * a customer-keyed pivot puts the quartiles back on one row, and
+  * the final rollup is a 64-key hash-agg with map-side combine.
   */
 object RfmQueries {
 
@@ -59,17 +61,24 @@ object RfmQueries {
   }
 
   /** Quartile scores via the distributed rank path: 1 = best (most
-    * recent / most frequent / highest spend), custkey tie-break.
+    * recent / most frequent / highest spend), custkey tie-break. The
+    * three rankings are one grouped scan: each customer stacks one row
+    * per metric kind, ranked within its kind by (v, custkey) where v
+    * is recency as is and frequency and spend negated (both are
+    * non-negative, so ascending -x is descending x), and the
+    * quartiles pivot back to customer grain.
     */
   def rfmScores(metrics: DataFrame): DataFrame = {
     import metrics.sparkSession.implicits._
-    val r = DistributedRank.rankNtile(metrics, Seq.empty,
-      Seq($"recency_days".asc, $"o_custkey".asc), 4, "__rr", "r_q")
-    val f = DistributedRank.rankNtile(r, Seq.empty,
-      Seq($"frequency".desc, $"o_custkey".asc), 4, "__fr", "f_q")
-    val m = DistributedRank.rankNtile(f, Seq.empty,
-      Seq($"monetary_cents".desc, $"o_custkey".asc), 4, "__mr", "m_q")
-    m.drop("__rr", "__fr", "__mr")
+    val stacked = metrics.select($"*", inline(array(
+      struct(lit("r").as("kind"), $"recency_days".as("v")),
+      struct(lit("f").as("kind"), (-$"frequency").as("v")),
+      struct(lit("m").as("kind"), (-$"monetary_cents").as("v")))))
+    def quartile(kind: String) = max(when($"kind" === kind, $"q")).as(s"${kind}_q")
+    DistributedRank.rankNtile(stacked, Seq("kind"),
+        Seq($"v", $"o_custkey"), 4, "__rank", "q")
+      .groupBy(metrics.columns.map(col).toIndexedSeq: _*)
+      .agg(quartile("r"), quartile("f"), quartile("m"))
   }
 
   /** q28 — RFM segment rollup: quartile cell → customer count, total

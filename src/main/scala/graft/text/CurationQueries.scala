@@ -369,13 +369,14 @@ object CurationQueries {
   /** q12k — end-to-end training-data prep recipe: planted corpus →
     * exact dedup (keep-min per content hash) → quality + repetition
     * gate → holdout-contamination gate → language rebalance →
-    * deterministic global shuffle + shard. Every stage is one of the
-    * library's reusable transforms composed into a SINGLE Catalyst
-    * plan — Catalyst sees the whole dataflow (column pruning reaches
-    * the scan, filters fuse, AQE sizes every exchange), which is the
-    * point of declaring a pipeline instead of materializing between
-    * steps. The oracle composes the stages' SQL twins the same way,
-    * so the hash gate covers the COMPOSITION, not just the pieces.
+    * deterministic global shuffle + shard. The deduped corpus is
+    * staged once; above it the three gates are ONE per-doc
+    * aggregation over a (doc, gram kind, gram) grain behind one
+    * doc-keyed exchange, and CurationSpec checks that fused plan
+    * against the composition of the reusable transforms
+    * (qualityScores, repetitionStats, contaminationFlags). The oracle
+    * composes the stages' SQL twins the same way, so the hash gate
+    * covers the COMPOSITION, not just the pieces.
     */
   val q12kCurationPipeline: GraftQuery = {
     val plantSql =
@@ -415,12 +416,11 @@ object CurationQueries {
          |         AS INTEGER) AS shard
          |FROM kept""".stripMargin) { (spark, dir) =>
       import spark.implicits._
-      // no fan-out: the pipeline's CPU-heavy stages (quality /
-      // repetition / contamination tokenizes) consume the d1
-      // checkpoint, whose partitioning comes from the dedup join's
-      // AQE-coalesced exchange — fanning the scan only prepends a
-      // 32-task exchange to every stage of a ~6-stage plan (measured
-      // on an idle box: 3.7 s with it, below 2 s without)
+      // no fan-out: the pipeline's CPU-heavy stage (the gates)
+      // consumes the d1 checkpoint through its own doc_id exchange —
+      // fanning the scan only prepends a 32-task exchange to every
+      // stage of the plan (measured on an idle box when the plan had
+      // ~6 stages: 3.7 s with it, below 2 s without)
       val docs = Tables(spark, dir).documentsNoFanOut
       val plant = docs.select($"doc_id", $"text", $"lang", $"n_chars")
         .unionByName(docs.filter($"doc_id" % 7 === 0)
@@ -428,85 +428,70 @@ object CurationQueries {
             $"text", $"lang", $"n_chars"))
       val keepMin = plant
         .groupBy(md5($"text").as("h")).agg(min($"doc_id").as("doc_id"))
-      // d1 fans out to FIVE independent consumers (quality tokens,
-      // repetition tokens + bigrams, contamination ×2 sides, final
-      // kept join) — left as pure lineage the dedup join and
-      // everything above it would re-execute per consumer.
-      // Materialize once via an EAGER local checkpoint — and stage
-      // the TOKEN ARRAY, not the raw text: otherwise every gate
-      // re-runs the whitespace-regex split on the full corpus (5
-      // tokenizations per run); staged, the split happens exactly once at
-      // this boundary and each gate derives its grain (tokens,
-      // 2-grams, 3-gram shingles — both n-gram walks are the codegen
-      // WordNGrams expression) from the staged array. Unlike cache(),
-      // localCheckpoint registers nothing in the CacheManager (a
-      // library call must not pin session-lifetime state), and its
-      // blocks are reclaimed by the ContextCleaner when the returned
-      // plan goes unreachable. A production
-      // pipeline at corpus scale stages this boundary to parquet
-      // (disk-backed, partitioned); MEMORY_AND_DISK-backed
-      // localCheckpoint stands in for that here.
+      // d1 feeds two consumers, the holdout shingle set and the
+      // training gram grain; left as lineage, the dedup join under it
+      // would run once per consumer. It is staged once, eagerly, and
+      // as the TOKEN ARRAY rather than the raw text, so the
+      // whitespace-regex split runs once and every gram (tokens,
+      // 2-grams, 3-gram shingles, all the codegen WordNGrams
+      // expression) derives from the staged array. A production
+      // pipeline at corpus scale stages this boundary to parquet; see
+      // Staging for the mechanism and its trade.
       val d1ws = plant.withColumn("h", md5($"text"))
         .join(keepMin, Seq("h", "doc_id")).drop("h")
         .select($"doc_id", $"lang", $"n_chars",
           TextQueries.words($"text").as("ws"))
         .staged
       import org.apache.spark.sql.GraftColumnBridge
-      // ONE token-grain pass serves BOTH gate statistics: quality's
-      // conditional counts re-aggregate the (doc, tok) counts
-      // (sum(when(cond, c)) ≡ token-grain sum(when(cond, 1)) — exact
-      // integers), so the quality and repetition token passes fuse.
-      val tokStats = d1ws
-        .select($"doc_id", explode($"ws").as("tok"))
-        .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-        .groupBy($"doc_id")
-        .agg(sum($"c").as("n_tokens"),
-          sum(when($"tok".isin(TextQueries.stopEn: _*), $"c")
-            .otherwise(0L)).as("n_stop"),
-          sum(when(length($"tok") <= 2, $"c").otherwise(0L)).as("n_short"),
-          sum(when($"tok".rlike("^[0-9]+$"), $"c").otherwise(0L))
-            .as("n_digit"))
-      val bgStats = d1ws
-        .select($"doc_id", explode(GraftColumnBridge.column(
+      def grams(d: DataFrame, n: Int) = d.select($"doc_id", $"lang",
+        $"n_chars", lit(n).as("k"), explode(GraftColumnBridge.column(
           graft.functions.WordNGrams(
-            GraftColumnBridge.expression($"ws"), 2))).as("bg"))
-        .groupBy($"doc_id", $"bg").agg(count(lit(1)).as("c"))
-        .groupBy($"doc_id")
-        .agg(sum($"c").as("n_2grams"), max($"c").as("max_bg"),
-          sum(when($"c" > 1, $"c").otherwise(0L)).as("dup_mass"))
-        .withColumnRenamed("doc_id", "bdoc")
+            GraftColumnBridge.expression($"ws"), n))).as("g"))
+      val hold = grams(d1ws.filter($"doc_id" % 97 === 0), 3)
+        .select($"g".as("sh")).distinct()
+      // All three gates ride ONE hashpartitioning(doc_id) exchange:
+      // the (doc, kind, gram) counts and the per-doc roll-up above
+      // them both accept it, and the broadcast hold join between them
+      // keeps it. It sits here, in the consuming plan, because a
+      // staged frame reports no partitioning under AQE. Tokens are
+      // WordNGrams(ws, 1), not explode(ws): Catalyst infers a
+      // size(ws) > 0 filter under a plain explode, below the exchange
+      // in that branch only, and the branches stop sharing it.
+      val train = d1ws.filter($"doc_id" % 97 =!= 0).repartition($"doc_id")
+      val tok = $"k" === 1
+      val bg = $"k" === 2
+      val sh = $"k" === 3
+      // Every doc in the grain has a token, but the 2-gram and shingle
+      // counts, the denominators, stay NULL for a doc with no gram of
+      // that kind, as the left joins of the unfused gates leave them:
+      // a one-token doc has no 2-gram, and 0 / 0 throws under ANSI
+      // where NULL / 0 gives NULL.
+      val stats = Seq(1, 2, 3).map(grams(train, _)).reduce(_ union _)
+        .groupBy($"doc_id", $"lang", $"n_chars", $"k", $"g")
+        .agg(count(lit(1)).as("c"))
+        .join(broadcast(hold), sh && $"g" === $"sh", "left")
+        .groupBy($"doc_id", $"lang", $"n_chars")
+        .agg(sum(when(tok, $"c")).as("n_tokens"),
+          sum(when(tok && length($"g") <= 2, $"c").otherwise(0L)).as("n_short"),
+          sum(when(tok && $"g".rlike("^[0-9]+$"), $"c").otherwise(0L))
+            .as("n_digit"),
+          sum(when(bg, $"c")).as("n_2grams"),
+          max(when(bg, $"c")).as("max_bg"),
+          sum(when(bg && $"c" > 1, $"c").otherwise(0L)).as("dup_mass"),
+          sum(when(sh, 1L)).as("n_shingles"),
+          count($"sh").as("n_overlap"))
       val top2 = coalesce($"max_bg".cast("double") / $"n_2grams", lit(0.0))
       val dup2 = coalesce($"dup_mass".cast("double") / $"n_2grams", lit(0.0))
-      // gate rows = tokStats rows (docs with ≥1 token) — the same
-      // row universe the original q ⋈ rep inner-join pair produced.
-      val gate = tokStats.join(bgStats, $"doc_id" === $"bdoc", "left")
-        .select($"doc_id", $"n_tokens", $"n_stop", $"n_short",
-          $"n_digit", (top2 > 0.18 || dup2 > 0.6).as("repetitive"))
-      def shingled(d: DataFrame) = d.select($"doc_id",
-        explode(GraftColumnBridge.column(
-          graft.functions.WordNGrams(
-            GraftColumnBridge.expression($"ws"), 3))).as("sh"))
-      val hold = shingled(d1ws.filter($"doc_id" % 97 === 0))
-        .select($"sh").distinct().withColumn("hit", lit(1))
-      val corp = shingled(d1ws.filter($"doc_id" % 97 =!= 0)).distinct()
       val cfrac = $"n_overlap".cast("double") / $"n_shingles"
-      val cont = corp.join(broadcast(hold), Seq("sh"), "left")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when($"hit".isNotNull, 1L).otherwise(0L)).as("n_overlap"))
-        .select($"doc_id".as("cdoc"), (cfrac >= 0.3).as("contaminated"))
       val lenScore = least($"n_chars".cast("double") / 200.0, lit(1.0))
       val shortRatio = $"n_short".cast("double") / $"n_tokens"
       val digitRatio = $"n_digit".cast("double") / $"n_tokens"
-      val kept = d1ws.filter($"doc_id" % 97 =!= 0)
-        .select($"doc_id", $"lang", $"n_chars")
-        .join(gate, "doc_id")
-        .join(cont, $"doc_id" === $"cdoc", "left")
+      val kept = stats
         .withColumn("quality",
           lenScore * 0.5 + (lit(1.0) - shortRatio) * 0.3
             + (lit(1.0) - digitRatio) * 0.2)
-        .filter($"quality" >= 0.45 && !$"repetitive" &&
-          coalesce($"contaminated", lit(false)) === lit(false))
+        .filter($"quality" >= 0.45 && !(top2 > 0.18 || dup2 > 0.6) &&
+          !coalesce(cfrac >= 0.3, lit(false)))
       val balanced = TextQueries.rebalanceKeep(kept)
         .select($"doc_id", $"lang", $"quality",
           md5(concat($"doc_id".cast("string"), lit("|shuffle")))

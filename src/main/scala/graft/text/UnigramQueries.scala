@@ -19,7 +19,9 @@ import graft.Staging.Stageable
   * Scale shape: tokenize once — the (doc, term) tf grain is staged,
   * so its consumers (the cf model, the corpus total through cf, and
   * the scoring join) read the staged blocks and the query plan proper
-  * holds no `Generate explode` (MixtureTfIdfSpec pins it). Model
+  * holds no `Generate explode` (MixtureTfIdfSpec pins it). A per-doc
+  * attribute a caller needs (q12t's source) rides that grain as an
+  * extra key, so no query scans documents twice. Model
   * probabilities are one term-keyed aggregate joined back at term
   * grain, the corpus total rides a broadcast scalar, and the per-doc
   * reduction is doc-bounded.
@@ -57,17 +59,22 @@ object UnigramQueries {
       |  FROM doc)""".stripMargin
 
   /** The Spark twin of [[xentCtes]]: per-doc cross-entropy under the
-    * corpus unigram model, ordered-fold exact (see q12r doc).
+    * corpus unigram model, ordered-fold exact (see q12r doc), at
+    * (`keys`, n_tokens, xent) grain. `keys` must hold doc_id and may
+    * add columns that doc_id determines: they ride the tf grain to the
+    * output, so a caller that needs one (q12t's source) joins nothing
+    * back.
     */
-  private[graft] def xentPerDoc(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private[graft] def xentPerDoc(docs: org.apache.spark.sql.DataFrame,
+      keys: Seq[String] = Seq("doc_id")): org.apache.spark.sql.DataFrame = {
     import docs.sparkSession.implicits._
+    val k = keys.map(col)
     // tf fans out to the model branch (cf→tot) and the scoring join;
     // unstaged, the optimizer would tokenize the corpus once per
     // consumer. The (doc, term) grain ≪ corpus, so it is staged once.
     val tf = docs
-      .select($"doc_id", explode(TextQueries.words($"text")).as("term"))
-      .groupBy($"doc_id", $"term")
+      .select(k :+ explode(TextQueries.words($"text")).as("term"): _*)
+      .groupBy(k :+ $"term": _*)
       .agg(count(lit(1)).as("tf"))
       .staged
     val cf = tf.groupBy($"term").agg(sum($"tf").as("cf"))
@@ -75,13 +82,13 @@ object UnigramQueries {
     tf.join(cf, Seq("term"))
       .crossJoin(broadcast(tot))
       .withColumn("x", $"tf" * log($"cf".cast("double") / $"t"))
-      .groupBy($"doc_id")
+      .groupBy(k: _*)
       .agg(sort_array(collect_list(struct($"term", $"x"))).as("xs"),
         sum($"tf").as("n_tokens"))
-      .select($"doc_id", $"n_tokens",
+      .select(k ++ Seq($"n_tokens",
         round(-aggregate($"xs", lit(0.0),
             (acc, s) => acc + s.getField("x")) / $"n_tokens", 6)
-          .as("xent"))
+          .as("xent")): _*)
   }
 
   val q12rUnigramLogprob: GraftQuery = GraftQuery(
@@ -104,7 +111,10 @@ object UnigramQueries {
     * engines. Scale shape: per-source ranking rides
     * [[DistributedRank]] (NOT `Window.partitionBy(source)` — few
     * strata by construction, one task per stratum at 100 TB);
-    * everything upstream is q12r's one-tokenize-pass plan.
+    * everything upstream is q12r's one-tokenize-pass plan, with
+    * source carried through its tf grain (doc_id is the documents
+    * key, so source is one value per doc) instead of a second
+    * documents scan joined back by doc_id.
     */
   val q12tPerplexityBuckets: GraftQuery = GraftQuery(
     "q12t_perplexity_buckets",
@@ -121,9 +131,7 @@ object UnigramQueries {
        |       bucket <= 2 AS keep
        |FROM b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val docs = Tables(spark, dir).documents
-    val j = docs.select($"doc_id", $"source")
-      .join(xentPerDoc(docs).select($"doc_id", $"xent"), Seq("doc_id"))
+    val j = xentPerDoc(Tables(spark, dir).documents, Seq("doc_id", "source"))
     DistributedRank.rankNtile(j,
         groupCols = Seq("source"),
         orderCols = Seq(col("xent"), col("doc_id")),

@@ -145,16 +145,14 @@ class CurationSpec extends SparkTestBase {
     } finally out.unpersist()
   }
 
-  test("q12k fused gates reproduce the unfused stage composition exactly") {
+  /** q12k's pipeline as the unfused composition of its stages: the
+    * reusable qualityScores / repetitionStats / contaminationFlags
+    * transforms, each over the deduped corpus, joined back by doc_id.
+    */
+  private def unfusedCuration(docs: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     import graft.text.TextQueries
     import graft.text.CurationQueries.{repetitionStats, contaminationFlags}
-    // q12k fuses the three gate tokenizations into one staged token
-    // array + one token-grain aggregation; this witness recomputes
-    // the unfused shape (independent qualityScores / repetitionStats /
-    // contaminationFlags over the deduped corpus) and asserts the
-    // full pipeline outputs are identical row-for-row.
-    val docs = Tables(spark, sfDir).documents
     val plant = docs.select($"doc_id", $"text", $"lang", $"n_chars")
       .unionByName(docs.filter($"doc_id" % 7 === 0)
         .select(($"doc_id" + 1000000).as("doc_id"),
@@ -177,15 +175,53 @@ class CurationSpec extends SparkTestBase {
       .select($"doc_id", $"lang", $"quality",
         md5(concat($"doc_id".cast("string"), lit("|shuffle")))
           .as("shuffle_key"))
-    val expected = graft.operators.DistributedRank.rankNtile(
+    graft.operators.DistributedRank.rankNtile(
       balanced, groupCols = Seq.empty,
       orderCols = Seq($"shuffle_key", $"doc_id"), ntiles = 16,
       rankName = "shuffle_pos", ntileName = "shard")
       .select($"doc_id", $"lang", $"quality", $"shuffle_pos", $"shard")
-    val actual = CurationQueries.q12kCurationPipeline.fn(spark, sfDir)
+  }
+
+  private def assertFusedMatches(dir: String): Array[Long] = {
+    val expected = unfusedCuration(Tables(spark, dir).documents)
+    val actual = CurationQueries.q12kCurationPipeline.fn(spark, dir)
     assert(actual.exceptAll(expected).count() == 0 &&
       expected.exceptAll(actual).count() == 0,
-      "fused q12k diverged from the unfused stage composition")
+      s"fused q12k diverged from the unfused stage composition on $dir")
+    expected.select("doc_id").collect().map(_.getLong(0)).sorted
+  }
+
+  test("q12k fused gates reproduce the unfused stage composition exactly") {
+    import spark.implicits._
+    // q12k fuses its three gates into one (doc, gram kind, gram)
+    // aggregation; this witness recomputes the unfused shape and
+    // asserts the full pipeline outputs are identical row-for-row,
+    // on the sf corpus and on a crafted corpus of edge docs
+    assert(assertFusedMatches(sfDir).nonEmpty)
+    // holdout doc 97 has the 3 shingles of "alpha … epsilon"; docs 1
+    // and 2 open with the same 5 words, so 3 of their 10 (doc 1) and
+    // 11 (doc 2) shingles hit: 0.3 is contaminated, 0.27 is not
+    val hold = "alpha beta gamma delta epsilon"
+    val crafted = Seq[(Long, String)](
+      97L -> hold,
+      1L -> s"$hold one two three four five six seven",
+      2L -> s"$hold one two three four five six seven 2024",
+      3L -> "\tnine ten eleven twelve thirteen fourteen fifteen sixteen",
+      4L -> "solitary", // one token: no 2-gram, no shingle
+      5L -> "two words", // no shingle
+      6L -> null,
+      8L -> "   ") // one empty token
+      .toDF("doc_id", "text")
+      .select($"doc_id", $"text", lit("fr").as("lang"),
+        lit("crafted").as("source"), lit(200L).as("n_chars"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-curation-edge")
+    try {
+      crafted.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      // every edge doc that passes the gates reaches the output ("fr"
+      // keeps every doc): 1 is contaminated, 5 repetitive (its one
+      // 2-gram is all of them), 6 has no text, 97 is the holdout
+      assert(assertFusedMatches(dir.toString).toSeq == Seq(2L, 3L, 4L, 8L))
+    } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 
   test("q12k is cache-neutral: repeated calls pin no CacheManager entries") {

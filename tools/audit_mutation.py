@@ -247,8 +247,8 @@ MUTATIONS = [
          gate="oracle",
          file="src/main/scala/graft/analytics/RfmQueries.scala",
          desc="recency quartile ranked descending: 1 = stalest customer",
-         subs=[('Seq($"recency_days".asc, $"o_custkey".asc), 4, "__rr", "r_q")',
-                'Seq($"recency_days".desc, $"o_custkey".asc), 4, "__rr", "r_q")')]),
+         subs=[('struct(lit("r").as("kind"), $"recency_days".as("v"))',
+                'struct(lit("r").as("kind"), (-$"recency_days").as("v"))')]),
     dict(id="m30_q29_bpe_rarest_pair", query="q29_bpe_train",
          gate="oracle",
          file="src/main/scala/graft/text/BpeQueries.scala",
@@ -572,6 +572,23 @@ MUTATIONS = [
          desc="radius bbox halved: the latitude prefilter drops in-radius pairs the haversine keeps",
          subs=[('abs(lat1 - lat2) <= radiusKm / KmPerDegLat',
                 'abs(lat1 - lat2) <= radiusKm / (2 * KmPerDegLat)')]),
+    dict(id="m56_q28_frequency_ascending", query="q28_rfm_segments",
+         gate="oracle",
+         file="src/main/scala/graft/analytics/RfmQueries.scala",
+         desc="frequency quartile ranked ascending: 1 = rarest buyer",
+         subs=[('struct(lit("f").as("kind"), (-$"frequency").as("v"))',
+                'struct(lit("f").as("kind"), $"frequency".as("v"))')]),
+    # No sf0.01 training doc shares >= 0.3 of its shingles with the
+    # holdout (the largest share is 0.11), so the oracle replay cannot
+    # see q12k's contamination gate and this mutant passes it. The
+    # spec gate replays it against CurationSpec's crafted corpus, which
+    # holds a doc at exactly 0.3.
+    dict(id="m57_q12k_every_gram_a_shingle", query="q12k_curation_pipeline",
+         gate="spec", spec="graft.CurationSpec",
+         file="src/main/scala/graft/text/CurationQueries.scala",
+         desc="contamination denominator counts tokens and 2-grams as shingles",
+         subs=[('sum(when(sh, 1L)).as("n_shingles")',
+                'count(lit(1)).as("n_shingles")')]),
 ]
 
 OPENS = " ".join(
