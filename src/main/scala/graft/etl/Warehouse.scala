@@ -31,26 +31,48 @@ import graft.queries.GraftQuery
   *    (effective_from 2016-01-01, effective_to 2099-12-31, version 1 —
   *    `ETL for seller with scd2.ktr:523-570`); incremental maintenance
   *    is [[Scd.scd2Rebuild]].
+  *  - key lookups (Kettle DBLookup, J2) read the member frame
+  *    (`customers`, `sellers`: the member table and its surrogate),
+  *    never the whole dim. Without CBO, Spark sizes a join as the
+  *    product of its children's sizes, so the 150-row sf0.001
+  *    customer dim (7 KB of parquet, times 2.7 KB of nation, times
+  *    1.9 KB of region) is estimated in gigabytes, far above
+  *    `autoBroadcastJoinThreshold`: a fact that looked keys up there
+  *    was planned as a sort-merge join, and AQE shuffled the whole
+  *    fact input before it switched to a broadcast. The member
+  *    frame's estimate is its table's size, so a lookup that fits is
+  *    planned as a broadcast from the start. At member scale (10⁸+
+  *    rows) it still plans sort-merge and AQE decides at runtime; no
+  *    lookup carries a broadcast hint.
   *  - OR-chain keep-filter (P3, review comments) and AND-chain
   *    error-sink (P2) both appear in the builders.
   */
 object Warehouse {
 
-  /** dim_customer analog: customer + nation/region names, SCD2 cols. */
-  def dimCustomer(t: Tables): DataFrame = {
+  /** The customer members with their surrogate key, from the
+    * customer table alone: every customer_key lookup (the facts' and
+    * the segment resolution of q18, q18b and q5c) projects this frame
+    * to the columns it reads, and [[dimCustomer]] adds the geography.
+    */
+  private def customers(t: Tables): DataFrame = {
     val c = t.customer
     import c.sparkSession.implicits._
-    val base = c
-      .join(broadcast(t.nation), $"c_nationkey" === $"n_nationkey", "left")
-      .join(broadcast(t.region), $"n_regionkey" === $"r_regionkey", "left")
-      .select($"c_custkey".as("customer_id"), $"c_name".as("name"),
-        $"c_mktsegment".as("segment"), $"n_name".as("nation"),
-        $"r_name".as("region"), $"c_acctbal".as("acctbal"))
-    base
-      .withColumn("effective_from", lit("2016-01-01"))
-      .withColumn("effective_to", lit(Scd.OpenEnd))
-      .withColumn("version", lit(1))
+    c.select($"c_custkey".as("customer_id"), $"c_name".as("name"),
+        $"c_mktsegment".as("segment"), $"c_nationkey",
+        $"c_acctbal".as("acctbal"), lit(1).as("version"))
       .withColumn("customer_key", xxhash64($"customer_id", $"version"))
+  }
+
+  /** dim_customer analog: customer + nation/region names, SCD2 cols. */
+  def dimCustomer(t: Tables): DataFrame = {
+    val c = customers(t)
+    import c.sparkSession.implicits._
+    c.join(broadcast(t.nation), $"c_nationkey" === $"n_nationkey", "left")
+      .join(broadcast(t.region), $"n_regionkey" === $"r_regionkey", "left")
+      .select($"customer_id", $"name", $"segment", $"n_name".as("nation"),
+        $"r_name".as("region"), $"acctbal",
+        lit("2016-01-01").as("effective_from"),
+        lit(Scd.OpenEnd).as("effective_to"), $"version", $"customer_key")
   }
 
   /** dim_product analog from part (brand = category role). */
@@ -66,31 +88,44 @@ object Warehouse {
       .withColumn("product_key", xxhash64($"product_id", $"version"))
   }
 
-  /** dim_seller analog from supplier + nation. */
-  def dimSeller(t: Tables): DataFrame = {
+  /** The supplier members with their surrogate key, from the supplier
+    * table alone: the seller_key lookup's frame, which [[dimSeller]]
+    * extends with the nation name.
+    */
+  private def sellers(t: Tables): DataFrame = {
     val s = t.supplier
     import s.sparkSession.implicits._
-    s.join(broadcast(t.nation), $"s_nationkey" === $"n_nationkey", "left")
-      .select($"s_suppkey".as("seller_id"), $"s_name".as("seller_name"),
-        $"n_name".as("nation"), $"s_acctbal".as("acctbal"))
+    s.select($"s_suppkey".as("seller_id"), $"s_name".as("seller_name"),
+        $"s_nationkey", $"s_acctbal".as("acctbal"))
       .withColumn("seller_key", xxhash64($"seller_id"))
   }
 
+  /** dim_seller analog from supplier + nation. */
+  def dimSeller(t: Tables): DataFrame = {
+    val s = sellers(t)
+    import s.sparkSession.implicits._
+    s.join(broadcast(t.nation), $"s_nationkey" === $"n_nationkey", "left")
+      .select($"seller_id", $"seller_name", $"n_name".as("nation"),
+        $"acctbal", $"seller_key")
+  }
+
   /** fact_order_lines analog: the q7a star enrichment joined against
-    * the dims' surrogate keys (DBLookup → hash-join lookups, J2). The
-    * member-scale dims (customer/product/seller) carry NO broadcast
-    * hint: at 100 TB they are 10⁸–10⁹ rows and an unconditional hint
-    * is a hard driver OOM at the 8 GB broadcast cap, exactly the
-    * argument that removed broadcast(customer) from the corr query.
-    * AQE sees the dims' actual runtime size and still picks a
-    * broadcast join whenever they genuinely fit.
+    * the dims' surrogate keys (DBLookup → hash-join lookups, J2). Each
+    * lookup reads the member frame (natural id → key), never the
+    * whole dim: see the header for why that decides the join. The
+    * member-scale lookups carry NO broadcast hint: at 100 TB they are
+    * 10⁸–10⁹ rows and an unconditional hint is a hard driver OOM at
+    * the 8 GB broadcast cap, exactly the argument that removed
+    * broadcast(customer) from the corr query. Where a lookup fits,
+    * its static estimate already plans a broadcast; where it does not,
+    * AQE sees its actual size and still broadcasts when it fits.
     */
   def factOrderLines(t: Tables): DataFrame = {
     val li = t.lineitem
     import li.sparkSession.implicits._
-    val cust = dimCustomer(t).select($"customer_id", $"customer_key")
+    val cust = customers(t).select($"customer_id", $"customer_key")
     val prod = dimProduct(t).select($"product_id", $"product_key")
-    val sell = dimSeller(t).select($"seller_id", $"seller_key")
+    val sell = sellers(t).select($"seller_id", $"seller_key")
     li.join(t.orders, $"l_orderkey" === $"o_orderkey")
       .join(cust, $"o_custkey" === $"customer_id", "left")
       .join(prod, $"l_partkey" === $"product_id", "left")
@@ -109,17 +144,17 @@ object Warehouse {
   /** fact_review analog from events (review_score role = value
     * bucket), with the reference's OR-chain keep-filter (P3): keep
     * rows where at least one payload field is present. customer_key is
-    * resolved by a hash-join lookup against dim_customer (J2) — the
-    * fact must carry the dim's surrogate, never the raw natural id,
-    * or joins to dim_customer silently match nothing now that
-    * surrogates are xxhash64(natural_key, version). No broadcast
-    * hint: dim_customer is member-scale (see [[factOrderLines]]);
-    * AQE broadcasts it at runtime only when it actually fits.
+    * resolved by a hash-join lookup against the customer members (J2)
+    * — the fact must carry the dim's surrogate, never the raw natural
+    * id, or joins to dim_customer silently match nothing now that
+    * surrogates are xxhash64(natural_key, version). The lookup reads
+    * the member frame, not dim_customer, and carries no broadcast
+    * hint (see [[factOrderLines]]).
     */
   def factReview(t: Tables): DataFrame = {
     val e = t.events
     import e.sparkSession.implicits._
-    val cust = dimCustomer(t).select($"customer_id", $"customer_key")
+    val cust = customers(t).select($"customer_id", $"customer_key")
     e.filter($"event_type".isNotNull || $"props".isNotNull)
       .join(cust, $"user_id" === $"customer_id", "left")
       .select($"event_id".as("review_id"), $"customer_key",
@@ -162,14 +197,14 @@ object Warehouse {
     * bit-identically → full oracle hash gates (q18b, q5c).
     *
     * Scale shape: explode(sequence) is map-side (no shuffle); the
-    * only exchange is the customer_key lookup join, which AQE
-    * broadcasts when the dim fits (member-scale dim → no static
-    * hint, see [[factOrderLines]]).
+    * customer_key lookup against the member frame is the only join,
+    * a broadcast wherever the members fit (no static hint, see
+    * [[factOrderLines]]).
     */
   def factPayment(t: Tables): DataFrame = {
     val o = t.orders
     import o.sparkSession.implicits._
-    val cust = dimCustomer(t).select($"customer_id", $"customer_key")
+    val cust = customers(t).select($"customer_id", $"customer_key")
     val types = array(lit("credit_card"), lit("boleto"), lit("voucher"),
       lit("debit_card"))
     val base = o.select(
@@ -246,7 +281,7 @@ object Warehouse {
     (spark, dir) =>
       import spark.implicits._
       val t = Tables(spark, dir)
-      val seg = dimCustomer(t).select($"customer_key", $"segment")
+      val seg = customers(t).select($"customer_key", $"segment")
       factPayment(t)
         .join(seg, Seq("customer_key"))
         .select($"order_id", $"payment_sequential", $"payment_type",
@@ -282,7 +317,7 @@ object Warehouse {
        |LIMIT 20""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val t = Tables(spark, dir)
-    val cust = dimCustomer(t)
+    val cust = customers(t)
       .select($"customer_key", $"customer_id", $"segment")
     val agg = factPayment(t)
       .join(cust, Seq("customer_key"))
@@ -332,9 +367,9 @@ object Warehouse {
       |GROUP BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val t = Tables(spark, dir)
-    val cust = dimCustomer(t)
     factOrderLines(t)
-      .join(cust.select($"customer_key", $"segment"), Seq("customer_key"))
+      .join(customers(t).select($"customer_key", $"segment"),
+        Seq("customer_key"))
       .groupBy($"segment")
       .agg(count(lit(1)).as("n_lines"),
         graft.functions.Exact.dsum($"price").as("revenue"))

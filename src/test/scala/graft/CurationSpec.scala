@@ -191,16 +191,13 @@ class CurationSpec extends SparkTestBase {
     expected.select("doc_id").collect().map(_.getLong(0)).sorted
   }
 
-  test("q12k fused gates reproduce the unfused stage composition exactly") {
+  /** Runs `body` over a temp dir holding a crafted corpus of edge
+    * docs. Holdout doc 97 has the 3 shingles of "alpha … epsilon";
+    * docs 1 and 2 open with the same 5 words, so 3 of their 10 (doc 1)
+    * and 11 (doc 2) shingles hit: 0.3 is contaminated, 0.27 is not.
+    */
+  private def withCraftedCorpus(body: String => Unit): Unit = {
     import spark.implicits._
-    // q12k fuses its three gates into one (doc, gram kind, gram)
-    // aggregation; this witness recomputes the unfused shape and
-    // asserts the full pipeline outputs are identical row-for-row,
-    // on the sf corpus and on a crafted corpus of edge docs
-    assert(assertFusedMatches(sfDir).nonEmpty)
-    // holdout doc 97 has the 3 shingles of "alpha … epsilon"; docs 1
-    // and 2 open with the same 5 words, so 3 of their 10 (doc 1) and
-    // 11 (doc 2) shingles hit: 0.3 is contaminated, 0.27 is not
     val hold = "alpha beta gamma delta epsilon"
     val crafted = Seq[(Long, String)](
       97L -> hold,
@@ -217,11 +214,21 @@ class CurationSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-curation-edge")
     try {
       crafted.coalesce(1).write.parquet(s"$dir/documents.parquet")
-      // every edge doc that passes the gates reaches the output ("fr"
-      // keeps every doc): 1 is contaminated, 5 repetitive (its one
-      // 2-gram is all of them), 6 has no text, 97 is the holdout
-      assert(assertFusedMatches(dir.toString).toSeq == Seq(2L, 3L, 4L, 8L))
+      body(dir.toString)
     } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
+
+  test("q12k fused gates reproduce the unfused stage composition exactly") {
+    // q12k fuses its three gates into one (doc, gram kind, gram)
+    // aggregation; this witness recomputes the unfused shape and
+    // asserts the full pipeline outputs are identical row-for-row,
+    // on the sf corpus and on the crafted corpus of edge docs
+    assert(assertFusedMatches(sfDir).nonEmpty)
+    // every edge doc that passes the gates reaches the output ("fr"
+    // keeps every doc): 1 is contaminated, 5 repetitive (its one
+    // 2-gram is all of them), 6 has no text, 97 is the holdout
+    withCraftedCorpus(dir =>
+      assert(assertFusedMatches(dir).toSeq == Seq(2L, 3L, 4L, 8L)))
   }
 
   test("q12k is cache-neutral: repeated calls pin no CacheManager entries") {
@@ -246,5 +253,19 @@ class CurationSpec extends SparkTestBase {
       assert(out.filter($"contaminated" =!=
         ($"overlap_frac" >= 0.3)).count() == 0)
     } finally out.unpersist()
+  }
+
+  test("q13g flags an overlap of exactly 0.3 and not one of 3/11") {
+    import spark.implicits._
+    // no sf0.01 doc overlaps the holdout by 0.3 or more, so the oracle
+    // replay cannot see the threshold's edge; the crafted corpus can
+    withCraftedCorpus { dir =>
+      val flags = CurationQueries.q13gContamination.fn(spark, dir)
+        .filter($"doc_id".isin(1L, 2L))
+        .select($"doc_id", $"overlap_frac", $"contaminated").collect()
+        .map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
+      assert(flags == Map(1L -> (0.3, true), 2L -> (3.0 / 11, false)),
+        s"crafted overlaps: $flags")
+    }
   }
 }

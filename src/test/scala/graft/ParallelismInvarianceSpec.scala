@@ -22,12 +22,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Device: pass A collects every query under the suite session
   * (local[4], 4 shuffle partitions, whole-file scan splits, the
   * driver's single-file-per-table layout); pass B re-runs the
-  * registry in a `spark.newSession()` — fresh SQLConf AND fresh memo
-  * caches (probe/pair caches key on the session instance, so pass B
-  * rebuilds its localCheckpoints under the new conf) — with 7 shuffle
-  * partitions, 16 KB scan splits, and a SCRAMBLED-LAYOUT copy of the
-  * same warehouse: every table rewritten as 3 parquet files with rows
-  * range-partitioned and ordered by a row hash. Same multiset,
+  * registry in a `spark.newSession()` — a fresh SQLConf; no query
+  * keeps state across calls, so every staged frame (localCheckpoint)
+  * is rebuilt from pass B's own scans under the new conf — with 7
+  * shuffle partitions, 16 KB scan splits, and a SCRAMBLED-LAYOUT copy
+  * of the same warehouse: every table rewritten as 3 parquet files
+  * with rows range-partitioned and ordered by a row hash. Same multiset,
   * different file count, different row order — what a 1000-node
   * parallel ingest actually delivers, and the strongest perturbation
   * of partial-aggregation grouping and merge order available without

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{EtlQueries, Warehouse}
@@ -202,7 +202,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val df = Warehouse.factOrderLines(Tables(spark, sfDir))
     df.collect()
     // final plan only — the initial-plan section would double-count
-    // and mask an AQE fallback (r6 ADVICE 1)
+    // and mask an AQE fallback
     val plan = executedPlan(df).split("== Initial Plan ==").head
     val broadcasts = "BroadcastHashJoin".r.findAllIn(plan).length
     assert(broadcasts >= 3,
@@ -212,6 +212,26 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         .exists(l.contains))
     assert(dimSmj.isEmpty,
       s"a dim lookup fell back to sort-merge:\n${dimSmj.mkString("\n")}")
+  }
+
+  test("warehouse facts plan their key lookups as broadcasts before AQE") {
+    // each lookup reads its member frame, whose static estimate is its
+    // table's size, so the INITIAL plan already broadcasts it: no fact
+    // input is shuffled to meet a lookup that fits. A lookup through
+    // the whole dim is estimated by the product rule over its
+    // geography joins and plans a sort-merge join AQE must undo.
+    val t = Tables(spark, sfDir)
+    Seq("factOrderLines" -> Warehouse.factOrderLines(t),
+      "factReview" -> Warehouse.factReview(t),
+      "factPayment" -> Warehouse.factPayment(t)).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan.toString
+        case p => p.toString
+      }
+      assert(!plan.contains("SortMergeJoin") &&
+        !plan.contains("Exchange hashpartitioning"),
+        s"$name's initial plan shuffles for a key lookup:\n$plan")
+    }
   }
 
   test("q12v heavy hitters: one keyed shuffle, candidates broadcast") {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.etl.Warehouse
 
 /** Warehouse-build invariants: surrogate keys are unique (xxhash64
-  * collision guard) and dim builders stay map-only — no Window (global
-  * sort) and no Exchange (shuffle) in the dim plans, the property that
-  * lets a 1.5 B-row dimension build without a single-task bottleneck.
+  * collision guard), every fact carries its dims' keys, and dim
+  * builders stay map-only — no Window (global sort) and no Exchange
+  * (shuffle) in the dim plans, the property that lets a 1.5 B-row
+  * dimension build without a single-task bottleneck.
   */
 class WarehouseSpec extends SparkTestBase {
 
@@ -44,8 +45,8 @@ class WarehouseSpec extends SparkTestBase {
 
   test("SCD2 versions get distinct surrogates (versioned hash)") {
     import spark.implicits._
-    // the r3 advice scenario: once scd2Rebuild emits version 2+,
-    // xxhash64(natural_key) alone would collide across versions —
+    // once scd2Rebuild emits version 2+, xxhash64(natural_key)
+    // alone would collide across versions —
     // hashing (natural_key, version) must keep every row unique and
     // stay stable across re-loads
     val snaps = Seq(
@@ -73,6 +74,55 @@ class WarehouseSpec extends SparkTestBase {
     mapOnlyPlan(Warehouse.dimProduct(t), "dimProduct")
     mapOnlyPlan(Warehouse.dimCustomer(t), "dimCustomer")
     mapOnlyPlan(Warehouse.dimSeller(t), "dimSeller")
+  }
+
+  test("fact surrogate keys are their dim's key for the same natural id") {
+    import spark.implicits._
+    val t = Tables(spark, sfDir)
+    def ids(dim: DataFrame, id: String, key: String) =
+      dim.select(col(id).as("id"), col(key).as("dim_key"))
+    val cust = ids(Warehouse.dimCustomer(t), "customer_id", "customer_key")
+    val prod = ids(Warehouse.dimProduct(t), "product_id", "product_key")
+    val sell = ids(Warehouse.dimSeller(t), "seller_id", "seller_key")
+    // each fact's rows as (row, key), and the same rows rebuilt from
+    // their sources with the dim's key for the source's natural id:
+    // a key the dim lacks, or another member's key, is drift.
+    // (order, line number) repeats in lineitem, so lines compare as
+    // multisets rather than by joining back on it
+    def check(what: String, fact: DataFrame, source: DataFrame,
+              row: Seq[String], key: String, id: String, dim: DataFrame): Unit = {
+      val actual = fact.select((row :+ key).map(col): _*)
+      val expected = source.join(dim, col(id) === $"id", "left")
+        .select(row.map(col) :+ $"dim_key".as(key): _*)
+      val keyed = actual.filter(col(key).isNotNull).count()
+      val drift = actual.exceptAll(expected).count() +
+        expected.exceptAll(actual).count()
+      assert(keyed > 0, s"$what: no keyed rows to check")
+      assert(drift == 0, s"$what: $drift rows differ from their dim's keys")
+    }
+    val lines = Warehouse.factOrderLines(t).cache()
+    val lineSrc = t.lineitem.join(t.orders, $"l_orderkey" === $"o_orderkey")
+      .select($"l_orderkey".as("order_id"), $"l_linenumber".as("order_item_id"),
+        $"l_extendedprice".as("price"), $"o_custkey", $"l_partkey", $"l_suppkey")
+    val lineRow = Seq("order_id", "order_item_id", "price")
+    val reviews = Warehouse.factReview(t)
+    val reviewSrc = reviews.select($"review_id")
+      .join(t.events, $"review_id" === $"event_id")
+    val payments = Warehouse.factPayment(t)
+    val paymentSrc = payments.select($"payment_key", $"order_id")
+      .join(t.orders, $"order_id" === $"o_orderkey")
+    try {
+      check("fact_order_lines.customer_key", lines, lineSrc, lineRow,
+        "customer_key", "o_custkey", cust)
+      check("fact_order_lines.product_key", lines, lineSrc, lineRow,
+        "product_key", "l_partkey", prod)
+      check("fact_order_lines.seller_key", lines, lineSrc, lineRow,
+        "seller_key", "l_suppkey", sell)
+      check("fact_review.customer_key", reviews, reviewSrc, Seq("review_id"),
+        "customer_key", "user_id", cust)
+      check("fact_payment.customer_key", payments, paymentSrc,
+        Seq("payment_key"), "customer_key", "o_custkey", cust)
+    } finally lines.unpersist()
   }
 
   test("fact_payment: split is exact, keys unique, sequentials dense") {

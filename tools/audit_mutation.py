@@ -589,6 +589,29 @@ MUTATIONS = [
          desc="contamination denominator counts tokens and 2-grams as shingles",
          subs=[('sum(when(sh, 1L)).as("n_shingles")',
                 'count(lit(1)).as("n_shingles")')]),
+    # Key drift between a fact's lookup and its dim: fact_order_lines
+    # re-hashes its customer lookup with version 2 while every dim row
+    # is version 1, so no fact key names a dim member and q18's
+    # surrogate join back to the segment loses every line.
+    dict(id="m58_fact_lookup_version_drift", query="q18_warehouse_build",
+         gate="oracle", file="src/main/scala/graft/etl/Warehouse.scala",
+         desc="fact_order_lines hashes its customer lookup with version 2: "
+              "its keys drift off dim_customer's",
+         subs=[('    val cust = customers(t).select($"customer_id", $"customer_key")\n'
+                '    val prod',
+                '    val cust = customers(t).select($"customer_id",\n'
+                '      xxhash64($"customer_id", lit(2)).as("customer_key"))\n'
+                '    val prod')]),
+    # q13g's threshold edge: no sf0.01 doc overlaps the holdout by 0.3
+    # or more, so the oracle replay cannot see a strict `>`; the
+    # crafted corpus of CurationSpec holds a doc at exactly 0.3.
+    dict(id="m59_q13g_strict_threshold", query="q13g_contamination",
+         gate="spec", spec="graft.CurationSpec",
+         file="src/main/scala/graft/text/CurationQueries.scala",
+         desc="contamination flag tightened from >= 0.3 to > 0.3: an "
+              "overlap of exactly 0.3 passes as clean",
+         subs=[('frac.as("overlap_frac"), (frac >= 0.3).as("contaminated"))',
+                'frac.as("overlap_frac"), (frac > 0.3).as("contaminated"))')]),
 ]
 
 OPENS = " ".join(
